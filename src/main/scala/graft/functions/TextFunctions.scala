@@ -196,13 +196,6 @@ object TextFunctions {
     when(length(trim(c)) === 0, lit(0))
       .otherwise(size(split(trim(c), "\\s+")))
 
-  /** A BPE-ish subword count: word-piece regex splits on case/digit
-    * boundaries too, approximating subword inflation of a real tokenizer.
-    */
-  def subwordCount(c: Column): Column =
-    size(filter(split(lower(c), "[^a-z0-9]+|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])"),
-      t => length(t) > 0))
-
   /** Stopword sets per language for the n-gram/stopword language-ID
     * heuristic. Deliberately tiny and public-knowledge (the most frequent
     * function words of each language).

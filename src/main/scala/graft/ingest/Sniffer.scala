@@ -18,22 +18,22 @@ object Sniffer {
     else if (firstLine.contains("|")) "|"
     else ","
 
-  /** Read just the first non-empty line of a (possibly multi-file) path.
+  /** Read just the first non-blank line of a (possibly multi-file) path.
     * `spark.read.text(...).head` under a limit early-exits: Spark stops
-    * after one row, it does not materialize the file.
+    * after one row, it does not materialize the file. Blank means what
+    * the reader's blank-line skip means ([[graft.ops.Cleanse.trimAll]]):
+    * Spark `trim` strips spaces only, so a tab-only line would otherwise
+    * be taken for the header.
     */
   def firstLine(spark: SparkSession, path: String): Option[String] = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0)
+      .filter(graft.ops.Cleanse.trimAll(col("value")) =!= "")
       .limit(1)
       .collect()
       .headOption
       .map(_.getString(0))
   }
-
-  def sniff(spark: SparkSession, path: String): String =
-    firstLine(spark, path).map(sniffDelimiter).getOrElse(",")
 
   // note: anything that is not Excel/Access is treated as delimited text,
   // matching the reference's dispatch (index.js:88-97) — there is

@@ -298,7 +298,8 @@ object Corpus {
 
   /** The distinct benchmark n-gram frame [[decontaminate]] probes — the
     * PERSISTABLE unit for repeated decontamination (the streaming
-    * deployment [[graft.streaming.Streams.decontaminateBatches]] probes
+    * deployment, [[graft.streaming.Streams.perBatch]] over
+    * [[decontaminateAgainstGrams]], probes
     * it every micro-batch; unpersisted, each batch re-tokenizes the
     * whole benchmark corpus — the model-persist lesson every scoring
     * deployment measured). One `gram` column.
@@ -1594,7 +1595,7 @@ object Corpus {
 
   /** Train [[LmModel]] on `reference` — the shared half of
     * [[ngramLmScore]], exposed so batch queries and streaming
-    * micro-batch scoring ([[graft.streaming.Streams.scoreLmBatches]])
+    * micro-batch scoring ([[graft.streaming.Streams.perBatch]])
     * use one identical model.
     */
   def ngramLmModel(
@@ -1971,7 +1972,7 @@ object Corpus {
 
   /** Fit a [[DsirModel]] — the shared half of [[dsirWeights]], exposed
     * so batch scoring and streaming micro-batch scoring
-    * ([[graft.streaming.Streams.scoreDsirBatches]]) use one identical
+    * ([[graft.streaming.Streams.perBatch]]) use one identical
     * model. Both count sides derive from one [[featureBuckets]] pass
     * per corpus; the totals re-aggregate the already-reduced bucket
     * counts (the [[ngramLmModel]] ctx trick), so fitting costs one
@@ -3362,7 +3363,7 @@ object Corpus {
 
   /** Load a persisted n-gram LM (current version, or pinned) back into
     * the [[LmNModel]] form [[scoreWithLmNModel]] and
-    * [[graft.streaming.Streams.scoreLmNBatches]] consume. Only the
+    * its [[graft.streaming.Streams.perBatch]] deployment consume. Only the
     * order `n` is collected; every count frame stays a parquet scan.
     */
   def loadLmNModel(

@@ -112,33 +112,4 @@ object Cleanse {
   /** Apply [[cell]] to every column of an all-string DataFrame. */
   def cells(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => cell(colRef(c)).as(c)).toIndexedSeq: _*)
-
-  /** Drop Markdown separator rows: the reference skips any raw line
-    * containing `---` (index.js:114, 219). Post-split, a line contains
-    * `---` iff some cell does, so the distributed equivalent is a
-    * disjunction over columns.
-    */
-  def dropSeparatorRows(df: DataFrame): DataFrame = {
-    val anySep = df.columns
-      .map(c => coalesce(colRef(c).contains("---"), lit(false)))
-      .reduceOption(_ || _)
-      .getOrElse(lit(false))
-    df.filter(!anySep)
-  }
-
-  /** Drop rows where every cell is null/empty. NOTE: this is a
-    * POST-SPLIT approximation — the reference skips raw-BLANK lines only
-    * (index.js:212), and a delimiter-only line like ",," legitimately
-    * yields an all-null row there. The line-level reader
-    * (Readers.delimited) therefore filters raw lines BEFORE splitting
-    * and does not use this; it remains for cleanse-pipeline callers that
-    * operate on already-tabular data.
-    */
-  def dropBlankRows(df: DataFrame): DataFrame = {
-    val allBlank = df.columns
-      .map(c => colRef(c).isNull || trimAll(colRef(c)) === "")
-      .reduceOption(_ && _)
-      .getOrElse(lit(false))
-    df.filter(!allBlank)
-  }
 }

@@ -420,9 +420,6 @@ object HashExpressions {
       bands: Int = 8): Column =
     ExprColumn(MinHashBands(ExprColumn.exprOf(canonical), shingleLen, numPerms, bands))
 
-  def simHash64(tokens: Column): Column =
-    ExprColumn(SimHash64(ExprColumn.exprOf(tokens)))
-
   def simHash64OfText(text: Column): Column =
     ExprColumn(SimHash64Str(ExprColumn.exprOf(text)))
 

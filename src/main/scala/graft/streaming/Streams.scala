@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the events table: windowed
@@ -230,17 +230,6 @@ object Streams {
     l.join(r, cond)
   }
 
-  /** foreachBatch sink: per-micro-batch handler with the batch id —
-    * the production pattern for sinks Spark has no connector for
-    * (idempotent upserts, JDBC merges, multi-table writes). The handler
-    * gets a BATCH DataFrame, so every batch can use full batch APIs
-    * (e.g. graft.sink.Save).
-    */
-  def foreachBatchSink(
-      df: DataFrame,
-      handler: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch(handler)
-
   /** Stream-static enrichment: join the event stream against a static
     * (broadcastable) dimension — the standard streaming-lookup shape; the
     * static side re-plans per micro-batch, no state store involved.
@@ -388,161 +377,79 @@ object Streams {
       .orderBy(col("user_id"), col("session_id"))
   }
 
-  /** Streaming deployment of the CCNet LM-perplexity filter
-    * ([[graft.operators.Corpus.ngramLmScore]]): score a document STREAM
-    * against a batch-trained [[graft.operators.Corpus.LmModel]], one
-    * micro-batch at a time via foreachBatch.
+  /** Stateless per-micro-batch deployment of a batch operator: every
+    * micro-batch of `docs` goes through `op`, and the result reaches
+    * `onBatch` with its batch id — e.g.
+    * `perBatch(docs)(Corpus.scoreWithLmNModel(_, model, "text", "doc_id"))(sink)`.
     *
-    * foreachBatch — not an end-to-end streaming aggregation — is the
-    * right shape here: each document is fully contained in one input
-    * row, so per-doc scoring needs no cross-batch state, while a
-    * streaming groupBy(id) would grow the state store by every doc id
-    * ever seen (unbounded on a crawl). Inside the handler the batch is
-    * scored with the exact batch operator (same plan, same oracle-gated
-    * semantics — streaming ≡ batch by construction, pinned by
-    * StreamsSpec), joined against the static model DataFrames that
-    * re-plan per micro-batch like any stream-static join. Persist the
-    * model members before long runs to avoid re-aggregating the
-    * reference corpus each batch.
+    * This is the right shape for per-document work (LM / DSIR /
+    * classifier scoring, language ID, CCNet bucketing, decontamination):
+    * a document is contained in one input row, so it needs no
+    * cross-batch state, where a streaming groupBy(id) would grow the
+    * state store by every id ever seen. The handler IS the batch
+    * operator, so streaming ≡ batch per micro-batch by construction
+    * (StreamsSpec pins it per operator); an operator that ranks within
+    * its input — CCNet's per-language terciles — ranks within the
+    * micro-batch. Static model or benchmark frames the operator joins
+    * re-plan per micro-batch like any stream-static join: persist them
+    * (or load them once from a snapshot) before long runs — StreamBench
+    * measures the gap. `op = identity` is the plain foreachBatch sink,
+    * for sinks Spark has no connector for (idempotent upserts, JDBC
+    * merges, [[graft.sink.Snapshots.publishBatch]]).
     */
-  def scoreLmBatches(
-      docs: DataFrame,
-      model: graft.operators.Corpus.LmModel,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit,
-      k: Long = 1L,
-      rareCutoff: Long = 256L): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      onBatch(
-        graft.operators.Corpus.scoreWithLmModel(
-          batch, model, textCol, idCol, k, rareCutoff),
-        batchId)
-    }
+  def perBatch(docs: DataFrame)(op: DataFrame => DataFrame)(
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    runBatches(docs, onBatch)((batch, _) => Staged(op(batch)))
 
-  /** Streaming deployment of the order-n stupid-backoff scorer
-    * ([[graft.operators.Corpus.scoreWithLmNModel]]) — same foreachBatch
-    * rationale as [[scoreLmBatches]] (per-doc scoring has no
-    * cross-batch state; a streaming groupBy would grow the state store
-    * by every doc id ever seen), same streaming ≡ batch guarantee
-    * (the handler IS the batch operator), same persist-the-model
-    * advice for long runs (StreamBench's `lm` mode measures the gap).
+  /** One micro-batch after one stage: `admitted` goes on to the next
+    * stage (or to `onBatch`) without its `carried` columns; each
+    * `(ledgerDir, rows)` pair is derived from `admitted` and appended
+    * under the batch id once `onBatch` has returned.
     */
-  def scoreLmNBatches(
-      docs: DataFrame,
-      model: graft.operators.Corpus.LmNModel,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit,
-      alpha: Double = 0.4): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      onBatch(
-        graft.operators.Corpus.scoreWithLmNModel(
-          batch, model, textCol, idCol, alpha),
-        batchId)
-    }
+  private final case class Staged(
+      admitted: DataFrame,
+      ledgers: Seq[(String, DataFrame)] = Nil,
+      carried: Seq[String] = Nil)
 
-  /** Streaming deployment of DSIR importance weighting
-    * ([[graft.operators.Corpus.scoreWithDsirModel]]): weight a document
-    * STREAM against a batch-fitted [[graft.operators.Corpus.DsirModel]]
-    * — the online form of the paper's selection step (fit p̂/q̂ once on
-    * the static corpora, score each arriving crawl shard). Same
-    * foreachBatch rationale as [[scoreLmBatches]]: per-doc scoring
-    * carries no cross-batch state, and the handler IS the batch
-    * operator (streaming ≡ batch by construction, pinned by
-    * StreamsSpec). Persist the model members before long runs.
-    */
-  def scoreDsirBatches(
-      docs: DataFrame,
-      model: graft.operators.Corpus.DsirModel,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit,
-      k: Long = 1L): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      onBatch(
-        graft.operators.Corpus.scoreWithDsirModel(
-          batch, model, textCol, idCol, k),
-        batchId)
-    }
+  /** One step of a micro-batch: (rows, batch id) → staged result. */
+  private type Stage = (DataFrame, Long) => Staged
 
-  /** Streaming deployment of the trained quality classifier
-    * ([[graft.operators.Corpus.scoreWithClassifier]]): score a document
-    * stream against a batch-trained
-    * [[graft.operators.Corpus.LinearModel]] — train offline on labeled
-    * sets, filter the crawl online. Same foreachBatch rationale and
-    * streaming ≡ batch guarantee as [[scoreLmBatches]]; persist
-    * `model.weights` before long runs.
+  /** The micro-batch commit rule every deployment here runs on. Per
+    * batch, inside [[graft.ops.Caches.scoped]] (so every cache the
+    * stages and their operators register is released with the batch):
+    * run `stages` in order, each on the previous one's admitted rows;
+    * persist a stage's frame when its ledgers will read it again, and
+    * always the last one; hand the last to `onBatch`; then write every
+    * ledger. Ledger rows therefore record exactly the rows the sink
+    * saw, read from the persisted frame instead of re-running a probe.
+    * The writes go last stage first: a parquet write re-caches every
+    * cached frame whose plan reads the written directory, and a
+    * stage's frame reads the ledgers of its own and earlier stages, so
+    * in this order no ledger's source is invalidated before it is
+    * read. Writes happen only after the sink returns, and each
+    * overwrites its own `batch_id=N` partition, so an at-least-once
+    * replay — which [[readLedger]] keeps out of its own prior set —
+    * reproduces its decisions and leaves exactly-once ledgers (the
+    * [[graft.sink.Snapshots]] replay posture).
     */
-  def scoreClassifierBatches(
-      docs: DataFrame,
-      model: graft.operators.Corpus.LinearModel,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit,
-      threshold: Double = 0.5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      onBatch(
-        graft.operators.Corpus.scoreWithClassifier(
-          batch, model, textCol, idCol, threshold),
-        batchId)
-    }
-
-  /** Streaming deployment of the trained language-ID model
-    * ([[graft.operators.Corpus.langIdWith]]): identify each
-    * micro-batch's documents against a batch-trained
-    * [[graft.operators.Corpus.LangIdModel]] — train offline on a
-    * labeled inventory (any language count), route the crawl online.
-    * Same foreachBatch rationale and streaming ≡ batch guarantee as
-    * [[scoreClassifierBatches]]; persist the model
-    * ([[graft.operators.Corpus.saveLangIdModel]]) before long runs and
-    * load it once at writer construction.
-    */
-  def langIdBatches(
-      docs: DataFrame,
-      model: graft.operators.Corpus.LangIdModel,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      onBatch(
-        graft.operators.Corpus.langIdWith(batch, model, textCol, idCol),
-        batchId)
-    }
-
-  /** Streaming deployment of the fully model-driven CCNet bucketing
-    * ([[graft.operators.Corpus.ccnetBucketsWith]]): per micro-batch,
-    * TRAINED language ID + persisted reference-LM perplexity +
-    * per-language terciles — the online form of the CCNet pipeline,
-    * all models LOADED once at writer construction (persist via
-    * [[graft.operators.Corpus.saveLangIdModel]] /
-    * [[graft.operators.Corpus.saveLmNModel]] before long runs). Same
-    * foreachBatch rationale as [[scoreLmNBatches]]; the handler IS the
-    * batch operator, so streaming ≡ batch PER BATCH — note the
-    * terciles are BATCH-LOCAL (each micro-batch splits its own pages
-    * head/middle/tail, the online-routing semantics; a global tercile
-    * over an unbounded stream is undefined without a second pass).
-    */
-  def ccnetBucketsBatches(
-      docs: DataFrame,
-      lm: graft.operators.Corpus.LmNModel,
-      langModel: graft.operators.Corpus.LangIdModel,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit,
-      alpha: Double = 0.4): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  private def runBatches(docs: DataFrame, onBatch: (DataFrame, Long) => Unit)(
+      stages: Stage*): DataStreamWriter[Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       graft.ops.Caches.scoped {
-        onBatch(
-          graft.operators.Corpus.ccnetBucketsWith(
-            batch, lm, langModel, textCol, idCol, alpha),
-          batchId)
+        val ledgers = Seq.newBuilder[(String, DataFrame)]
+        val out = stages.zipWithIndex.foldLeft(batch) { case (in, (stage, i)) =>
+          val s = stage(in, batchId)
+          ledgers ++= s.ledgers
+          val kept =
+            if (s.ledgers.nonEmpty || i == stages.size - 1) graft.ops.Caches.owned(s.admitted)
+            else s.admitted
+          kept.drop(s.carried: _*)
+        }
+        onBatch(out, batchId)
+        ledgers.result().reverseIterator.foreach { case (dir, rows) =>
+          commitLedger(dir, rows, batchId)
+        }
       }
-      // exactNtile (inside perplexityBuckets) registers an
-      // operator-owned cache per call — the scope drops it per
-      // micro-batch WITHOUT draining the process-global registry, so
-      // a concurrent pipeline's operator caches survive (round 19;
-      // the global release() cost it silent cache re-runs)
     }
 
   /** Streaming incremental exact dedup of a document stream against a
@@ -557,10 +464,7 @@ object Streams {
     * inside the streaming engine. The ledger here is a plain parquet
     * directory of md5 hashes partitioned by micro-batch id — SMALL
     * (32 bytes per admitted doc), shared-storage-friendly, and
-    * restart-safe: a replayed micro-batch OVERWRITES its own
-    * `batch_id=N` partition (dynamic partition overwrite, the
-    * [[graft.sink.Snapshots]] replay posture), so at-least-once
-    * delivery still yields an exactly-once ledger. Within a batch,
+    * restart-safe under the [[runBatches]] replay rule. Within a batch,
     * first-by-id wins among same-content rows (deterministic under
     * repartitioning).
     *
@@ -576,18 +480,9 @@ object Streams {
       textCol: String,
       idCol: String,
       ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     val corpusSeen = dedupCorpusHashes(corpus, textCol)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val fresh = exactAdmitBatch(
-        batch, corpusSeen, textCol, idCol, ledgerDir, batchId)
-      fresh.persist()
-      try {
-        onBatch(fresh.drop(ContentH), batchId)
-        writeBatchLedger(
-          fresh.select(col(ContentH), lit(batchId).as("batch_id")), ledgerDir)
-      } finally fresh.unpersist()
-    }
+    runBatches(docs, onBatch)(exactAdmitBatch(_, _, corpusSeen, textCol, idCol, ledgerDir))
   }
 
   /** Distinct content-hash projection of a static corpus — the
@@ -602,28 +497,24 @@ object Streams {
 
   private val ContentH = "_graft_content_h"
 
-  /** One micro-batch of exact-dedup admission (the [[incrementalDedupBatches]]
-    * core, shared by the chained [[curateIncrementalBatches]]): batch
-    * rows minus corpus-hash matches minus ledger matches, keep-first by
-    * id within the batch. Output carries [[ContentH]] for the caller's
-    * ledger write.
+  /** Exact-dedup admission stage (the [[incrementalDedupBatches]] core,
+    * chained by [[curateIncrementalBatches]]): batch rows minus
+    * corpus-hash matches minus ledger matches, keep-first by id within
+    * the batch. The admitted rows carry [[ContentH]] for the ledger.
     */
   private def exactAdmitBatch(
       batch: DataFrame,
+      batchId: Long,
       corpusHashes: DataFrame,
       textCol: String,
       idCol: String,
-      ledgerDir: String,
-      batchId: Long): DataFrame = {
-    val spark = batch.sparkSession
-    val ledgerSchema = StructType(Seq(
-      StructField(ContentH, StringType), StructField("batch_id", LongType)))
-    val seen = readLedger(spark, ledgerDir, ledgerSchema, batchId)
-      .select(col(ContentH))
+      ledgerDir: String): Staged = {
+    val seen = readLedger(batch.sparkSession, ledgerDir,
+      ledgerSchema(ContentH -> StringType), batchId).select(col(ContentH))
     // null text hashes as empty text: md5(null) is null, and null
     // keys pass EVERY anti-join (EqualTo never matches them) — a
     // null-text doc would be re-admitted in every batch forever
-    val hashed = batch
+    val fresh = batch
       .withColumn(ContentH, md5(coalesce(graft.ops.Cleanse.colRef(textCol), lit(""))))
       // first-by-id among same-content rows WITHIN the batch — a
       // deterministic keep-first, not dropDuplicates' arbitrary one
@@ -632,10 +523,14 @@ object Streams {
           .partitionBy(col(ContentH))
           .orderBy(graft.ops.Cleanse.colRef(idCol))))
       .filter(col("_graft_rk") === 1).drop("_graft_rk")
-    hashed
       .join(corpusHashes, Seq(ContentH), "left_anti")
       .join(seen, Seq(ContentH), "left_anti")
+    Staged(fresh, Seq(ledgerDir -> fresh.select(col(ContentH))), Seq(ContentH))
   }
+
+  /** A ledger schema: `fields` plus the `batch_id` partition column. */
+  private def ledgerSchema(fields: (String, DataType)*): StructType =
+    StructType((fields :+ ("batch_id" -> LongType)).map { case (n, t) => StructField(n, t) })
 
   /** Read a batch ledger directory, or an empty frame when it does not
     * exist yet. Hadoop FS probe, NOT java.io.File: the ledger lives
@@ -660,7 +555,7 @@ object Streams {
       spark.read.schema(schema).parquet(ledgerDir)
         .filter(col("batch_id") =!= batchId)
     else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.sparkContext.emptyRDD[Row],
       StructType(schema.filterNot(_.name == "batch_id")))
   }
 
@@ -684,6 +579,17 @@ object Streams {
     * ledger directory out from under a session).
     */
   private[graft] def clearQuotaCache(): Unit = quotaCache.clear()
+
+  /** Append one ledger's rows under `batchId`. A quota ledger — its dir
+    * holds a running-total entry, which [[domainQuotaBatch]] seeds in
+    * the same batch — commits through [[commitQuotaLedger]] so the
+    * entry stays current; every other ledger is a plain append.
+    */
+  private def commitLedger(dir: String, rows: DataFrame, batchId: Long): Unit = {
+    val stamped = rows.withColumn("batch_id", lit(batchId))
+    if (quotaCache.containsKey(dir)) commitQuotaLedger(stamped, dir, batchId)
+    else writeBatchLedger(stamped, dir)
+  }
 
   /** Quota-ledger commit: ONE bounded collect materializes the batch's
     * per-domain deltas, the parquet write goes out from those local
@@ -722,6 +628,7 @@ object Streams {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(ledgerDir)
+
   /** Streaming incremental NEAR-dup admission — the MinHash sibling of
     * [[incrementalDedupBatches]], the production crawl shape when
     * near-copies (boilerplate variants, re-rendered pages) must be
@@ -751,33 +658,49 @@ object Streams {
     *     content and hot prior buckets are genuine near-dup families,
     *     which admission is supposed to compare against;
     *  4. survivors go to `onBatch` (original columns) and their
-    *     `(id, sig)` rows land in the ledger's `batch_id=N` partition
-    *     (dynamic overwrite — the [[incrementalDedupBatches]] replay
-    *     posture: an at-least-once replay overwrites its own partition
-    *     and is filtered out of its own prior set, so admission stays
-    *     exactly-once).
+    *     `(id, sig)` rows — the signatures the survivors carried
+    *     through the probe — land in the ledger's `batch_id=N`
+    *     partition ([[runBatches]] replay rule).
     *
-    * Ledger rows are numPerms longs per admitted doc — orders of
-    * magnitude smaller than the text they summarize; band hashes are
-    * derived (a hash over each signature slice), never stored.
-    * DEGENERATE docs — canonical text with no tokens at all
-    * (null/whitespace/punctuation-only), which produce zero shingles —
-    * are detected by their all-sentinel signature (`sig[0] ==
-    * Long.MaxValue`; real permuted hashes are `mulMod` residues
-    * < 2^61−1, so no shingled doc can ever produce the sentinel) and
-    * routed around BOTH probes: always admitted, never ledgered.
-    * Near-dup semantics need real content — without the routing every
-    * degenerate doc shares the identical sentinel signature, estimates
-    * Jaccard 1.0 against all others, and all but the first would be
-    * silently dropped forever. Compose [[incrementalDedupBatches]]
-    * upstream for exact dedup of degenerate text. The corpus side
-    * takes the [[nearDupCorpusSignatures]] frame — the persistable
-    * unit IS the signature projection, the lesson the scoring
-    * deployments measured. Fail-fast: corpusSigs built with a
-    * different numPerms would silently band nothing (slice lengths
-    * disagree), so signature length is probed once at writer
-    * construction (one 1-row job) and mismatches throw.
+    * For banding planned from a target threshold, pass
+    * `bands = Dedup.lshPlan(threshold, numPerms)._1`. Ledger rows are
+    * numPerms longs per admitted doc — orders of magnitude smaller
+    * than the text they summarize; band hashes are derived (a hash
+    * over each signature slice), never stored. DEGENERATE docs —
+    * canonical text with no tokens at all (null/whitespace/
+    * punctuation-only), which produce zero shingles — are detected by
+    * their all-sentinel signature (`sig[0] == Long.MaxValue`; real
+    * permuted hashes are `mulMod` residues < 2^61−1, so no shingled
+    * doc can ever produce the sentinel) and routed around BOTH probes:
+    * always admitted, never ledgered. Near-dup semantics need real
+    * content — without the routing every degenerate doc shares the
+    * identical sentinel signature, estimates Jaccard 1.0 against all
+    * others, and all but the first would be silently dropped forever.
+    * Compose [[incrementalDedupBatches]] upstream for exact dedup of
+    * degenerate text. The corpus side takes the
+    * [[nearDupCorpusSignatures]] frame — the persistable unit IS the
+    * signature projection, the lesson the scoring deployments
+    * measured. Fail-fast: corpusSigs built with a different numPerms
+    * would silently band nothing (slice lengths disagree), so
+    * signature length is probed once at writer construction (one
+    * 1-row job) and mismatches throw.
     */
+  def incrementalNearDupBatches(
+      docs: DataFrame,
+      corpusSigs: DataFrame,
+      textCol: String,
+      idCol: String,
+      ledgerDir: String,
+      onBatch: (DataFrame, Long) => Unit,
+      threshold: Double = 0.7,
+      numPerms: Int = 64,
+      bands: Int = 8,
+      maxBand: Int = 500): DataStreamWriter[Row] = {
+    requireSigCompat(corpusSigs, threshold, numPerms, bands)
+    runBatches(docs, onBatch)(nearAdmitBatch(_, _, corpusSigs, textCol, idCol,
+      ledgerDir, threshold, numPerms, bands, maxBand))
+  }
+
   /** Corpus signature projection for [[incrementalNearDupBatches]]:
     * `(id, sig)` with sig = the numPerms-long MinHash signature.
     * Compute ONCE, `persist()`, and hand to the stream — an
@@ -795,51 +718,6 @@ object Streams {
       graft.operators.Dedup.minhashSignature(cr(textCol), numPerms).as("sig"))
   }
 
-  /** [[incrementalNearDupBatches]] with the banding derived from the
-    * caller's target threshold via the S-curve planner
-    * ([[graft.operators.Dedup.lshPlan]]) instead of the fixed 8×8
-    * default — pass the SAME `numPerms` used to build `corpusSigs`
-    * (signatures are banding-agnostic; only the probe split changes).
-    */
-  def incrementalNearDupBatchesAt(
-      docs: DataFrame,
-      corpusSigs: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      threshold: Double,
-      numPerms: Int = 64,
-      maxBand: Int = 500): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val (bands, _) = graft.operators.Dedup.lshPlan(threshold, numPerms)
-    incrementalNearDupBatches(docs, corpusSigs, textCol, idCol, ledgerDir,
-      onBatch, threshold, numPerms, bands, maxBand)
-  }
-
-  def incrementalNearDupBatches(
-      docs: DataFrame,
-      corpusSigs: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      threshold: Double = 0.7,
-      numPerms: Int = 64,
-      bands: Int = 8,
-      maxBand: Int = 500): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    requireSigCompat(corpusSigs, threshold, numPerms, bands)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val (fresh, ledgerRows) = nearAdmitBatch(
-        batch, corpusSigs, textCol, idCol, ledgerDir, batchId,
-        threshold, numPerms, bands, maxBand)
-      fresh.persist()
-      try {
-        onBatch(fresh, batchId)
-        writeBatchLedger(ledgerRows, ledgerDir)
-      } finally fresh.unpersist()
-    }
-  }
-
   /** Perceptual-fingerprint projection of a static MEDIA corpus —
     * `(id, fp)`, one 64-bit dHash (images) or energy-hash (audio) per
     * decodable item — the persistable unit for
@@ -850,15 +728,18 @@ object Streams {
     * identity to probe against.
     */
   def mediaCorpusFingerprints(
-      corpus: DataFrame, mediaType: String = "image"): DataFrame = {
-    val fps = mediaType match {
-      case "image" => graft.operators.Multimodal.imageFingerprints(corpus)
-      case "audio" => graft.operators.Multimodal.audioFingerprints(corpus)
+      corpus: DataFrame, mediaType: String = "image"): DataFrame =
+    mediaFingerprint(mediaType)(corpus)
+      .filter(col("fp").isNotNull).select(col("id"), col("fp"))
+
+  /** The `(id, fp)` fingerprint operator for `mediaType`. */
+  private def mediaFingerprint(mediaType: String): DataFrame => DataFrame =
+    mediaType match {
+      case "image" => graft.operators.Multimodal.imageFingerprints _
+      case "audio" => graft.operators.Multimodal.audioFingerprints _
       case other => throw new IllegalArgumentException(
         s"mediaType must be image|audio, got '$other'")
     }
-    fps.filter(col("fp").isNotNull).select(col("id"), col("fp"))
-  }
 
   /** Streaming incremental MEDIA near-dup admission — the perceptual
     * sibling of [[incrementalNearDupBatches]] for image/audio streams
@@ -881,8 +762,7 @@ object Streams {
     *     previously admitted fingerprints;
     *  4. survivors go to `onBatch` (original columns) and their
     *     `(media_id, fp)` land in the ledger's `batch_id=N` partition
-    *     (dynamic overwrite — the [[incrementalDedupBatches]] replay
-    *     posture: at-least-once delivery, exactly-once ledger).
+    *     ([[runBatches]] replay rule).
     *
     * UNDECODABLE items (null fingerprint) are admitted but never
     * ledgered — the degenerate-text routing: a null carries no
@@ -897,68 +777,57 @@ object Streams {
       ledgerDir: String,
       onBatch: (DataFrame, Long) => Unit,
       maxHamming: Int = 3,
-      mediaType: String = "image"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      mediaType: String = "image"): DataStreamWriter[Row] = {
     require(maxHamming >= 0 && maxHamming <= 7,
       s"maxHamming must be in [0, 7] (64-bit pigeonhole chunks), got $maxHamming")
     // validated at writer construction, not inside the first
     // micro-batch: a typo'd mediaType must fail here, not as a
     // streaming-query error minutes later
-    val fingerprint: DataFrame => DataFrame = mediaType match {
-      case "image" => graft.operators.Multimodal.imageFingerprints _
-      case "audio" => graft.operators.Multimodal.audioFingerprints _
-      case other => throw new IllegalArgumentException(
-        s"mediaType must be image|audio, got '$other'")
-    }
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.ops.Caches.scoped {
-      val fps = fingerprint(batch)
-        .persist() // consumed by both probes + freshIds + ledger rows
-      // simhashPairs/simhashCrossPairs register operator-owned caches
-      // per call; a 24/7 stream must release them per micro-batch or
-      // the registry grows one strongly-held cached frame per batch
-      // (exactly the unbounded-growth mode snapshot retention guards
-      // against). The scope (round 19) drops exactly THIS batch's
-      // registrations at exit — a concurrent pipeline's operator
-      // caches are no longer collateral of the per-batch release.
-      try {
-        val ledgerSchema = StructType(Seq(
-          StructField("media_id", LongType),
-          StructField("fp", LongType),
-          StructField("batch_id", LongType)))
-        val ledgerFps = readLedger(spark, ledgerDir, ledgerSchema, batchId)
-          .select(col("media_id").as("id"), col("fp"))
-        val nn = fps.filter(col("fp").isNotNull).select(col("id"), col("fp"))
-        // the drop rule is pure existence ("does a lower-id batch item /
-        // ANY prior item sit within maxHamming"), so the flood guards
-        // are exact here: simhashPairs' identity star edges preserve
-        // the within-batch rule, and collapsing equal PRIOR
-        // fingerprints to one representative (a mass-duplicated corpus
-        // would otherwise be a permanent hot bucket probed every
-        // micro-batch) cannot change whether a probe matches
-        val inBatchDropped = graft.operators.Dedup.simhashPairs(nn, maxHamming)
-          .select(col("id_b").as("media_id")).distinct()
-        val vsPriorDropped = graft.operators.Dedup.simhashCrossPairs(
-          nn,
-          graft.operators.Dedup.collapseIdentityFps(
-            corpusFps.unionByName(ledgerFps)),
-          maxHamming)
-          .select(col("id_a").as("media_id")).distinct()
-        val freshIds = fps.select(col("id").as("media_id"))
-          .join(inBatchDropped, Seq("media_id"), "left_anti")
-          .join(vsPriorDropped, Seq("media_id"), "left_anti")
-        val fresh = batch.join(freshIds, Seq("media_id"), "left_semi").persist()
-        try {
-          onBatch(fresh, batchId)
-          val ledgerRows = fps.filter(col("fp").isNotNull)
-            .select(col("id").as("media_id"), col("fp"))
-            .join(freshIds, Seq("media_id"), "left_semi")
-            .select(col("media_id"), col("fp"), lit(batchId).as("batch_id"))
-          writeBatchLedger(ledgerRows, ledgerDir)
-        } finally fresh.unpersist()
-      } finally fps.unpersist()
-      }
-    }
+    val fingerprint = mediaFingerprint(mediaType)
+    runBatches(media, onBatch)(
+      mediaAdmitBatch(_, _, fingerprint, corpusFps, ledgerDir, maxHamming))
+  }
+
+  /** Media near-dup admission stage (the
+    * [[incrementalMediaNearDupBatches]] core).
+    */
+  private def mediaAdmitBatch(
+      batch: DataFrame,
+      batchId: Long,
+      fingerprint: DataFrame => DataFrame,
+      corpusFps: DataFrame,
+      ledgerDir: String,
+      maxHamming: Int): Staged = {
+    // consumed by both probes and the ledger rows; released with the
+    // batch's scope, together with the operator caches simhashPairs /
+    // simhashCrossPairs register per call (a 24/7 stream would
+    // otherwise grow the registry by one cached frame per batch)
+    val fps = graft.ops.Caches.owned(fingerprint(batch))
+    val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
+      ledgerSchema("media_id" -> LongType, "fp" -> LongType), batchId)
+      .select(col("media_id").as("id"), col("fp"))
+    val nn = fps.filter(col("fp").isNotNull).select(col("id"), col("fp"))
+    // the drop rule is pure existence ("does a lower-id batch item /
+    // ANY prior item sit within maxHamming"), so the flood guards
+    // are exact here: simhashPairs' identity star edges preserve
+    // the within-batch rule, and collapsing equal PRIOR
+    // fingerprints to one representative (a mass-duplicated corpus
+    // would otherwise be a permanent hot bucket probed every
+    // micro-batch) cannot change whether a probe matches
+    val inBatchDropped = graft.operators.Dedup.simhashPairs(nn, maxHamming)
+      .select(col("id_b").as("media_id")).distinct()
+    val vsPriorDropped = graft.operators.Dedup.simhashCrossPairs(
+      nn,
+      graft.operators.Dedup.collapseIdentityFps(
+        corpusFps.unionByName(ledgerFps)),
+      maxHamming)
+      .select(col("id_a").as("media_id")).distinct()
+    val freshIds = fps.select(col("id").as("media_id"))
+      .join(inBatchDropped, Seq("media_id"), "left_anti")
+      .join(vsPriorDropped, Seq("media_id"), "left_anti")
+    val fresh = batch.join(freshIds, Seq("media_id"), "left_semi")
+    Staged(fresh, Seq(ledgerDir -> nn.select(col("id").as("media_id"), col("fp"))
+      .join(fresh.select(col("media_id")), Seq("media_id"), "left_semi")))
   }
 
   /** Per-frame fingerprint frame of a static VIDEO corpus —
@@ -1000,8 +869,7 @@ object Streams {
     *     a duplicate);
     *  4. survivors go to `onBatch`; their per-frame `(media_id,
     *     frame_idx, fp)` rows land in the ledger's `batch_id=N`
-    *     partition (dynamic overwrite — the at-least-once delivery /
-    *     exactly-once ledger replay posture).
+    *     partition ([[runBatches]] replay rule).
     *
     * ZERO-FRAME videos (undemuxable container, no decodable frame) are
     * admitted but never ledgered — the undecodable-media routing: no
@@ -1025,9 +893,9 @@ object Streams {
       onBatch: (DataFrame, Long) => Unit,
       k: Int = 8,
       maxHamming: Int = 3,
-      minMatches: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      minMatches: Int = 2): DataStreamWriter[Row] = {
     require(k > 0, "k must be positive")
-    incrementalFrameEvidenceBatches(
+    frameEvidenceBatches(
       media, corpusFps, ledgerDir, onBatch, k.toLong, maxHamming, minMatches,
       graft.operators.Multimodal.videoFingerprints(_, k))
   }
@@ -1036,7 +904,7 @@ object Streams {
     * sibling: [[graft.operators.Multimodal.audioFingerprintWindows]]
     * per micro-batch (fixed-length segments, so tail-appended / padded
     * copies of held clips drop on their shared leading segments),
-    * through the same frame-evidence admission core as video. Corpus
+    * through the same frame-evidence admission stage as video. Corpus
     * frame = [[graft.operators.Multimodal.audioFingerprintWindows]]
     * over the held clips with the SAME `segSamples`/`maxSegments`;
     * zero-segment (non-PCM16) items are admitted, never ledgered.
@@ -1049,17 +917,17 @@ object Streams {
       segSamples: Int = 65536,
       maxSegments: Int = 64,
       maxHamming: Int = 3,
-      minMatches: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      minMatches: Int = 2): DataStreamWriter[Row] = {
     require(segSamples >= 65, "segSamples must be >= 65")
     require(maxSegments > 0, "maxSegments must be positive")
-    incrementalFrameEvidenceBatches(
+    frameEvidenceBatches(
       media, corpusFps, ledgerDir, onBatch, maxSegments.toLong,
       maxHamming, minMatches,
       graft.operators.Multimodal
         .audioFingerprintWindows(_, segSamples, maxSegments))
   }
 
-  private def incrementalFrameEvidenceBatches(
+  private def frameEvidenceBatches(
       media: DataFrame,
       corpusFps: DataFrame,
       ledgerDir: String,
@@ -1067,73 +935,68 @@ object Streams {
       kL: Long,
       maxHamming: Int,
       minMatches: Int,
-      fingerprint: DataFrame => DataFrame,
-      maxFrameDf: Int = 100): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      fingerprint: DataFrame => DataFrame): DataStreamWriter[Row] = {
     require(minMatches > 0, "minMatches must be positive")
     require(maxHamming >= 0 && maxHamming <= 7,
       s"maxHamming must be in [0, 7] (64-bit pigeonhole chunks), got $maxHamming")
+    runBatches(media, onBatch)(frameAdmitBatch(_, _, fingerprint, corpusFps,
+      ledgerDir, kL, maxHamming, minMatches))
+  }
+
+  /** Frame-evidence admission stage (the video / windowed-audio core). */
+  private def frameAdmitBatch(
+      batch: DataFrame,
+      batchId: Long,
+      fingerprint: DataFrame => DataFrame,
+      corpusFps: DataFrame,
+      ledgerDir: String,
+      kL: Long,
+      maxHamming: Int,
+      minMatches: Int): Staged = {
     val M = graft.operators.Multimodal
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.ops.Caches.scoped {
-      val fps = fingerprint(batch)
-        .persist() // consumed by both probes + the ledger rows
-      try {
-        val ledgerSchema = StructType(Seq(
-          StructField("media_id", LongType),
-          StructField("frame_idx", IntegerType),
-          StructField("fp", LongType),
-          StructField("batch_id", LongType)))
-        val ledgerFps = readLedger(spark, ledgerDir, ledgerSchema, batchId)
-          .select(col("media_id"), col("frame_idx"), col("fp"))
-        // the boilerplate-frame guard (Multimodal.frameEvidencePairs'
-        // df cap) applies per side: batch frames by batch-local df,
-        // the prior (corpus + ledger) by its own df — a fade-to-black
-        // frame held by thousands of corpus videos must not be probed
-        // by every micro-batch forever. The prior-side cap costs one
-        // groupBy over a frame table the cross-banding already scans
-        // per batch. maxIdentity = Int.MaxValue skips the identity
-        // pre-collapse (which would undercount evidence): the df cap
-        // already bounds every surviving identity group.
-        val batchFrames = M.compositeFrameKeys(
-          M.frameDfCap(fps, maxFrameDf), kL)
-        val priorFrames = M.compositeFrameKeys(
-          M.frameDfCap(corpusFps.unionByName(ledgerFps), maxFrameDf), kL)
-        def evidenced(pairs: DataFrame, dropSide: String): DataFrame = pairs
-          .select(
-            expr(s"id_a DIV $kL").as("vid_a"),
-            expr(s"id_b DIV $kL").as("vid_b"))
-          .groupBy(col("vid_a"), col("vid_b"))
-          .agg(count(lit(1)).as("n_matched"))
-          .filter(col("n_matched") >= minMatches)
-          .select(col(dropSide).as("media_id")).distinct()
-        val inBatchDropped = evidenced(
-          graft.operators.Dedup.simhashPairs(batchFrames, maxHamming,
-            maxIdentity = Int.MaxValue)
-            .filter(expr(s"id_a DIV $kL") =!= expr(s"id_b DIV $kL")),
-          dropSide = "vid_b") // composite id_a < id_b ⇒ vid_a < vid_b
-        val vsPriorDropped = evidenced(
-          graft.operators.Dedup.simhashCrossPairs(
-            batchFrames, priorFrames, maxHamming),
-          dropSide = "vid_a") // id_a = the probing batch video
-        val freshIds = batch.select(col("media_id"))
-          .join(inBatchDropped, Seq("media_id"), "left_anti")
-          .join(vsPriorDropped, Seq("media_id"), "left_anti")
-        val fresh = batch.join(freshIds, Seq("media_id"), "left_semi").persist()
-        try {
-          onBatch(fresh, batchId)
-          val ledgerRows = fps
-            .join(freshIds, Seq("media_id"), "left_semi")
-            .select(col("media_id"), col("frame_idx"), col("fp"),
-              lit(batchId).as("batch_id"))
-          writeBatchLedger(ledgerRows, ledgerDir)
-        } finally fresh.unpersist()
-      } finally fps.unpersist()
-      }
-      // ^ the per-batch SCOPED operator-cache release: see
-      //   incrementalMediaNearDupBatches — same unbounded-registry
-      //   rationale, zero cross-pipeline blast radius (round 19)
-    }
+    val maxFrameDf = 100
+    // consumed by both probes and the ledger rows; released with the
+    // batch's scope (see mediaAdmitBatch)
+    val fps = graft.ops.Caches.owned(fingerprint(batch))
+    val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
+      ledgerSchema("media_id" -> LongType, "frame_idx" -> IntegerType, "fp" -> LongType),
+      batchId).select(col("media_id"), col("frame_idx"), col("fp"))
+    // the boilerplate-frame guard (Multimodal.frameEvidencePairs'
+    // df cap) applies per side: batch frames by batch-local df,
+    // the prior (corpus + ledger) by its own df — a fade-to-black
+    // frame held by thousands of corpus videos must not be probed
+    // by every micro-batch forever. The prior-side cap costs one
+    // groupBy over a frame table the cross-banding already scans
+    // per batch. maxIdentity = Int.MaxValue skips the identity
+    // pre-collapse (which would undercount evidence): the df cap
+    // already bounds every surviving identity group.
+    val batchFrames = M.compositeFrameKeys(M.frameDfCap(fps, maxFrameDf), kL)
+    val priorFrames = M.compositeFrameKeys(
+      M.frameDfCap(corpusFps.unionByName(ledgerFps), maxFrameDf), kL)
+    def evidenced(pairs: DataFrame, dropSide: String): DataFrame = pairs
+      .select(
+        expr(s"id_a DIV $kL").as("vid_a"),
+        expr(s"id_b DIV $kL").as("vid_b"))
+      .groupBy(col("vid_a"), col("vid_b"))
+      .agg(count(lit(1)).as("n_matched"))
+      .filter(col("n_matched") >= minMatches)
+      .select(col(dropSide).as("media_id")).distinct()
+    val inBatchDropped = evidenced(
+      graft.operators.Dedup.simhashPairs(batchFrames, maxHamming,
+        maxIdentity = Int.MaxValue)
+        .filter(expr(s"id_a DIV $kL") =!= expr(s"id_b DIV $kL")),
+      dropSide = "vid_b") // composite id_a < id_b ⇒ vid_a < vid_b
+    val vsPriorDropped = evidenced(
+      graft.operators.Dedup.simhashCrossPairs(
+        batchFrames, priorFrames, maxHamming),
+      dropSide = "vid_a") // id_a = the probing batch video
+    val freshIds = batch.select(col("media_id"))
+      .join(inBatchDropped, Seq("media_id"), "left_anti")
+      .join(vsPriorDropped, Seq("media_id"), "left_anti")
+    val fresh = batch.join(freshIds, Seq("media_id"), "left_semi")
+    Staged(fresh, Seq(ledgerDir -> fps
+      .join(fresh.select(col("media_id")), Seq("media_id"), "left_semi")
+      .select(col("media_id"), col("frame_idx"), col("fp"))))
   }
 
   /** Fail-fast parameter checks shared by the near-dup deployments:
@@ -1154,23 +1017,22 @@ object Streams {
       }
   }
 
-  /** One micro-batch of MinHash near-dup admission (the
-    * [[incrementalNearDupBatches]] core, shared by the chained
-    * [[curateIncrementalBatches]]). Returns `(admitted rows, ledger
-    * rows)` — the caller persists the former, sinks it, then writes the
-    * latter via the dynamic-overwrite ledger append.
+  /** MinHash near-dup admission stage (the [[incrementalNearDupBatches]]
+    * core, chained by [[curateIncrementalBatches]]). The admitted rows
+    * carry their signature as `_gn_sig`, so the ledger reads it from
+    * the persisted frame instead of re-running the probe.
     */
   private def nearAdmitBatch(
       batch: DataFrame,
+      batchId: Long,
       corpusSigs: DataFrame,
       textCol: String,
       idCol: String,
       ledgerDir: String,
-      batchId: Long,
       threshold: Double,
       numPerms: Int,
       bands: Int,
-      maxBand: Int = 500): (DataFrame, DataFrame) = {
+      maxBand: Int): Staged = {
     val rows = numPerms / bands
     val cr = graft.ops.Cleanse.colRef _
     // zero-shingle sentinel: minhashFromString leaves every slot at
@@ -1178,9 +1040,6 @@ object Streams {
     // residues are < 2^61−1, so a real shingle can never produce it)
     def degenerate(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       element_at(sig, 1) === Long.MaxValue
-    def sigOf(df: DataFrame): DataFrame = df.select(
-      cr(idCol).as("_gn_id"),
-      graft.operators.Dedup.minhashSignature(cr(textCol), numPerms).as("_gn_sig"))
     // derived band keys: one hash per signature slice (band index rides
     // as a second hash input so equal slices in different bands differ)
     def banded(df: DataFrame): DataFrame = df.select(
@@ -1198,18 +1057,16 @@ object Streams {
     def estSim(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       size(filter(zip_with(a, b, (x, y) => x === y), p => p))
         .cast("double") / lit(numPerms.toDouble)
-    val spark = batch.sparkSession
     // ledger id field takes the BATCH's id type (string/int/long ids
     // all round-trip; a hardcoded LongType read would fail at the
     // second batch's ledger read for any non-long id column)
     val idType = batch.select(cr(idCol)).schema.head.dataType
-    val ledgerSchema = StructType(Seq(
-      StructField("_gn_id", idType),
-      StructField("_gn_sig", ArrayType(LongType)),
-      StructField("batch_id", LongType)))
-    val ledgerSigs = readLedger(spark, ledgerDir, ledgerSchema, batchId)
+    val ledgerSigs = readLedger(batch.sparkSession, ledgerDir,
+      ledgerSchema("_gn_id" -> idType, "_gn_sig" -> ArrayType(LongType)), batchId)
       .select(col("_gn_id"), col("_gn_sig"))
-    val bSigs = sigOf(batch)
+    val signed = batch.withColumn("_gn_sig",
+      graft.operators.Dedup.minhashSignature(cr(textCol), numPerms))
+    val bSigs = signed.select(cr(idCol).as("_gn_id"), col("_gn_sig"))
     val bBand = banded(bSigs)
     // within-batch pair rule: drop _gn_id when a LOWER id in the same
     // batch shares a band and the estimated Jaccard clears threshold.
@@ -1244,19 +1101,17 @@ object Streams {
     val freshIds = bSigs.select(col("_gn_id"))
       .join(inBatchDropped, Seq("_gn_id"), "left_anti")
       .join(vsPriorDropped, Seq("_gn_id"), "left_anti")
-    val fresh = batch.join(
+    val fresh = signed.join(
       freshIds.withColumnRenamed("_gn_id", idCol), Seq(idCol), "left_semi")
     // degenerate docs are admitted but never ledgered: their sentinel
     // signature carries no content identity
-    val ledgerRows = bSigs.filter(!degenerate(col("_gn_sig")))
-      .join(freshIds, Seq("_gn_id"), "left_semi")
-      .select(col("_gn_id"), col("_gn_sig"), lit(batchId).as("batch_id"))
-    (fresh, ledgerRows)
+    Staged(fresh, Seq(ledgerDir -> fresh.filter(!degenerate(col("_gn_sig")))
+      .select(cr(idCol).as("_gn_id"), col("_gn_sig"))), Seq("_gn_sig"))
   }
 
   /** END-TO-END streaming curation — the production crawl-ingest
-    * deployment every stage scaladoc gestures at, as ONE foreachBatch
-    * chain per micro-batch of raw pages:
+    * deployment every stage scaladoc gestures at, as ONE stage chain
+    * per micro-batch of raw pages:
     *
     *  1. [[graft.operators.Corpus.curatePages]] — the stateless C4 →
     *     full-Gopher prefix (clean text + keep flags, zero state);
@@ -1269,11 +1124,12 @@ object Streams {
     *     the near ledger ([[incrementalNearDupBatches]] semantics);
     *  4. optionally, SEMANTIC admission ([[incrementalSemanticBatches]]
     *     semantics): the cleaned text embeds in-engine
-    *     ([[graft.functions.TextFunctions.embedText]] at `embedDim`)
-    *     and drops when its vector sits at cosine ≥ 1 − `eps` to the
-    *     [[semanticCorpusIndex]] frame, a lower-id batch doc, or the
-    *     semantic ledger — the stage that catches PARAPHRASES (word
-    *     reordering, re-rendering) whose shingle sets evade MinHash;
+    *     ([[graft.functions.TextFunctions.embedText]] at the index's
+    *     own vector length) and drops when its vector sits at cosine
+    *     ≥ 1 − `eps` to the [[semanticCorpusIndex]] frame, a lower-id
+    *     batch doc, or the semantic ledger — the stage that catches
+    *     PARAPHRASES (word reordering, re-rendering) whose shingle sets
+    *     evade MinHash;
     *  5. optionally, n-gram decontamination against a STATIC benchmark
     *     gram frame ([[graft.operators.Corpus.decontaminateAgainstGrams]]
     *     — the bench side never grows, so no ledger is needed).
@@ -1283,27 +1139,28 @@ object Streams {
     * byte-identical copy of a page that was later near-dup-rejected
     * still dies at the cheap exact stage), the near ledger records
     * near-stage survivors, the semantic ledger records semantic-stage
-    * survivors. Replay safety is per-ledger dynamic partition
-    * overwrite, as in the single-stage deployments. The output
-    * reaching `onBatch` is `(idCol, clean)` — the curated,
-    * deduplicated, decontaminated page stream.
+    * survivors. Replay safety is the [[runBatches]] rule, per ledger.
+    * The output reaching `onBatch` is `(idCol, clean)` plus
+    * `carryCols` — the curated, deduplicated, decontaminated page
+    * stream.
     *
     * Scale: pass PERSISTED `corpusHashes` ([[dedupCorpusHashes]]),
     * `corpusSigs` ([[nearDupCorpusSignatures]]), and (if the semantic
-    * stage is on) `semanticIndex` ([[semanticCorpusIndex]] — built
-    * from embedText of the corpus's CLEANED text at the same
-    * `embedDim`; vector length is probed at writer construction and a
-    * mismatch throws) frames — the persistable units; everything else
-    * is micro-batch-sized. The stages run cheapest-first, so each
-    * store probe sees only the survivors of the stage before it.
+    * stage is on) `semanticIndex` ([[semanticCorpusIndex]] built from
+    * embedText of the corpus's CLEANED text) frames — the persistable
+    * units; everything else is micro-batch-sized. The stages run
+    * cheapest-first, so each store probe sees only the survivors of
+    * the stage before it; each admission stage's frame is persisted
+    * once (its ledger and the next stage read it), the prefix and
+    * decontamination frames are not.
     *
     * Observability: pass `onStats` to receive per-batch stage counts
-    * ([[CurateStats]]) — the admission funnel a production crawl
-    * monitors (a collapsing curation rate or an exploding near-dup
-    * rate is how filter drift and crawler loops surface). Costs two
-    * extra bounded actions per micro-batch (the curated and near
-    * frames are counted from their persisted forms); None (default)
-    * pays nothing.
+    * ([[CurateStats]]) once `onBatch` has returned — the admission
+    * funnel a production crawl monitors (a collapsing curation rate or
+    * an exploding near-dup rate is how filter drift and crawler loops
+    * surface). It costs one count per stage: the admission and output
+    * frames count from their persisted forms, the batch and the
+    * curatePages prefix are recomputed. None (default) pays nothing.
     */
   /** `nSemanticFresh` rides last (with a None default) so existing
     * constructor calls stay valid — it is None when the semantic stage
@@ -1332,101 +1189,89 @@ object Streams {
       onStats: Option[(CurateStats, Long) => Unit] = None,
       semanticIndex: Option[DataFrame] = None,
       semanticLedgerDir: Option[String] = None,
-      embedDim: Int = 128,
       eps: Double = 0.01,
-      carryCols: Seq[String] = Nil): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    requireSigCompat(corpusSigs, threshold, numPerms, bands)
-    semanticIndex.foreach { idx =>
+      carryCols: Seq[String] = Nil): DataStreamWriter[Row] = {
+    val semantic = semanticIndex.map { idx =>
       require(semanticLedgerDir.isDefined,
         "semanticIndex needs semanticLedgerDir")
       require(eps > 0 && eps < 1, "eps in (0, 1)")
       srpMeta(idx) // fail fast: must be a semanticCorpusIndex frame
-      // embed-dim mismatch would zip truncated vectors into silently
-      // wrong cosines — probe once at writer construction (1-row job)
-      idx.select(size(col("_gs_v")).as("n")).limit(1).collect()
-        .headOption.foreach { r =>
-          require(r.getInt(0) == embedDim,
-            s"semanticIndex vector length ${r.getInt(0)} != embedDim " +
-              s"$embedDim — build the index from embedText(clean, embedDim)")
-        }
+      // the cleaned text embeds at the index's vector length (one
+      // 1-row probe at writer construction) — a different length would
+      // zip truncated vectors into silently wrong cosines; an empty
+      // index fixes no length, so the stream embeds at 128
+      val dim = idx.select(size(col("_gs_v"))).limit(1).collect()
+        .headOption.fold(128)(_.getInt(0))
+      val SemV = "_gc_semv"
+      val stage: Stage = (in, batchId) => semanticAdmitBatch(
+        in.withColumn(SemV, graft.functions.TextFunctions.embedText(col("clean"), dim)),
+        batchId, idx, SemV, idCol, semanticLedgerDir.get, eps).copy(carried = Seq(SemV))
+      stage
     }
-    val SemV = "_gc_semv"
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val curatedBase = graft.operators.Corpus
-        .curatePages(batch, textCol, idCol)
-        .filter(col("kept"))
-        .select(col("id").as(idCol), col("clean"))
-      // carryCols re-join the caller's payload columns (domain, url,
-      // …) onto the curated frame — curatePages projects them away;
-      // one micro-batch-sized keyed join, and every downstream stage
-      // passes extras through (they filter/anti-join, never project)
-      val curated0 =
-        if (carryCols.isEmpty) curatedBase
-        else curatedBase.join(
-          batch.select((graft.ops.Cleanse.colRef(idCol).as(idCol) +:
-            carryCols.map(c => graft.ops.Cleanse.colRef(c))): _*),
-          Seq(idCol))
-      // stats mode persists the curated frame too: its count is one of
-      // the funnel numbers, and the exact stage re-reads it anyway
-      val curated = if (onStats.isDefined) curated0.persist() else curated0
-      val exact = exactAdmitBatch(
-        curated, corpusHashes, "clean", idCol, exactLedgerDir, batchId)
-      exact.persist()
-      try {
-        val (near0, nearLedgerRows) = nearAdmitBatch(
-          exact.drop(ContentH), corpusSigs, "clean", idCol, nearLedgerDir,
-          batchId, threshold, numPerms, bands, maxBand)
-        // the semantic stage consumes the near frame through several
-        // branches (bVecs, the semi-join, the ledger rows) — persist it
-        // whenever that stage is on, not only for stats
-        val near =
-          if (onStats.isDefined || semanticIndex.isDefined) near0.persist()
-          else near0
-        val (sem, semLedgerRows) = semanticIndex match {
-          case Some(idx) =>
-            val withVec = near.withColumn(SemV,
-              graft.functions.TextFunctions.embedText(col("clean"), embedDim))
-            val (f, lr) = semanticAdmitBatch(
-              withVec, idx, SemV, idCol, semanticLedgerDir.get, batchId, eps)
-            val semKept = f.drop(SemV)
-            (if (onStats.isDefined) semKept.persist() else semKept, Some(lr))
-          case None => (near, None)
+    val stages = curationStages(corpusHashes, corpusSigs, textCol, idCol,
+      exactLedgerDir, nearLedgerDir, threshold, numPerms, bands, maxBand, carryCols) ++
+      semantic ++ benchGrams.map(decontaminationStage(_, idCol, decontamN))
+    onStats match {
+      case None => runBatches(docs, onBatch)(stages: _*)
+      case Some(report) =>
+        // the batch and every stage's frame of the batch in flight,
+        // counted once the sink has returned
+        val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val intake: Stage = (in, _) => { frames.clear(); frames += in; Staged(in) }
+        def counted(s: Stage): Stage = (in, batchId) => {
+          val r = s(in, batchId); frames += r.admitted; r
         }
-        val out = benchGrams match {
-          case Some(bg) => graft.operators.Corpus
-            .decontaminateAgainstGrams(sem, bg, "clean", idCol, decontamN)
-          case None => sem
-        }
-        out.persist()
-        try {
+        runBatches(docs, (out, batchId) => {
           onBatch(out, batchId)
-          onStats.foreach { f =>
-            f(CurateStats(
-              nIn = batch.count(),
-              nCurated = curated.count(),
-              nExactFresh = exact.count(),
-              nNearFresh = near.count(),
-              nAdmitted = out.count(),
-              nSemanticFresh =
-                if (semanticIndex.isDefined) Some(sem.count()) else None),
-              batchId)
-          }
-          writeBatchLedger(
-            exact.select(col(ContentH), lit(batchId).as("batch_id")),
-            exactLedgerDir)
-          writeBatchLedger(nearLedgerRows, nearLedgerDir)
-          semLedgerRows.foreach(writeBatchLedger(_, semanticLedgerDir.get))
-        } finally {
-          out.unpersist()
-          if (onStats.isDefined) {
-            curated.unpersist()
-            if (semanticIndex.isDefined) sem.unpersist()
-          }
-          if (onStats.isDefined || semanticIndex.isDefined) near.unpersist()
-        }
-      } finally exact.unpersist()
+          val n = frames.map(_.count())
+          report(CurateStats(n(0), n(1), n(2), n(3), n.last,
+            semanticIndex.map(_ => n(4))), batchId)
+        })(intake +: stages.map(counted): _*)
     }
   }
+
+  /** The curation chain's fixed head: the curatePages prefix (kept
+    * pages as `(idCol, clean)`, plus `carryCols` re-joined from the
+    * batch — curatePages projects them away, and every later stage
+    * passes extras through), then exact and MinHash near-dup
+    * admission on the cleaned text.
+    */
+  private def curationStages(
+      corpusHashes: DataFrame,
+      corpusSigs: DataFrame,
+      textCol: String,
+      idCol: String,
+      exactLedgerDir: String,
+      nearLedgerDir: String,
+      threshold: Double,
+      numPerms: Int,
+      bands: Int,
+      maxBand: Int,
+      carryCols: Seq[String]): Seq[Stage] = {
+    requireSigCompat(corpusSigs, threshold, numPerms, bands)
+    val cr = graft.ops.Cleanse.colRef _
+    val curated: Stage = (batch, _) => {
+      val kept = graft.operators.Corpus.curatePages(batch, textCol, idCol)
+        .filter(col("kept"))
+        .select(col("id").as(idCol), col("clean"))
+      Staged(
+        if (carryCols.isEmpty) kept
+        else kept.join(
+          batch.select((cr(idCol).as(idCol) +: carryCols.map(cr)): _*), Seq(idCol)))
+    }
+    Seq(curated,
+      exactAdmitBatch(_, _, corpusHashes, "clean", idCol, exactLedgerDir),
+      nearAdmitBatch(_, _, corpusSigs, "clean", idCol, nearLedgerDir,
+        threshold, numPerms, bands, maxBand))
+  }
+
+  /** n-gram decontamination of the curated `clean` text against a
+    * static benchmark gram frame — no ledger, the bench side never
+    * grows.
+    */
+  private def decontaminationStage(benchGrams: DataFrame, idCol: String, n: Int): Stage =
+    (in, _) => Staged(graft.operators.Corpus
+      .decontaminateAgainstGrams(in, benchGrams, "clean", idCol, n))
 
   /** Corpus-side SRP index for [[incrementalSemanticBatches]]: the
     * PRE-EXPLODED signature frame `(_gs_id, _gs_v, _gs_n, _gs_t,
@@ -1542,15 +1387,14 @@ object Streams {
     * (cosine involving a zero vector is 0 by the engine convention);
     * they are also never ledgered — a zero vector can never drop a
     * later doc, so its ledger row would be dead weight. The ledger
-    * stores `(id, vector)` per admitted doc in the
-    * [[incrementalDedupBatches]] dynamic-overwrite replay posture;
-    * vectors are stored as array<double> (lossless for float inputs),
-    * so re-derived SRP signatures are bit-identical across restarts.
-    * `corpusIndex` is the [[semanticCorpusIndex]] frame — persist it;
-    * `bits`/`tables`/`maxBucket` are read from its column metadata so
-    * the batch and ledger sides band identically and carry the same
-    * hot-bucket cap by construction (see the index scaladoc for the
-    * measured uncapped adversary).
+    * stores `(id, vector)` per admitted doc under the [[runBatches]]
+    * replay rule; vectors are stored as array<double> (lossless for
+    * float inputs), so re-derived SRP signatures are bit-identical
+    * across restarts. `corpusIndex` is the [[semanticCorpusIndex]]
+    * frame — persist it; `bits`/`tables`/`maxBucket` are read from its
+    * column metadata so the batch and ledger sides band identically
+    * and carry the same hot-bucket cap by construction (see the index
+    * scaladoc for the measured uncapped adversary).
     */
   def incrementalSemanticBatches(
       docs: DataFrame,
@@ -1559,18 +1403,11 @@ object Streams {
       idCol: String,
       ledgerDir: String,
       onBatch: (DataFrame, Long) => Unit,
-      eps: Double = 0.01): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      eps: Double = 0.01): DataStreamWriter[Row] = {
     require(eps > 0 && eps < 1, "eps in (0, 1)")
     srpMeta(corpusIndex) // fail fast at writer construction
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val (fresh, ledgerRows) = semanticAdmitBatch(
-        batch, corpusIndex, vecCol, idCol, ledgerDir, batchId, eps)
-      fresh.persist()
-      try {
-        onBatch(fresh, batchId)
-        writeBatchLedger(ledgerRows, ledgerDir)
-      } finally fresh.unpersist()
-    }
+    runBatches(docs, onBatch)(
+      semanticAdmitBatch(_, _, corpusIndex, vecCol, idCol, ledgerDir, eps))
   }
 
   /** Read bits/tables/maxBucket back from a [[semanticCorpusIndex]]
@@ -1588,34 +1425,30 @@ object Streams {
       sigMeta.getLong("graft.srp.maxBucket").toInt)
   }
 
-  /** One micro-batch of SRP-bucketed semantic admission (the
-    * [[incrementalSemanticBatches]] core, shared by the chained
-    * [[curateIncrementalBatches]]). Returns `(admitted rows, ledger
-    * rows)` — the caller persists the former, sinks it, then writes
-    * the latter via the dynamic-overwrite ledger append.
+  /** SRP-bucketed semantic admission stage (the
+    * [[incrementalSemanticBatches]] core, chained by
+    * [[curateIncrementalBatches]]). The ledger reads each admitted
+    * row's vector from the persisted frame.
     */
   private def semanticAdmitBatch(
       batch: DataFrame,
+      batchId: Long,
       corpusIndex: DataFrame,
       vecCol: String,
       idCol: String,
       ledgerDir: String,
-      batchId: Long,
-      eps: Double): (DataFrame, DataFrame) = {
+      eps: Double): Staged = {
     val (bits, tables, maxBucket) = srpMeta(corpusIndex)
     val cr = graft.ops.Cleanse.colRef _
     val dot = graft.operators.Similarity.dot _
     val norm = graft.operators.Similarity.norm _
-    val spark = batch.sparkSession
     val idType = batch.select(cr(idCol)).schema.head.dataType
-    val ledgerSchema = StructType(Seq(
-      StructField("_gs_id", idType),
-      StructField("_gs_v", ArrayType(DoubleType)),
-      StructField("batch_id", LongType)))
-    val ledgerVecs = readLedger(spark, ledgerDir, ledgerSchema, batchId)
+    val ledgerVecs = readLedger(batch.sparkSession, ledgerDir,
+      ledgerSchema("_gs_id" -> idType, "_gs_v" -> ArrayType(DoubleType)), batchId)
       .select(col("_gs_id"), col("_gs_v"))
-    val bVecs = batch.select(cr(idCol).as("_gs_id"),
+    def vecs(df: DataFrame): DataFrame = df.select(cr(idCol).as("_gs_id"),
       cr(vecCol).cast("array<double>").as("_gs_v"))
+    val bVecs = vecs(batch)
     // the probe sides carry the index's own hot-bucket cap (metadata):
     // a semantically-collapsed micro-batch or ledger region would
     // otherwise make one bucket |side|² / |batch|×|ledger| quadratic —
@@ -1651,10 +1484,7 @@ object Streams {
     val fresh = batch.join(
       freshIds.withColumnRenamed("_gs_id", idCol), Seq(idCol), "left_semi")
     // zero vectors can never drop a later doc — never ledgered
-    val ledgerRows = bVecs.filter(norm(col("_gs_v")) =!= 0.0)
-      .join(freshIds, Seq("_gs_id"), "left_semi")
-      .select(col("_gs_id"), col("_gs_v"), lit(batchId).as("batch_id"))
-    (fresh, ledgerRows)
+    Staged(fresh, Seq(ledgerDir -> vecs(fresh).filter(norm(col("_gs_v")) =!= 0.0)))
   }
 
   /** Streaming sequence PACKING — the production tail of the curation
@@ -1671,9 +1501,8 @@ object Streams {
     * State is one running token total per shard, carried as a LEDGER of
     * per-batch DELTAS `(shard, batch_tokens, batch_id)` — summing all
     * prior deltas reproduces the shard's base offset, and the sum is
-    * associative, so the [[incrementalDedupBatches]] replay posture
-    * (dynamic partition overwrite + exclude own batch_id) gives
-    * exactly-once packing under at-least-once delivery. The ledger is
+    * associative, so the [[runBatches]] replay rule gives exactly-once
+    * packing under at-least-once delivery. The ledger is
     * shard-count-sized — bytes per batch, never corpus-sized. The
     * bin/off arithmetic is the batch operator's own
     * (`packSequencesFrom` — one shared formula, so streaming ≡ batch by
@@ -1688,30 +1517,19 @@ object Streams {
       tokensCol: String,
       budget: Long,
       ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(budget > 0, "budget must be positive")
     val cr = graft.ops.Cleanse.colRef _
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
+    runBatches(docs, onBatch) { (batch, batchId) =>
       val shardType = batch.select(cr(shardCol)).schema.head.dataType
-      val ledgerSchema = StructType(Seq(
-        StructField("shard", shardType),
-        StructField("batch_tokens", LongType),
-        StructField("batch_id", LongType)))
-      val base = readLedger(spark, ledgerDir, ledgerSchema, batchId)
+      val base = readLedger(batch.sparkSession, ledgerDir,
+        ledgerSchema("shard" -> shardType, "batch_tokens" -> LongType), batchId)
         .groupBy(col("shard")).agg(sum(col("batch_tokens")).as("_gp_base"))
       val out = graft.operators.Corpus.packSequencesFrom(
         batch, idCol, cr(shardCol), cr(orderCol), cr(tokensCol), budget,
         Some(base))
-      out.persist()
-      try {
-        onBatch(out, batchId)
-        writeBatchLedger(
-          batch.groupBy(cr(shardCol).as("shard"))
-            .agg(sum(cr(tokensCol).cast("long")).as("batch_tokens"))
-            .withColumn("batch_id", lit(batchId)),
-          ledgerDir)
-      } finally out.unpersist()
+      Staged(out, Seq(ledgerDir -> out.groupBy(col("shard"))
+        .agg(sum(col("n_tokens")).as("batch_tokens"))))
     }
   }
 
@@ -1754,24 +1572,15 @@ object Streams {
       budget: Long,
       ledgerDir: String,
       onBatch: (DataFrame, Long) => Unit,
-      sep: String = " "): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      sep: String = " "): DataStreamWriter[Row] = {
     require(budget > 0, "budget must be positive")
     val cr = graft.ops.Cleanse.colRef _
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    runBatches(docs, onBatch) { (batch, batchId) =>
       val spark = batch.sparkSession
       val shardType = batch.select(cr(shardCol)).schema.head.dataType
       val ordType = batch.select(cr(orderCol)).schema.head.dataType
-      val deltaSchema = StructType(Seq(
-        StructField("shard", shardType),
-        StructField("batch_tokens", LongType),
-        StructField("batch_id", LongType)))
-      val openSchema = StructType(Seq(
-        StructField("shard", shardType),
-        StructField("_ord", ordType),
-        StructField("text", StringType),
-        StructField("bin", LongType),
-        StructField("batch_id", LongType)))
-      val deltas = readLedger(spark, s"$ledgerDir/deltas", deltaSchema, batchId)
+      val deltas = readLedger(spark, s"$ledgerDir/deltas",
+        ledgerSchema("shard" -> shardType, "batch_tokens" -> LongType), batchId)
       val base = deltas.groupBy(col("shard"))
         .agg(sum(col("batch_tokens")).as("_gp_base"))
       // latest-state anchor = the DELTAS ledger's max batch_id, which
@@ -1780,7 +1589,8 @@ object Streams {
       // anchoring on the open ledger's own max would then resurrect
       // the previous batch's already-emitted state
       val carried = stateAt(
-        readLedger(spark, s"$ledgerDir/open", openSchema, batchId),
+        readLedger(spark, s"$ledgerDir/open", ledgerSchema("shard" -> shardType,
+          "_ord" -> ordType, "text" -> StringType, "bin" -> LongType), batchId),
         maxBatchId(deltas))
       // assign the NEW docs (batch-local window + the ledger base —
       // the packBatches arithmetic), then re-attach ord + text
@@ -1805,28 +1615,15 @@ object Streams {
         .select(col("shard"),
           (floor((coalesce(col("_gp_base"), lit(0L)) +
             coalesce(col("_gp_new"), lit(0L))) / budget)).as("_gp_open"))
-      val flagged = union.join(openBin, Seq("shard"), "left")
+      // read by both the emitted bins and the open-state ledger
+      val flagged = graft.ops.Caches.owned(union.join(openBin, Seq("shard"), "left")
         .withColumn("_gp_closed",
-          col("bin") < coalesce(col("_gp_open"), lit(0L)))
-      flagged.persist()
-      try {
-        val emitted = materializeBins(
-          flagged.filter(col("_gp_closed")), sep)
-        emitted.persist()
-        try {
-          onBatch(emitted, batchId)
-          writeBatchLedger(
-            batch.groupBy(cr(shardCol).as("shard"))
-              .agg(sum(cr(tokensCol).cast("long")).as("batch_tokens"))
-              .withColumn("batch_id", lit(batchId)),
-            s"$ledgerDir/deltas")
-          writeBatchLedger(
-            flagged.filter(!col("_gp_closed"))
-              .select(col("shard"), col("_ord"), col("text"), col("bin"),
-                lit(batchId).as("batch_id")),
-            s"$ledgerDir/open")
-        } finally emitted.unpersist()
-      } finally flagged.unpersist()
+          col("bin") < coalesce(col("_gp_open"), lit(0L))))
+      Staged(materializeBins(flagged.filter(col("_gp_closed")), sep), Seq(
+        s"$ledgerDir/deltas" -> batch.groupBy(cr(shardCol).as("shard"))
+          .agg(sum(cr(tokensCol).cast("long")).as("batch_tokens")),
+        s"$ledgerDir/open" -> flagged.filter(!col("_gp_closed"))
+          .select(col("shard"), col("_ord"), col("text"), col("bin"))))
     }
   }
 
@@ -1847,7 +1644,7 @@ object Streams {
     // shard type is unknowable without data, so it defaults to string
     if (!exists(s"$ledgerDir/open"))
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.sparkContext.emptyRDD[Row],
         StructType(Seq(
           StructField("shard", StringType), StructField("bin", LongType),
           StructField("n_docs", LongType),
@@ -1907,10 +1704,9 @@ object Streams {
     * token offset in its domain — the [[packBatches]] handoff).
     *
     * State = one running ADMITTED-token total per domain, carried as
-    * an associative per-batch-delta ledger (bytes per domain; same
-    * replay posture as every other deployment: a replayed batch
-    * overwrites its own partition and filters its own prior rows from
-    * the read). Ledgering admitted rather than arrived tokens changes
+    * an associative per-batch-delta ledger (bytes per domain; the
+    * [[runBatches]] replay rule, like every other deployment).
+    * Ledgering admitted rather than arrived tokens changes
     * no decision — the two totals agree until the budget boundary is
     * crossed, and both sit at/above budget forever after — and keeps
     * the ledger from growing with rejected-traffic volume. The
@@ -1926,25 +1722,17 @@ object Streams {
       tokensCol: String,
       budgets: Map[String, Long],
       ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(budgets.nonEmpty, "budgets must be non-empty")
     require(budgets.values.forall(_ > 0), "budgets must be positive")
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val (admitted0, ledgerRows) = domainQuotaBatch(
-        batch, batchId, domainCol, orderCol, tokensCol, budgets, ledgerDir)
-      val admitted = admitted0.persist()
-      try {
-        onBatch(admitted.drop("_gq_dom", "_gq_tok"), batchId)
-        commitQuotaLedger(ledgerRows, ledgerDir, batchId)
-      } finally admitted.unpersist()
-    }
+    runBatches(docs, onBatch)(
+      domainQuotaBatch(_, _, domainCol, orderCol, tokensCol, budgets, ledgerDir))
   }
 
-  /** Per-batch core of [[domainQuotaBatches]], shared with
-    * [[ingestToBins]] (the exactAdmitBatch/nearAdmitBatch pattern):
-    * returns (admitted rows still carrying `_gq_dom`/`_gq_tok`, the
-    * ledger delta rows) — the CALLER persists the frame, sinks it, and
-    * writes the ledger after the sink succeeds.
+  /** Quota admission stage (the [[domainQuotaBatches]] core, chained by
+    * [[ingestToBins]]): admitted rows carry `_gq_dom`/`_gq_tok` for the
+    * per-domain delta ledger, which commits through the running-total
+    * cache this stage seeds.
     */
   private def domainQuotaBatch(
       batch: DataFrame,
@@ -1953,14 +1741,10 @@ object Streams {
       orderCol: String,
       tokensCol: String,
       budgets: Map[String, Long],
-      ledgerDir: String): (DataFrame, DataFrame) = {
+      ledgerDir: String): Staged = {
     import org.apache.spark.sql.expressions.Window
     val cr = graft.ops.Cleanse.colRef _
     val spark = batch.sparkSession
-    val ledgerSchema = StructType(Seq(
-      StructField("domain", StringType),
-      StructField("batch_tokens", LongType),
-      StructField("batch_id", LongType)))
     // The ledger-base key is renamed away from "domain" BEFORE the
     // join: a batch whose domainCol is literally "domain" (the natural
     // name) would otherwise make `col("domain")` ambiguous at analysis
@@ -1971,9 +1755,7 @@ object Streams {
       StructField("_gq_base", LongType)))
     def localBase(sums: Map[String, Long]): DataFrame =
       spark.createDataFrame(
-        java.util.Arrays.asList(sums.toSeq.map { case (d, t) =>
-          org.apache.spark.sql.Row(d, t)
-        }: _*),
+        java.util.Arrays.asList(sums.toSeq.map { case (d, t) => Row(d, t) }: _*),
         baseSchema)
     // Cache hit requires batchId == through + 1, not just > through: a
     // batch-id GAP (e.g. a ledger dir reused under a different
@@ -1990,7 +1772,8 @@ object Streams {
         // cold start or replay: the parquet ledger is the truth; seed
         // the cache with the pre-batch totals (bounded collect — one
         // row per domain)
-        val sums = readLedger(spark, ledgerDir, ledgerSchema, batchId)
+        val sums = readLedger(spark, ledgerDir,
+          ledgerSchema("domain" -> StringType, "batch_tokens" -> LongType), batchId)
           .groupBy(col("domain")).agg(sum(col("batch_tokens")).as("_gq_base"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         quotaCache.put(ledgerDir, (batchId - 1, sums))
@@ -2012,10 +1795,8 @@ object Streams {
         col("_gq_prev") + coalesce(col("_gq_base"), lit(0L)))
       .filter(col("start_off") < budgetOf)
       .drop("_gq_basedom", "_gq_prev", "_gq_base")
-    val ledgerRows = admitted.groupBy(col("_gq_dom").as("domain"))
-      .agg(sum(col("_gq_tok")).as("batch_tokens"))
-      .withColumn("batch_id", lit(batchId))
-    (admitted, ledgerRows)
+    Staged(admitted, Seq(ledgerDir -> admitted.groupBy(col("_gq_dom").as("domain"))
+      .agg(sum(col("_gq_tok")).as("batch_tokens"))), Seq("_gq_dom", "_gq_tok"))
   }
 
   /** CRAWL STREAM → TRAINING BINS, one deployment — the engine's full
@@ -2030,10 +1811,9 @@ object Streams {
     * `(idCol, clean, domain, n_tokens, bin, off, ord_key, shard)`: the
     * curated text plus its exact training-bin coordinates and the
     * seeded global order key a trainer reads by. Admission order is
-    * arrival order (the streaming posture throughout); the quota
-    * ledger is written after `onBins` returns, and the curation
-    * ledgers after that — every store write sits downstream of the
-    * sink, so a replayed batch reproduces its own decisions.
+    * arrival order (the streaming posture throughout); every ledger is
+    * written after `onBins` returns ([[runBatches]]), so a replayed
+    * batch reproduces its own decisions.
     *
     * Scale: pass PERSISTED `corpusHashes`/`corpusSigs` (and
     * `benchGrams` if decontaminating) — the persistable units; the
@@ -2054,35 +1834,23 @@ object Streams {
       ledgerBase: String,
       onBins: (DataFrame, Long) => Unit,
       benchGrams: Option[DataFrame] = None,
-      orderSalt: String = "order"): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      orderSalt: String = "order"): DataStreamWriter[Row] = {
     require(budgets.nonEmpty, "budgets must be non-empty")
     require(budgets.values.forall(_ > 0), "budgets must be positive")
-    curateIncrementalBatches(
-      pages, corpusHashes, corpusSigs, textCol, idCol,
-      s"$ledgerBase/exact", s"$ledgerBase/near",
-      onBatch = { (admitted: DataFrame, batchId: Long) =>
-        val withTok = admitted.withColumn("_gi_tok",
-          graft.functions.TextFunctions.tokenCount(col("clean"))
-            .cast("long"))
-        val (quota0, quotaLedger) = domainQuotaBatch(
-          withTok, batchId, domainCol, idCol, "_gi_tok", budgets,
-          s"$ledgerBase/quota")
-        val quota = quota0.persist()
-        try {
-          val dropCols = Seq("_gq_dom", "_gq_tok") ++
-            (if (domainCol == "domain") Nil else Seq(domainCol))
-          val placed = graft.operators.Corpus.trainingOrder(
-            quota
-              .withColumn("domain", col("_gq_dom"))
-              .withColumnRenamed("_gi_tok", "n_tokens")
-              .drop(dropCols: _*),
-            idCol, binBudget, nShards, orderSalt)
-          onBins(placed, batchId)
-          commitQuotaLedger(quotaLedger, s"$ledgerBase/quota", batchId)
-        } finally quota.unpersist()
-      },
-      benchGrams = benchGrams,
-      carryCols = Seq(domainCol))
+    val quota: Stage = (in, batchId) => domainQuotaBatch(
+      in.withColumn("_gi_tok",
+        graft.functions.TextFunctions.tokenCount(col("clean")).cast("long")),
+      batchId, domainCol, idCol, "_gi_tok", budgets, s"$ledgerBase/quota")
+    val placement: Stage = (in, _) => Staged(graft.operators.Corpus.trainingOrder(
+      in.withColumn("domain", graft.ops.Cleanse.colRef(domainCol).cast("string"))
+        .withColumnRenamed("_gi_tok", "n_tokens")
+        .drop((if (domainCol == "domain") Nil else Seq(domainCol)): _*),
+      idCol, binBudget, nShards, orderSalt))
+    val stages = curationStages(corpusHashes, corpusSigs, textCol, idCol,
+      s"$ledgerBase/exact", s"$ledgerBase/near", threshold = 0.7, numPerms = 64,
+      bands = 8, maxBand = 500, carryCols = Seq(domainCol)) ++
+      benchGrams.map(decontaminationStage(_, idCol, 8)) ++ Seq(quota, placement)
+    runBatches(pages, onBins)(stages: _*)
   }
 
   /** `(shard, bin, n_docs, seq_text)` from `(shard, _ord, text, bin)`
@@ -2098,56 +1866,4 @@ object Streams {
             array_sort(collect_list(struct(col("_ord"), col("text")))),
             x => x.getField("text")),
           sep).as("seq_text"))
-
-  /** Streaming decontamination — the one published-pipeline stage that
-    * previously had no streaming twin: per micro-batch, drop every doc
-    * sharing an `n`-gram with the STATIC benchmark gram frame
-    * ([[graft.operators.Corpus.decontaminateAgainstGrams]] inside
-    * foreachBatch — the handler IS the batch operator, so streaming ≡
-    * batch by construction). The bench side is static, so unlike the
-    * dedup deployments NO ledger is needed; build `benchGrams` once
-    * with [[graft.operators.Corpus.decontaminationGrams]] and persist
-    * it (unpersisted, every micro-batch re-tokenizes the benchmark
-    * corpus — the measured model-persist cliff; StreamBench's
-    * `decontam` mode quantifies it).
-    */
-  def decontaminateBatches(
-      docs: DataFrame,
-      benchGrams: DataFrame,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit,
-      n: Int = 8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      onBatch(
-        graft.operators.Corpus.decontaminateAgainstGrams(
-          batch, benchGrams, textCol, idCol, n),
-        batchId)
-    }
-
-  /** Streaming SURGICAL decontamination — [[decontaminateBatches]]'s
-    * cut-the-span sibling: per micro-batch, excise every word position
-    * covered by a benchmark `n`-word window
-    * ([[graft.operators.Corpus.decontaminateSpans]] inside foreachBatch
-    * — the handler IS the batch operator, so streaming ≡ batch by
-    * construction; the surgery is per-doc, so batching cannot change
-    * it). Like its drop-the-doc sibling: the bench side is STATIC, no
-    * ledger; build `benchSpanHashes` once with
-    * [[graft.operators.Corpus.decontaminationSpanHashes]] and persist
-    * it (unpersisted, every micro-batch re-windows the benchmark
-    * corpus).
-    */
-  def decontaminateSpansBatches(
-      docs: DataFrame,
-      benchSpanHashes: DataFrame,
-      textCol: String,
-      idCol: String,
-      onBatch: (DataFrame, Long) => Unit,
-      n: Int = 8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      onBatch(
-        graft.operators.Corpus.decontaminateSpans(
-          batch, benchSpanHashes, textCol, idCol, n),
-        batchId)
-    }
 }

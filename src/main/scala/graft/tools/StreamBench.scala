@@ -66,14 +66,14 @@ object StreamBench {
 
     val sessions = Streams.sessionize(events, gapMs = 3 * 1000L)
     var published = 0L
-    val q = Streams.foreachBatchSink(sessions.toDF(), { (batch, id) =>
+    val q = Streams.perBatch(sessions.toDF())(identity) { (batch, id) =>
       // foreachBatch → immutable snapshot version per micro-batch (the
       // production pattern: stream → versioned batch table)
       published += batch.count()
       graft.sink.Snapshots.publishBatch(
         batch.sparkSession, warehouse, "sessions", batch, id)
       ()
-    }).trigger(Trigger.ProcessingTime("1 second")).start()
+    }.trigger(Trigger.ProcessingTime("1 second")).start()
 
     val t0 = System.nanoTime()
     q.awaitTermination(secs * 1000L)
@@ -88,14 +88,14 @@ object StreamBench {
     spark.stop()
   }
 
-  /** Streaming LM-scoring throughput: the [[Streams.scoreLmBatches]]
-    * path over a file-source document stream, measured with the model
-    * members UNPERSISTED (every micro-batch re-aggregates the reference
-    * corpus into counts — the stream-static join re-plans per batch)
-    * vs PERSISTED (the scaladoc's recommendation for long runs). The
-    * gap IS the evidence for that recommendation; correctness of the
-    * scored rows is pinned by StreamsSpec's streaming≡batch case, so
-    * this only measures.
+  /** Streaming LM-scoring throughput: [[Streams.perBatch]] over
+    * [[graft.operators.Corpus.scoreWithLmModel]] on a file-source
+    * document stream, measured with the model members UNPERSISTED
+    * (every micro-batch re-aggregates the reference corpus into counts
+    * — the stream-static join re-plans per batch) vs PERSISTED (the
+    * scaladoc's recommendation for long runs). The gap IS the evidence
+    * for that recommendation; correctness of the scored rows is pinned
+    * by StreamsSpec's streaming≡batch case, so this only measures.
     *
     * Usage: StreamBench lm [docsParquet] [filesPerTrigger]
     */
@@ -129,17 +129,15 @@ object StreamBench {
         .option("maxFilesPerTrigger", perTrigger).parquet(stageDir)
       var scored = 0L
       val t0 = System.nanoTime()
-      // persist-then-count, NOT bare count(): caching materializes the
-      // full scored rows (all columns), where count() alone would let
-      // ColumnPruning drop the score columns and their model joins —
-      // the same artifact the Stress rows corrected (docs/SCALE.md)
-      val q = Streams.scoreLmBatches(stream, model, "text", "doc_id",
-        { (batch, _) =>
-          batch.persist()
-          scored += batch.count()
-          batch.unpersist()
-          ()
-        }).start()
+      // the runner persists each scored batch, so count() materializes
+      // the full rows (all columns) — a bare count() of an unpersisted
+      // frame would let ColumnPruning drop the score columns and their
+      // model joins, the artifact the Stress rows corrected
+      // (docs/SCALE.md)
+      val q = Streams.perBatch(stream)(
+        graft.operators.Corpus.scoreWithLmModel(_, model, "text", "doc_id")) {
+        (batch, _) => scored += batch.count()
+      }.start()
       q.processAllAvailable()
       q.stop(); q.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -150,19 +148,19 @@ object StreamBench {
   }
 
   /** Round-12 throughput rows for the remaining round-11 streaming
-    * deployments (scoreLmNBatches n=5, scoreDsirBatches,
-    * scoreClassifierBatches, incrementalDedupBatches), persisted vs
+    * deployments ([[Streams.perBatch]] over n=5 LM, DSIR and
+    * classifier scoring; incrementalDedupBatches), persisted vs
     * unpersisted model members — the bigram row's 6.4× persist gap
     * measured for each. Correctness of every path is pinned by
     * StreamsSpec streaming≡batch cases; this only measures. The
-    * handler persists each scored batch before counting it (the
-    * measurement-correction rule: bare count() lets ColumnPruning drop
-    * the model joins — docs/SCALE.md).
+    * handler counts each batch the runner has persisted (the
+    * measurement-correction rule: a bare count() of an unpersisted
+    * frame lets ColumnPruning drop the model joins — docs/SCALE.md).
     *
     * Round-13 additions: `decontam` (streaming n-gram decontamination
     * vs a static bench gram frame — the persistable unit) and
     * `curatechain` (the END-TO-END curation deployment: curatePages →
-    * exact admit → near admit → decontaminate in one foreachBatch,
+    * exact admit → near admit → decontaminate in one stage chain,
     * both ledgers live; stream staged with the q135-style page wrapper
     * so every stage does real work).
     *
@@ -207,12 +205,7 @@ object StreamBench {
           .option("maxFilesPerTrigger", perTrigger).parquet(streamDir)
         var scored = 0L
         val t0 = System.nanoTime()
-        val q = mk(stream, { (batch, _) =>
-          batch.persist()
-          scored += batch.count()
-          batch.unpersist()
-          ()
-        }).start()
+        val q = mk(stream, (batch, _) => scored += batch.count()).start()
         q.processAllAvailable()
         q.stop(); q.awaitTermination()
         val wall = (System.nanoTime() - t0) / 1e9
@@ -234,7 +227,8 @@ object StreamBench {
           docs, "text", "doc_id", n = 5)
         run("stream_lm5_score_rows_per_sec",
           model.orders :+ model.totals) { (s, h) =>
-          Streams.scoreLmNBatches(s, model, "text", "doc_id", h)
+          Streams.perBatch(s)(
+            graft.operators.Corpus.scoreWithLmNModel(_, model, "text", "doc_id"))(h)
         }
       case "dsir" =>
         val model = graft.operators.Corpus.dsirModel(
@@ -243,7 +237,8 @@ object StreamBench {
           "text", "doc_id")
         run("stream_dsir_score_rows_per_sec",
           Seq(model.targetCounts, model.rawCounts, model.totals)) { (s, h) =>
-          Streams.scoreDsirBatches(s, model, "text", "doc_id", h)
+          Streams.perBatch(s)(
+            graft.operators.Corpus.scoreWithDsirModel(_, model, "text", "doc_id"))(h)
         }
       case "clf" =>
         val model = graft.operators.Corpus.trainQualityClassifier(
@@ -251,13 +246,14 @@ object StreamBench {
           neg = docs.filter(col("doc_id") % 2 =!= 0),
           "text", "doc_id", iters = 8)
         run("stream_clf_score_rows_per_sec", Seq(model.weights)) { (s, h) =>
-          Streams.scoreClassifierBatches(s, model, "text", "doc_id", h)
+          Streams.perBatch(s)(
+            graft.operators.Corpus.scoreWithClassifier(_, model, "text", "doc_id"))(h)
         }
       case "lid" =>
         // trained language routing: a 3-way label planted by doc_id
         // (vocab tags appended so the classes are separable), then the
         // stream identified against the trained model — the
-        // scoreClassifierBatches shape with a per-doc softmax window
+        // classifier-scoring shape with a per-doc softmax window
         val tag = when(col("doc_id") % 3 === 0,
           lit(" alpha arbor anchor amber apex argon"))
           .when(col("doc_id") % 3 === 1,
@@ -271,15 +267,16 @@ object StreamBench {
               lang.as("lang")),
           "text", "lang", "doc_id", iters = 8)
         run("stream_lid_rows_per_sec", Seq(model.weights)) { (s, h) =>
-          Streams.langIdBatches(s, model, "text", "doc_id", h)
+          Streams.perBatch(s)(
+            graft.operators.Corpus.langIdWith(_, model, "text", "doc_id"))(h)
         }
       case "ccnet" =>
         // the fully model-driven CCNet chain online: trained langid +
         // reference LM + batch-local terciles per micro-batch
-        // (Streams.ccnetBucketsBatches). Models train once on the 10%
-        // slice (the q163 shape); persistable units are the LM order
-        // tables + the langid weight frame — unpersisted, every
-        // micro-batch re-aggregates the reference corpus
+        // (Streams.perBatch over Corpus.ccnetBucketsWith). Models train
+        // once on the 10% slice (the q163 shape); persistable units are
+        // the LM order tables + the langid weight frame — unpersisted,
+        // every micro-batch re-aggregates the reference corpus
         val tag = when(col("doc_id") % 3 === 0,
           lit(" alpha arbor anchor amber apex argon"))
           .when(col("doc_id") % 3 === 1,
@@ -296,7 +293,8 @@ object StreamBench {
           slice, "text", "doc_id", n = 3)
         run("stream_ccnet_rows_per_sec",
           lmModel.orders :+ lmModel.totals :+ lidModel.weights) { (s, h) =>
-          Streams.ccnetBucketsBatches(s, lmModel, lidModel, "text", "doc_id", h)
+          Streams.perBatch(s)(graft.operators.Corpus.ccnetBucketsWith(
+            _, lmModel, lidModel, "text", "doc_id"))(h)
         }
       case "incneardup" =>
         // MinHash near-dup admission: the replica's 10 exact copies are
@@ -316,8 +314,8 @@ object StreamBench {
         // INSIDE readStream — no model, no state store, pure narrow
         // work; the number is the per-page filtering rate at arrival
         run("stream_curate_rows_per_sec", Seq.empty) { (s, h) =>
-          Streams.foreachBatchSink(
-            graft.operators.Corpus.curatePages(s, "text", "doc_id"), h)
+          Streams.perBatch(s)(
+            graft.operators.Corpus.curatePages(_, "text", "doc_id"))(h)
         }
       case "incsemantic" =>
         // streaming SEMANTIC admission with embedText composed on the
@@ -354,7 +352,8 @@ object StreamBench {
         val benchGrams = graft.operators.Corpus.decontaminationGrams(
           docs.filter(col("doc_id") % 17 === 0), "text", "doc_id", n = 8)
         run("stream_decontam_rows_per_sec", Seq(benchGrams)) { (s, h) =>
-          Streams.decontaminateBatches(s, benchGrams, "text", "doc_id", h)
+          Streams.perBatch(s)(graft.operators.Corpus.decontaminateAgainstGrams(
+            _, benchGrams, "text", "doc_id"))(h)
         }
       case "curatechain" =>
         // END-TO-END curation: wrap each doc into the q135-style page
@@ -503,7 +502,7 @@ object StreamBench {
           pages, corpusHashes, corpusSigs, "text", "doc_id", "source",
           budgets, binBudget = 2048L, nShards = 8, ledgerBase = base,
           onBins = { (batch, _) =>
-            batch.persist(); placed += batch.count(); batch.unpersist(); ()
+            placed += batch.count()
           },
           benchGrams = Some(benchGrams)).start()
         q.processAllAvailable()
@@ -579,7 +578,7 @@ object StreamBench {
           pages, corpusHashes, corpusSigs, "text", "doc_id", "source",
           budgets, binBudget = 2048L, nShards = 8, ledgerBase = base,
           onBins = { (batch, _) =>
-            batch.persist(); placed += batch.count(); batch.unpersist(); ()
+            placed += batch.count()
           },
           benchGrams = Some(benchGrams)).start()
         q.processAllAvailable()
@@ -653,8 +652,7 @@ object StreamBench {
             s"$base/exact", s"$base/near", h,
             benchGrams = Some(benchGrams),
             semanticIndex = Some(semIndex),
-            semanticLedgerDir = Some(s"$base/sem"),
-            embedDim = 128)
+            semanticLedgerDir = Some(s"$base/sem"))
         }
       case "decontamsurg" =>
         // streaming SURGICAL decontamination: same stream/bench shape
@@ -664,7 +662,8 @@ object StreamBench {
         val benchSpans = graft.operators.Corpus.decontaminationSpanHashes(
           docs.filter(col("doc_id") % 17 === 0), "text", "doc_id", n = 8)
         run("stream_decontamsurg_rows_per_sec", Seq(benchSpans)) { (s, h) =>
-          Streams.decontaminateSpansBatches(s, benchSpans, "text", "doc_id", h)
+          Streams.perBatch(s)(graft.operators.Corpus.decontaminateSpans(
+            _, benchSpans, "text", "doc_id"))(h)
         }
       case "domquota" =>
         // streaming ingestion-budget admission: per-domain running token
@@ -812,8 +811,7 @@ object StreamBench {
         require(loaded == merges, "snapshot round-trip must preserve rank order")
         println(f"""{"metric":"bpe_artifact_train_vs_load_sec","train_sec":$trainSec%.1f,"load_sec":$loadSec%.2f,"merges":${merges.length}}""")
         run("stream_bpescore_rows_per_sec", Seq.empty) { (s, h) =>
-          Streams.foreachBatchSink(
-            graft.operators.Corpus.bpeEncode(s, "text", loaded), h)
+          Streams.perBatch(s)(graft.operators.Corpus.bpeEncode(_, "text", loaded))(h)
         }
     }
     spark.stop()

@@ -260,8 +260,8 @@ class StreamsSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[Event]
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val q = Streams.foreachBatchSink(
-      input.toDF(), (batch, id) => { batch.count(); seen.add(id) })
+    val q = Streams.perBatch(input.toDF())(identity)(
+      (batch, id) => { batch.count(); seen.add(id) })
       .start()
     try {
       input.addData(ev(1, "2024-01-01 10:00:00", 1))
@@ -282,9 +282,9 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[Event]
     // NoTimeout for the same quiescence reason as the first sessionize
     // test; StreamBench runs the timeout-armed variant for throughput
-    val q = Streams.foreachBatchSink(
+    val q = Streams.perBatch(
       Streams.sessionize(input.toDS(), gapMs = 60000L,
-        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout).toDF(),
+        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout).toDF())(identity)(
       (batch, _) =>
         if (!batch.isEmpty)
           graft.sink.Snapshots.publish(batch.sparkSession, warehouse, "sessions", batch))
@@ -308,8 +308,7 @@ class StreamsSpec extends SparkSpec {
     val warehouse = java.nio.file.Files
       .createTempDirectory("graft_retain_wh").toString
     val input = MemoryStream[Event]
-    val q = Streams.foreachBatchSink(
-      input.toDF(),
+    val q = Streams.perBatch(input.toDF())(identity)(
       (batch, id) => {
         graft.sink.Snapshots.publishBatch(
           batch.sparkSession, warehouse, "evcap", batch, id, retain = 2)
@@ -342,8 +341,7 @@ class StreamsSpec extends SparkSpec {
     val cp = java.nio.file.Files
       .createTempDirectory("graft_restart_cp").toString + "/q"
     val input = MemoryStream[Event]
-    def start() = Streams.foreachBatchSink(
-      input.toDF(),
+    def start() = Streams.perBatch(input.toDF())(identity)(
       (batch, id) => {
         graft.sink.Snapshots.publishBatch(
           batch.sparkSession, warehouse, "events", batch, id)
@@ -400,8 +398,7 @@ class StreamsSpec extends SparkSpec {
     Seq((1L, "a", 0L), (2L, "b", 0L)).toDF("k", "v", "ver")
       .write.parquet(baseDir)
     val input = MemoryStream[(Long, String, Long)]
-    val q = Streams.foreachBatchSink(
-      input.toDS().toDF("k", "v", "ver"),
+    val q = Streams.perBatch(input.toDS().toDF("k", "v", "ver"))(identity)(
       (batch, _) => {
         val base = batch.sparkSession.read.parquet(baseDir)
         val merged = graft.operators.Upsert.merge(base, batch, Seq("k"), "ver")
@@ -451,8 +448,8 @@ class StreamsSpec extends SparkSpec {
       (3L, "c a d b"), (4L, "d d d")) // batch 2
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Double)]
-    val writer = Streams.scoreLmBatches(
-      input.toDF().toDF("doc_id", "text"), model, "text", "doc_id",
+    val writer = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.scoreWithLmModel(_, model, "text", "doc_id"))(
       (scored, _) => acc.synchronized {
         acc ++= scored.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(5)))
@@ -485,8 +482,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long, Long, Double)]
-    val writer = Streams.scoreLmNBatches(
-      input.toDF().toDF("doc_id", "text"), model, "text", "doc_id",
+    val writer = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.scoreWithLmNModel(_, model, "text", "doc_id"))(
       (scored, _) => acc.synchronized {
         acc ++= scored.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -524,8 +521,8 @@ class StreamsSpec extends SparkSpec {
     def run(m: graft.operators.Corpus.LmNModel): Seq[(Long, Double)] = {
       val input = MemoryStream[(Long, String)]
       val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      val q = Streams.scoreLmNBatches(
-        input.toDF().toDF("doc_id", "text"), m, "text", "doc_id",
+      val q = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+        graft.operators.Corpus.scoreWithLmNModel(_, m, "text", "doc_id"))(
         (scored, _) => acc.synchronized {
           acc ++= scored.select("id", "avg_neg_logscore").collect()
             .map(r => (r.getLong(0), r.getDouble(1)))
@@ -555,8 +552,8 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long, Double)]
-    val writer = Streams.scoreDsirBatches(
-      input.toDF().toDF("doc_id", "text"), model, "text", "doc_id",
+    val writer = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.scoreWithDsirModel(_, model, "text", "doc_id"))(
       (scored, _) => acc.synchronized {
         acc ++= scored.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -600,8 +597,8 @@ class StreamsSpec extends SparkSpec {
       (12L, "cypress cairn cedar"), (13L, ""))
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double)]
-    val q = Streams.langIdBatches(
-      input.toDF().toDF("doc_id", "text"), model, "text", "doc_id",
+    val q = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.langIdWith(_, model, "text", "doc_id"))(
       (ident, _) => acc.synchronized {
         acc ++= ident.collect().map(r =>
           (r.getLong(0), r.getString(1), r.getDouble(2)))
@@ -647,8 +644,8 @@ class StreamsSpec extends SparkSpec {
     val b1 = (200L until 218L).map(i => (i, textOf(i)))
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.Map.empty[Long, Seq[(Long, String, String)]]
-    val q = Streams.ccnetBucketsBatches(
-      input.toDF().toDF("doc_id", "text"), lm, lid, "text", "doc_id",
+    val q = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.ccnetBucketsWith(_, lm, lid, "text", "doc_id"))(
       (bucketed, bid) => acc.synchronized {
         acc(bid) = bucketed.select(col("id"), col("lang"), col("bucket"))
           .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
@@ -688,8 +685,8 @@ class StreamsSpec extends SparkSpec {
       (1L, "casino spam offer"), (2L, ""))
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Boolean)]
-    val writer = Streams.scoreClassifierBatches(
-      input.toDF().toDF("doc_id", "text"), model, "text", "doc_id",
+    val writer = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.scoreWithClassifier(_, model, "text", "doc_id"))(
       (scored, _) => acc.synchronized {
         acc ++= scored.collect().map(r =>
           (r.getLong(0), r.getDouble(1), r.getBoolean(2)))
@@ -798,6 +795,17 @@ class StreamsSpec extends SparkSpec {
     val ledger = spark.read.parquet(ledgerDir)
     assert(ledger.count() == 4)
     assert(ledger.filter(col("batch_id") === 0L).count() == 2)
+    // the ledger holds exactly the admitted (all non-degenerate) ids,
+    // each with the signature of its own text
+    def sigRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val admittedText = Map(2L -> zText,
+      3L -> "a totally unrelated body of words standing on its own here",
+      8L -> "late arrival with its own brand new words in this sentence",
+      9L -> "ab")
+    assert(sigRows(ledger.select(col("_gn_id"), col("_gn_sig"))) ==
+      sigRows(Streams.nearDupCorpusSignatures(
+        admittedText.toSeq.toDF("doc_id", "text"), "text", "doc_id")))
     // replay safety: re-running batch 1's content as a NEW batch id
     // must drop everything it admitted before (the ledger catches it);
     // and a replayed batch is filtered out of its own prior set by
@@ -863,8 +871,7 @@ class StreamsSpec extends SparkSpec {
       }, withRequests = true)
     seg("seg-00000.warc.gz", Seq(0, 1)) // exists BEFORE the stream starts
     val got = scala.collection.mutable.ArrayBuffer.empty[(String, Int, String)]
-    val q = Streams.foreachBatchSink(
-      Streams.readWarcStream(spark, watched),
+    val q = Streams.perBatch(Streams.readWarcStream(spark, watched))(identity)(
       (batch, _) => got.synchronized {
         got ++= batch.collect().map(r => (
           r.getAs[String]("url"), r.getAs[Int]("http_status"),
@@ -1581,8 +1588,8 @@ class StreamsSpec extends SparkSpec {
       .decontaminationGrams(bench, "text", "doc_id", n = 8).persist()
     val input = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streams.decontaminateBatches(
-      input.toDF().toDF("doc_id", "text"), benchGrams, "text", "doc_id",
+    val q = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.decontaminateAgainstGrams(_, benchGrams, "text", "doc_id"))(
       (clean, _) => got.synchronized { got ++= clean.collect().map(_.getLong(0)) })
       .start()
     try {
@@ -1760,8 +1767,8 @@ class StreamsSpec extends SparkSpec {
       .decontaminationSpanHashes(bench, "text", "doc_id", n = 8).persist()
     val input = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-    val q = Streams.decontaminateSpansBatches(
-      input.toDF().toDF("doc_id", "text"), benchSpans, "text", "doc_id",
+    val q = Streams.perBatch(input.toDF().toDF("doc_id", "text"))(
+      graft.operators.Corpus.decontaminateSpans(_, benchSpans, "text", "doc_id"))(
       (clean, _) => got.synchronized {
         got ++= clean.collect().map(r =>
           (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
@@ -1862,6 +1869,72 @@ class StreamsSpec extends SparkSpec {
     assert(byBatch(1L) == Streams.CurateStats(3, 3, 2, 1, 1))
   }
 
+  test("curateIncrementalBatches replay: the re-run batch admits the same ids, ledgers unchanged") {
+    // the at-least-once window for a ledgered chain (the snapshot
+    // restart test's construction): two checkpointed batches, the last
+    // commit marker deleted, restart — the replayed batch must not be
+    // suppressed by the ledger rows it wrote itself
+    implicit val sq = spark.sqlContext
+    val stops = "the report has to be checked and that will hold with care."
+    def pageText(stem: String) =
+      s"$stops\n${(0 until 60).map(i => s"$stem${i}ord").mkString(" ")} and the close of day has come to rest now.\nmore closing prose lands here. yes. good. fine. done."
+    val (aText, bText, cText) = (pageText("aw"), pageText("bw"), pageText("cw"))
+    val corpus = Seq.empty[(Long, String)].toDF("doc_id", "clean")
+    val corpusHashes = Streams.dedupCorpusHashes(corpus, "clean")
+    val corpusSigs = Streams.nearDupCorpusSignatures(corpus, "clean", "doc_id")
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_curate_replay").toString
+    val cp = s"$base/checkpoint"
+    val input = MemoryStream[(Long, String)]
+    val calls = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+    def start() = Streams.curateIncrementalBatches(
+      input.toDF().toDF("doc_id", "text"), corpusHashes, corpusSigs,
+      "text", "doc_id", s"$base/exact", s"$base/near",
+      (out, bid) => calls.synchronized {
+        calls += bid -> out.collect().map(_.getLong(0)).toSet
+      }).option("checkpointLocation", cp).start()
+    val q1 = start()
+    try {
+      // batch 0: 3 = exact copy of 1 within the batch
+      input.addData((1L, aText), (2L, bText), (3L, aText))
+      q1.processAllAvailable()
+      // batch 1: 6 dies on the exact ledger, 7 (near-copy of 2) on the
+      // near ledger, 8 is fresh
+      input.addData((6L, aText),
+        (7L, bText + "\nan extra tail sentence sits right here now."), (8L, cText))
+      q1.processAllAvailable()
+    } finally { q1.stop(); q1.awaitTermination() }
+    assert(calls.toSeq == Seq(0L -> Set(1L, 2L), 1L -> Set(8L)))
+    def ledgerRows(dir: String): Set[Seq[Any]] =
+      spark.read.parquet(dir).collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).toSet
+    val exactBefore = ledgerRows(s"$base/exact")
+    val nearBefore = ledgerRows(s"$base/near")
+    // the near ledger holds the admitted ids, per batch
+    assert(spark.read.parquet(s"$base/near")
+      .select(col("batch_id").cast("long"), col("_gn_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((0L, 1L), (0L, 2L), (1L, 8L)))
+    val commits = new java.io.File(cp, "commits")
+    val lastCommit = commits.listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toInt)
+    assert(lastCommit.delete())
+    new java.io.File(commits, "." + lastCommit.getName + ".crc").delete()
+    val q2 = start()
+    try q2.processAllAvailable() // replays batch 1
+    finally { q2.stop(); q2.awaitTermination() }
+    assert(calls.toSeq == Seq(0L -> Set(1L, 2L), 1L -> Set(8L), 1L -> Set(8L)))
+    def partitions(dir: String): Set[String] = new java.io.File(dir).listFiles()
+      .map(_.getName).filter(_.startsWith("batch_id=")).toSet
+    Seq(s"$base/exact", s"$base/near").foreach { dir =>
+      assert(partitions(dir) == Set("batch_id=0", "batch_id=1"), dir)
+    }
+    assert(ledgerRows(s"$base/exact") == exactBefore)
+    assert(ledgerRows(s"$base/near") == nearBefore)
+  }
+
   test("curateIncrementalBatches optional SEMANTIC stage catches paraphrases MinHash misses") {
     implicit val sq = spark.sqlContext
     val stops = "the report has to be checked and that will hold with care."
@@ -1922,7 +1995,6 @@ class StreamsSpec extends SparkSpec {
       onStats = Some((s, bid) => stats.synchronized { stats += bid -> s }),
       semanticIndex = Some(semIndex),
       semanticLedgerDir = Some(s"$base/sem"),
-      embedDim = 64,
       eps = 0.25).start()
     try {
       // batch 0: 1 = A admitted; 2 = stride-permuted G — different

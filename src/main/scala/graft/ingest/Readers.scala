@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ops.Cleanse
+import graft.plans.CellExpressions
 
 /** Distributed delimited-text scan with the reference's exact parse
   * semantics (reference backend/index.js:98-119 preview, 206-232 full):
@@ -20,7 +21,8 @@ import graft.ops.Cleanse
   *     the database cast; our casts happen later in Save)
   *
   * Spark-first design: the scan is the TEXT source with an in-plan naive
-  * `split` + per-cell cleanup, all codegen'd column expressions (see the
+  * split + per-cell cleanup, all codegen'd byte-level expressions
+  * ([[graft.plans.CellExpressions]] — no regex per line or cell; see the
   * [[delimited]] scaladoc for why line-level semantics rule out the csv
   * parser). The only driver-side work is reading ONE line for the sniff —
   * scan, cleanse, projection, and cast all distribute, so the path is
@@ -88,8 +90,9 @@ object Readers {
     *     multi-file dirs; a DATA row byte-identical to the header line
     *     is also dropped -- documented deviation, vanishingly rare).
     *
-    * Everything stays distributed + codegen'd: `split` + `get` are plan
-    * expressions; only the one-line sniff runs on the driver.
+    * Everything stays distributed + codegen'd: the blank test, split,
+    * `get` and cell cleanup are plan expressions; only the one-line sniff
+    * runs on the driver.
     */
   def delimited(spark: SparkSession, path: String): DataFrame = {
     val first = Sniffer.firstLine(spark, path).getOrElse(
@@ -98,15 +101,16 @@ object Readers {
     val (keep, schema) = headerSchema(first, delimiter)
     val line = col("value")
     val rows = spark.read.text(path)
-      .filter(Cleanse.trimAll(line) =!= "") // raw blank-line skip
+      .filter(CellExpressions.notBlank(line)) // raw blank-line skip
       .filter(!line.contains("---")) // raw separator-line skip
       .filter(line =!= lit(first)) // header line (every file)
-    val cells = split(line, java.util.regex.Pattern.quote(delimiter), -1)
-    val columns = schema.fieldNames.zipWithIndex.map { case (n, i) =>
-      get(cells, lit(i)).as(n) // null when the row is short -- pad parity
+    val cells = CellExpressions.splitOn(line, delimiter)
+    val columns = schema.fieldNames.zipWithIndex.collect {
+      case (n, i) if keep.contains(n) =>
+        // get is null when the row is short -- pad parity
+        CellExpressions.cleanCell(get(cells, lit(i))).as(n)
     }
-    val cleansed = Cleanse.cells(rows.select(columns.toIndexedSeq: _*))
-    cleansed.select(keep.map(Cleanse.colRef).toIndexedSeq: _*)
+    rows.select(columns.toIndexedSeq: _*)
   }
 
   /** JSON-lines scan (extension beyond the reference, which pushes .json

@@ -21,14 +21,15 @@ object Sniffer {
   /** Read just the first non-blank line of a (possibly multi-file) path.
     * `spark.read.text(...).head` under a limit early-exits: Spark stops
     * after one row, it does not materialize the file. Blank means what
-    * the reader's blank-line skip means ([[graft.ops.Cleanse.trimAll]]):
-    * Spark `trim` strips spaces only, so a tab-only line would otherwise
-    * be taken for the header.
+    * the reader's blank-line skip means (the same
+    * [[graft.plans.CellExpressions.notBlank]] predicate): Spark `trim`
+    * strips spaces only, so a tab-only line would otherwise be taken for
+    * the header.
     */
   def firstLine(spark: SparkSession, path: String): Option[String] = {
     import org.apache.spark.sql.functions.col
     spark.read.text(path)
-      .filter(graft.ops.Cleanse.trimAll(col("value")) =!= "")
+      .filter(graft.plans.CellExpressions.notBlank(col("value")))
       .limit(1)
       .collect()
       .headOption

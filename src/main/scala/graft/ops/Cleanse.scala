@@ -1,17 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Cell/row normalization exactly as the reference applies it
-  * (reference backend/index.js:111,115,216,221 for cells; 212, 219 for
-  * rows): per cell `trim` → strip one leading/trailing `"` → strip one
-  * leading/trailing `|`; rows that are entirely blank are dropped; rows
-  * whose raw line contains `---` (Markdown separator) are dropped.
+/** Column helpers shared by the ingest and ops layers, plus the
+  * reference's header-cell normalization (reference
+  * backend/index.js:111,115: `trim` → strip one leading/trailing `"` →
+  * strip one leading/trailing `|`), applied driver-side to the one
+  * sniffed header line.
   *
-  * Everything here is `org.apache.spark.sql.functions` column expressions —
-  * codegen'd, no UDFs — so cleansing rides inside WholeStageCodegen on the
-  * scan and costs one pass regardless of scale.
+  * Data cells get the same steps on the executors (trimming Java regex
+  * `\s` rather than `String.trim`'s control range), together with the
+  * blank-row test and the naive split, as byte-level Catalyst expressions
+  * ([[graft.plans.CellExpressions]]): one static call per cell inside
+  * WholeStageCodegen, no regex and no UDF, so cleansing costs one pass over
+  * the scan regardless of scale.
   */
 object Cleanse {
 
@@ -83,24 +86,6 @@ object Cleanse {
         "or raise maxExactRows explicitly if exact quantiles at this size are intended.")
   }
 
-  /** Full-whitespace trim: JS `.trim()` (the reference's, index.js:115)
-    * and Java's `String.trim` strip tabs/newlines too, while Spark's
-    * `trim` strips only the space character — a `"\tfoo"` cell must
-    * become `"foo"` on both paths.
-    */
-  def trimAll(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
-
-  /** trim → strip edge quotes → strip edge pipes (reference order,
-    * index.js:115: `.trim().replace(/^"|"$/g,'').replace(/^\||\|$/g,'')`),
-    * then empty-string → null (save-path semantics, `cells[idx] || null`,
-    * index.js:223).
-    */
-  def cell(c: Column): Column = {
-    val stripped =
-      regexp_replace(regexp_replace(trimAll(c), "^\"|\"$", ""), "^\\||\\|$", "")
-    when(stripped === "", lit(null)).otherwise(stripped)
-  }
-
   /** Same normalization for a header string, driver-side (headers are
     * parsed on the driver from the sniffed first line).
     */
@@ -108,8 +93,4 @@ object Cleanse {
     h.trim
       .replaceAll("^\"|\"$", "")
       .replaceAll("^\\||\\|$", "")
-
-  /** Apply [[cell]] to every column of an all-string DataFrame. */
-  def cells(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => cell(colRef(c)).as(c)).toIndexedSeq: _*)
 }

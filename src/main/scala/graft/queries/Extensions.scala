@@ -2926,14 +2926,22 @@ object Extensions {
           trainSlice, "text", "doc_id", n = 3)); ()
     }
     tSave2.start()
-    // join in finally: a training/publish failure on THIS thread must
+    // join on both paths: a training/publish failure on THIS thread must
     // not leave the LM thread writing into a warehouse the next bench
-    // rep's GateTemp.fresh is about to wipe
+    // rep's GateTemp.fresh is about to wipe, and the LM thread's own
+    // errors ride on the propagating exception as suppressed causes
+    // instead of being dropped
     try {
       val langIdModel = graft.operators.Corpus.trainLangId(
         trainSlice, "text", "lang", "doc_id", iters = 4)
       graft.operators.Corpus.saveLangIdModel(s, wh, "langid", langIdModel)
-    } finally tSave2.join()
+    } catch {
+      case t: Throwable =>
+        tSave2.join()
+        saveErrs.forEach(t.addSuppressed(_))
+        throw t
+    }
+    tSave2.join()
     if (!saveErrs.isEmpty) throw saveErrs.peek()
     // held-out slice kept at 30% (doc_id%10 in 1..3): the gate pins the
     // SEAM (loaded models driving the CCNet path), which a third of the

@@ -40,7 +40,7 @@ object Save {
     * non-coercible cell becomes null instead of aborting the whole load
     * mid-write (Spark 4 runs ANSI-on, where a plain `cast` throws) —
     * documented deviation from PG's transaction-abort (SURVEY.md §7.5(4)).
-    * Empty cells are already null from the cleanse (Cleanse.cell),
+    * Empty cells are already null from the cleanse (CleanCell),
     * matching PG's `'' :: numeric` rejection turned into null-tolerance.
     */
   def prepare(

@@ -201,10 +201,14 @@ object Inspect {
             val nCoal = "AQEShuffleRead coalesced".r.findAllIn(finalPlan).length
             println(s"[inspect] $q: scans=$nScan reused=$nReuse " +
               s"aqeCoalesced=$nCoal")
+            finalPlan.linesIterator
+              .filter(_.contains("AQEShuffleRead"))
+              .foreach(l => println("[inspect]   " + l.trim.take(160)))
             java.nio.file.Files.writeString(
               java.nio.file.Paths.get(s"/tmp/graft_plan_$q.txt"), finalPlan)
           } catch {
-            case e: Throwable => println(s"[inspect] $q FAILED: ${e.getMessage}")
+            case scala.util.control.NonFatal(e) =>
+              println(s"[inspect] $q FAILED: ${e.getMessage}")
           }
         }
       case Array("scans", q) =>

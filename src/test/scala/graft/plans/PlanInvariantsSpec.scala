@@ -1,7 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, ScalaUDF, StringSplit}
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec, SortMergeJoinExec}
 
@@ -233,5 +235,24 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(planned.size > hotPaths.size / 2,
       s"only ${planned.size}/${hotPaths.size} hot paths analyzed — " +
         s"broken: ${broken.map(_._1)}")
+  }
+
+  test("delimited read plans byte kernels: no regex, no regex split, no ScalaUDF") {
+    // the upload scan's blank test, split and per-cell cleanup run as
+    // CellExpressions; a regex or UDF here puts the interpreted,
+    // allocation-heavy path back on every cell
+    val f = java.nio.file.Files.createTempFile("graft_plan", ".csv")
+    java.nio.file.Files.writeString(f, "a,b,c\n1, \"x\" ,|y|\n \t\n2,,\n")
+    val df = graft.ingest.Readers.read(spark, f.toString)
+    assert(df.collect().map(_.toSeq).toSeq ==
+      Seq(Seq("1", "x", "y"), Seq("2", null, null)))
+    val exprs = new AdaptiveSparkPlanHelper {}
+      .flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect { case e => e }))
+    val banned = exprs.collect {
+      case e @ (_: RegExpReplace | _: StringSplit | _: ScalaUDF) => e.prettyName
+    }
+    assert(banned.isEmpty, s"regex/UDF in the delimited scan: ${banned.distinct}")
+    assert(exprs.exists(_.isInstanceOf[CleanCell]) &&
+      exprs.exists(_.isInstanceOf[SplitOnByte]) && exprs.exists(_.isInstanceOf[NotBlank]))
   }
 }

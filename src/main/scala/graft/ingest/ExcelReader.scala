@@ -5,8 +5,7 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Excel (.xlsx) scan — first sheet only, like the reference
   * (reference backend/index.js:93-96: `workbook.SheetNames[0]`), empty
@@ -28,22 +27,20 @@ object ExcelReader {
 
   def read(spark: SparkSession, path: String, sheetRows: Int = Int.MaxValue): DataFrame = {
     // legacy BIFF workbooks (by extension or OLE2 magic — a .xls renamed
-    // to .xlsx must not surface as a zip error) take the BIFF8 path
-    if (path.toLowerCase.endsWith(".xls") || isBiff(path))
-      return XlsReader.read(spark, path, sheetRows)
-    val rows = readRows(path, sheetRows)
+    // to .xlsx must not surface as a zip error) take the BIFF8 grid
+    val rows =
+      if (path.toLowerCase.endsWith(".xls") || isBiff(path)) XlsReader.readRows(path, sheetRows)
+      else readRows(path, sheetRows)
     if (rows.isEmpty)
       throw new IllegalArgumentException(s"File appears empty: $path")
     // shared header normalization (duplicate/empty header cells) with the
     // delimited path — a raw header row like [id, id, name] would build
-    // an ambiguous schema that breaks every later col("id")
-    val (keep, schema) = Readers.dedupeNames(rows.head.toIndexedSeq)
-    val data = rows.tail.map { r =>
-      Row.fromSeq(schema.indices.map(i => if (i < r.length && r(i).nonEmpty) r(i) else null))
-    }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(data.toIndexedSeq), schema)
-    df.select(keep.map(graft.ops.Cleanse.colRef).toIndexedSeq: _*)
+    // an ambiguous schema that breaks every later col("id"); empty
+    // cells read as null
+    val width = rows.head.length
+    Readers.driverTable(spark, rows.head.toIndexedSeq, rows.tail.map { r =>
+      (0 until width).map(i => if (i < r.length && r(i).nonEmpty) r(i) else null)
+    })
   }
 
   /** True when the file starts with the OLE2/CFB magic (D0 CF 11 E0 A1

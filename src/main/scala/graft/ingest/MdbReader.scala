@@ -4,7 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal MS Access Jet4/ACE (`.mdb` Access 2000–2003, `.accdb`
   * Access 2007/2010+) reader over JDK built-ins only — closing the
@@ -141,11 +141,8 @@ object MdbReader {
     */
   def read(spark: SparkSession, path: String, maxRows: Int = Int.MaxValue): DataFrame = {
     val (names, rows) = readRows(path, maxRows)
-    val (keep, schema) = Readers.dedupeNames(names.toIndexedSeq)
-    val data = rows.map(r => Row.fromSeq(r.toIndexedSeq))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(data.toIndexedSeq), schema)
-    df.select(keep.map(graft.ops.Cleanse.colRef).toIndexedSeq: _*)
+    // values as read: an empty TEXT stays "" (MdbSpec pins it)
+    Readers.driverTable(spark, names, rows)
   }
 
   /** (column names, rows) of the first user table; values null-or-string. */

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -70,6 +70,19 @@ object Readers {
     }
     val keep = names.filterNot(_.startsWith("_graft_skip_"))
     (keep.toIndexedSeq, StructType(names.map(StructField(_, StringType, nullable = true)).toIndexedSeq))
+  }
+
+  /** The shared tail of the driver-parsed readers (Excel, legacy .xls,
+    * Access): normalize `header` with [[dedupeNames]], parallelize
+    * `rows` — one value per header position, as the reader wants it
+    * kept — and project the visible columns.
+    */
+  private[graft] def driverTable(
+      spark: SparkSession, header: Seq[String], rows: Seq[Seq[String]]): DataFrame = {
+    val (keep, schema) = dedupeNames(header)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(Row.fromSeq).toIndexedSeq), schema)
+      .select(keep.map(Cleanse.colRef): _*)
   }
 
   /** Delimited scan (S1): csv/tsv/pipe/markdown -> all-string DataFrame.

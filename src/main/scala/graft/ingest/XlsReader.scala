@@ -2,8 +2,6 @@ package graft.ingest
 
 import scala.collection.mutable.{ArrayBuffer, LongMap}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-
 /** Minimal legacy-Excel (.xls, BIFF8) reader over JDK built-ins only —
   * the reference accepts `.xls` through xlsx.readFile
   * (reference backend/index.js:94; upload accept list
@@ -20,24 +18,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   * Semantics mirror [[ExcelReader]]: first sheet only, all cells as
   * strings, integer-valued floats trimmed ("3.0" → "3"), empty cells
-  * null after header padding. Older BIFF5/7 workbooks (a `Book` stream)
+  * null after header padding — [[ExcelReader.read]] routes `.xls`
+  * files here for the grid and builds the table the same way for
+  * both. Older BIFF5/7 workbooks (a `Book` stream)
   * and any parse failure surface the typed convert-to-.xlsx/CSV error
   * instead of a deep binary error.
   */
 object XlsReader {
-
-  def read(spark: SparkSession, path: String, sheetRows: Int = Int.MaxValue): DataFrame = {
-    val rows = readRows(path, sheetRows)
-    if (rows.isEmpty)
-      throw new IllegalArgumentException(s"File appears empty: $path")
-    val (keep, schema) = Readers.dedupeNames(rows.head.toIndexedSeq)
-    val data = rows.tail.map { r =>
-      Row.fromSeq(schema.indices.map(i => if (i < r.length && r(i).nonEmpty) r(i) else null))
-    }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(data.toIndexedSeq), schema)
-    df.select(keep.map(graft.ops.Cleanse.colRef).toIndexedSeq: _*)
-  }
 
   /** Raw grid, padded to the header row's width (ExcelReader parity). */
   private[graft] def readRows(path: String, maxRows: Int): Seq[Array[String]] = {

@@ -1487,7 +1487,7 @@ object Corpus {
     * token count (`base`: a `(shard, _gp_base)` frame) added to every
     * prefix sum — the single bin/off formula shared by the batch
     * operator (base = None) and the streaming twin
-    * ([[graft.streaming.Streams.packBatches]], base = the ledger's
+    * ([[graft.streaming.Streams.pack]] stage, base = the ledger's
     * running totals), so the two cannot drift.
     */
   private[graft] def packSequencesFrom(

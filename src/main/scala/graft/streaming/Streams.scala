@@ -399,64 +399,98 @@ object Streams {
     */
   def perBatch(docs: DataFrame)(op: DataFrame => DataFrame)(
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    runBatches(docs, onBatch)((batch, _) => Staged(op(batch)))
+    run(docs, onBatch)((batch, _) => Staged(op(batch)))
 
   /** One micro-batch after one stage: `admitted` goes on to the next
     * stage (or to `onBatch`) without its `carried` columns; each
     * `(ledgerDir, rows)` pair is derived from `admitted` and appended
     * under the batch id once `onBatch` has returned.
     */
-  private final case class Staged(
+  final case class Staged(
       admitted: DataFrame,
       ledgers: Seq[(String, DataFrame)] = Nil,
       carried: Seq[String] = Nil)
 
-  /** One step of a micro-batch: (rows, batch id) → staged result. */
-  private type Stage = (DataFrame, Long) => Staged
-
-  /** The micro-batch commit rule every deployment here runs on. Per
-    * batch, inside [[graft.ops.Caches.scoped]] (so every cache the
-    * stages and their operators register is released with the batch):
-    * run `stages` in order, each on the previous one's admitted rows;
-    * persist a stage's frame when its ledgers will read it again, and
-    * always the last one; hand the last to `onBatch`; then write every
-    * ledger. Ledger rows therefore record exactly the rows the sink
-    * saw, read from the persisted frame instead of re-running a probe.
-    * The writes go last stage first: a parquet write re-caches every
-    * cached frame whose plan reads the written directory, and a
-    * stage's frame reads the ledgers of its own and earlier stages, so
-    * in this order no ledger's source is invalidated before it is
-    * read. Writes happen only after the sink returns, and each
-    * overwrites its own `batch_id=N` partition, so an at-least-once
-    * replay — which [[readLedger]] keeps out of its own prior set —
-    * reproduces its decisions and leaves exactly-once ledgers (the
-    * [[graft.sink.Snapshots]] replay posture).
+  /** One step of a micro-batch: (rows, batch id) → staged result. The
+    * constructors below build the engine's stages (admission, quota,
+    * packing, decontamination, the curation head); any function of
+    * this shape composes with them in [[run]].
     */
-  private def runBatches(docs: DataFrame, onBatch: (DataFrame, Long) => Unit)(
+  type Stage = (DataFrame, Long) => Staged
+
+  /** The streaming runner every deployment here is one call of — e.g.
+    * `run(docs, sink)(nearAdmission(sigs, "text", "doc_id", dir),
+    * domainQuota("dom", "ord", "toks", budgets, quotaDir))`. Per batch,
+    * inside [[graft.ops.Caches.scoped]] (so every cache the stages and
+    * their operators register is released with the batch): run `stages`
+    * in order, each on the previous one's admitted rows; persist a
+    * stage's frame when its ledgers will read it again, and always the
+    * last one; hand the last to `onBatch`; then write every ledger.
+    * Ledger rows therefore record exactly the rows the sink saw, read
+    * from the persisted frame instead of re-running a probe. The writes
+    * go last stage first: a parquet write re-caches every cached frame
+    * whose plan reads the written directory, and a stage's frame reads
+    * the ledgers of its own and earlier stages, so in this order no
+    * ledger's source is invalidated before it is read. Writes happen
+    * only after the sink returns, and each overwrites its own
+    * `batch_id=N` partition, so an at-least-once replay — which
+    * [[readLedger]] keeps out of its own prior set — reproduces its
+    * decisions and leaves exactly-once ledgers (the
+    * [[graft.sink.Snapshots]] replay posture).
+    *
+    * `onCounts`, when given, receives per batch the input row count
+    * followed by each stage's admitted count — the admission funnel a
+    * production crawl monitors (a collapsing curation rate or an
+    * exploding near-dup rate is how filter drift and crawler loops
+    * surface). The counts are taken after `onBatch` returns and before
+    * the ledger writes: persisted stage frames count from the cache,
+    * the input and unpersisted frames are recomputed. None pays nothing.
+    */
+  def run(
+      docs: DataFrame,
+      onBatch: (DataFrame, Long) => Unit,
+      onCounts: Option[(Seq[Long], Long) => Unit] = None)(
       stages: Stage*): DataStreamWriter[Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       graft.ops.Caches.scoped {
         val ledgers = Seq.newBuilder[(String, DataFrame)]
+        val frames = Seq.newBuilder[DataFrame] += batch
         val out = stages.zipWithIndex.foldLeft(batch) { case (in, (stage, i)) =>
           val s = stage(in, batchId)
           ledgers ++= s.ledgers
           val kept =
             if (s.ledgers.nonEmpty || i == stages.size - 1) graft.ops.Caches.owned(s.admitted)
             else s.admitted
+          frames += kept
           kept.drop(s.carried: _*)
         }
         onBatch(out, batchId)
+        onCounts.foreach(_(frames.result().map(_.count()), batchId))
         ledgers.result().reverseIterator.foreach { case (dir, rows) =>
           commitLedger(dir, rows, batchId)
         }
       }
     }
 
-  /** Streaming incremental exact dedup of a document stream against a
-    * STATIC corpus AND against everything the stream itself has already
-    * admitted — the production crawl-ingest shape
+  /** The admission rule every probe stage ends in: the `batch` rows
+    * whose `idCol` is non-null and in none of the `dropped` id sets (one
+    * id column each) — one anti-join against their union. Rows sharing
+    * an id are admitted or dropped together; a null id is never
+    * admitted (no probe can drop it and no ledger can record it by id).
+    */
+  private def admitExcept(batch: DataFrame, idCol: String, dropped: DataFrame*): DataFrame =
+    batch.filter(graft.ops.Cleanse.colRef(idCol).isNotNull)
+      .join(dropped.map(_.toDF("_g_drop")).reduce(_ unionByName _),
+        graft.ops.Cleanse.colRef(idCol) === col("_g_drop"), "left_anti")
+
+  /** Exact-dedup admission of a document stream against a STATIC corpus
+    * AND against everything the stream itself has already admitted —
+    * the production crawl-ingest shape
     * ([[graft.operators.Corpus.incrementalDedup]] per micro-batch, plus
-    * a durable content-hash ledger for cross-batch dedup).
+    * a durable content-hash ledger for cross-batch dedup): batch rows
+    * minus corpus-hash matches minus ledger matches, keep-first by id
+    * within the batch (deterministic under repartitioning).
+    * `corpusHashes` is the [[dedupCorpusHashes]] frame.
     *
     * Why not streaming `dropDuplicates`: the state store would hold
     * every content hash ever seen with no watermark to expire them
@@ -464,31 +498,39 @@ object Streams {
     * inside the streaming engine. The ledger here is a plain parquet
     * directory of md5 hashes partitioned by micro-batch id — SMALL
     * (32 bytes per admitted doc), shared-storage-friendly, and
-    * restart-safe under the [[runBatches]] replay rule. Within a batch,
-    * first-by-id wins among same-content rows (deterministic under
-    * repartitioning).
+    * restart-safe under the [[run]] replay rule.
     *
     * Scale: each micro-batch pays one anti-join against the static
     * corpus hashes and one against the ledger — both keyed equi-joins
-    * on 16-byte hashes; persist the corpus-hash projection for long
-    * runs (the model-persist advice). At crawl scale the ledger is
-    * orders of magnitude smaller than the corpus it summarizes.
+    * on 16-byte hashes. At crawl scale the ledger is orders of
+    * magnitude smaller than the corpus it summarizes.
     */
-  def incrementalDedupBatches(
-      docs: DataFrame,
-      corpus: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val corpusSeen = dedupCorpusHashes(corpus, textCol)
-    runBatches(docs, onBatch)(exactAdmitBatch(_, _, corpusSeen, textCol, idCol, ledgerDir))
-  }
+  def exactAdmission(
+      corpusHashes: DataFrame, textCol: String, idCol: String, ledgerDir: String): Stage =
+    (batch, batchId) => {
+      val seen = readLedger(batch.sparkSession, ledgerDir,
+        ledgerSchema(ContentH -> StringType), batchId).select(col(ContentH))
+      // null text hashes as empty text: md5(null) is null, and null
+      // keys pass EVERY anti-join (EqualTo never matches them) — a
+      // null-text doc would be re-admitted in every batch forever
+      val fresh = batch
+        .withColumn(ContentH, md5(coalesce(graft.ops.Cleanse.colRef(textCol), lit(""))))
+        // first-by-id among same-content rows WITHIN the batch — a
+        // deterministic keep-first, not dropDuplicates' arbitrary one
+        .withColumn("_graft_rk", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col(ContentH))
+            .orderBy(graft.ops.Cleanse.colRef(idCol))))
+        .filter(col("_graft_rk") === 1).drop("_graft_rk")
+        .join(corpusHashes, Seq(ContentH), "left_anti")
+        .join(seen, Seq(ContentH), "left_anti")
+      Staged(fresh, Seq(ledgerDir -> fresh.select(col(ContentH))), Seq(ContentH))
+    }
 
   /** Distinct content-hash projection of a static corpus — the
-    * persistable unit for [[incrementalDedupBatches]] /
-    * [[curateIncrementalBatches]] (16 bytes per distinct content;
-    * unpersisted, every micro-batch re-hashes the whole corpus).
+    * persistable unit for [[exactAdmission]] (16 bytes per distinct
+    * content; unpersisted, every micro-batch re-hashes the whole
+    * corpus).
     */
   def dedupCorpusHashes(corpus: DataFrame, textCol: String): DataFrame =
     corpus.select(
@@ -496,37 +538,6 @@ object Streams {
       .distinct()
 
   private val ContentH = "_graft_content_h"
-
-  /** Exact-dedup admission stage (the [[incrementalDedupBatches]] core,
-    * chained by [[curateIncrementalBatches]]): batch rows minus
-    * corpus-hash matches minus ledger matches, keep-first by id within
-    * the batch. The admitted rows carry [[ContentH]] for the ledger.
-    */
-  private def exactAdmitBatch(
-      batch: DataFrame,
-      batchId: Long,
-      corpusHashes: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String): Staged = {
-    val seen = readLedger(batch.sparkSession, ledgerDir,
-      ledgerSchema(ContentH -> StringType), batchId).select(col(ContentH))
-    // null text hashes as empty text: md5(null) is null, and null
-    // keys pass EVERY anti-join (EqualTo never matches them) — a
-    // null-text doc would be re-admitted in every batch forever
-    val fresh = batch
-      .withColumn(ContentH, md5(coalesce(graft.ops.Cleanse.colRef(textCol), lit(""))))
-      // first-by-id among same-content rows WITHIN the batch — a
-      // deterministic keep-first, not dropDuplicates' arbitrary one
-      .withColumn("_graft_rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col(ContentH))
-          .orderBy(graft.ops.Cleanse.colRef(idCol))))
-      .filter(col("_graft_rk") === 1).drop("_graft_rk")
-      .join(corpusHashes, Seq(ContentH), "left_anti")
-      .join(seen, Seq(ContentH), "left_anti")
-    Staged(fresh, Seq(ledgerDir -> fresh.select(col(ContentH))), Seq(ContentH))
-  }
 
   /** A ledger schema: `fields` plus the `batch_id` partition column. */
   private def ledgerSchema(fields: (String, DataType)*): StructType =
@@ -575,15 +586,10 @@ object Streams {
   private val quotaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Map[String, Long])]()
 
-  /** Test/ops hook: drop cached quota totals (e.g. after deleting a
-    * ledger directory out from under a session).
-    */
-  private[graft] def clearQuotaCache(): Unit = quotaCache.clear()
-
   /** Append one ledger's rows under `batchId`. A quota ledger — its dir
-    * holds a running-total entry, which [[domainQuotaBatch]] seeds in
-    * the same batch — commits through [[commitQuotaLedger]] so the
-    * entry stays current; every other ledger is a plain append.
+    * holds a running-total entry, which [[domainQuota]] seeds in the
+    * same batch — commits through [[commitQuotaLedger]] so the entry
+    * stays current; every other ledger is a plain append.
     */
   private def commitLedger(dir: String, rows: DataFrame, batchId: Long): Unit = {
     val stamped = rows.withColumn("batch_id", lit(batchId))
@@ -630,9 +636,9 @@ object Streams {
       .parquet(ledgerDir)
 
   /** Streaming incremental NEAR-dup admission — the MinHash sibling of
-    * [[incrementalDedupBatches]], the production crawl shape when
-    * near-copies (boilerplate variants, re-rendered pages) must be
-    * caught, not just byte-identical text. Each micro-batch:
+    * [[exactAdmission]], the production crawl shape when near-copies
+    * (boilerplate variants, re-rendered pages) must be caught, not just
+    * byte-identical text. Each micro-batch:
     *
     *  1. signatures: the fused MinHash expression per doc
     *     ([[graft.operators.Dedup.minhashSignature]] — numPerms longs);
@@ -653,14 +659,14 @@ object Streams {
     *     bounded by batch band rows × prior bucket size; a mass-
     *     boilerplate prior bucket (10⁶ byte-identical pages) is the
     *     one way it degenerates, and the cure is compositional: run
-    *     exact dedup in front (the [[curateIncrementalBatches]] chain
-    *     does), so the prior set holds at most one copy of any exact
-    *     content and hot prior buckets are genuine near-dup families,
-    *     which admission is supposed to compare against;
-    *  4. survivors go to `onBatch` (original columns) and their
-    *     `(id, sig)` rows — the signatures the survivors carried
-    *     through the probe — land in the ledger's `batch_id=N`
-    *     partition ([[runBatches]] replay rule).
+    *     [[exactAdmission]] in front (the [[curationHead]] does), so
+    *     the prior set holds at most one copy of any exact content and
+    *     hot prior buckets are genuine near-dup families, which
+    *     admission is supposed to compare against;
+    *  4. survivors ([[admitExcept]]) go on with their original columns
+    *     and their `(id, sig)` rows — the signatures the survivors
+    *     carried through the probe — land in the ledger's `batch_id=N`
+    *     partition ([[run]] replay rule).
     *
     * For banding planned from a target threshold, pass
     * `bands = Dedup.lshPlan(threshold, numPerms)._1`. Ledger rows are
@@ -676,337 +682,21 @@ object Streams {
     * content — without the routing every degenerate doc shares the
     * identical sentinel signature, estimates Jaccard 1.0 against all
     * others, and all but the first would be silently dropped forever.
-    * Compose [[incrementalDedupBatches]] upstream for exact dedup of
-    * degenerate text. The corpus side takes the
-    * [[nearDupCorpusSignatures]] frame — the persistable unit IS the
-    * signature projection, the lesson the scoring deployments
-    * measured. Fail-fast: corpusSigs built with a different numPerms
-    * would silently band nothing (slice lengths disagree), so
-    * signature length is probed once at writer construction (one
-    * 1-row job) and mismatches throw.
+    * Compose [[exactAdmission]] upstream for exact dedup of degenerate
+    * text. Fail-fast: corpusSigs built with a different numPerms would
+    * silently band nothing (slice lengths disagree), so signature
+    * length is probed once at construction (one 1-row job) and
+    * mismatches throw.
     */
-  def incrementalNearDupBatches(
-      docs: DataFrame,
+  def nearAdmission(
       corpusSigs: DataFrame,
       textCol: String,
       idCol: String,
       ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
       threshold: Double = 0.7,
       numPerms: Int = 64,
       bands: Int = 8,
-      maxBand: Int = 500): DataStreamWriter[Row] = {
-    requireSigCompat(corpusSigs, threshold, numPerms, bands)
-    runBatches(docs, onBatch)(nearAdmitBatch(_, _, corpusSigs, textCol, idCol,
-      ledgerDir, threshold, numPerms, bands, maxBand))
-  }
-
-  /** Corpus signature projection for [[incrementalNearDupBatches]]:
-    * `(id, sig)` with sig = the numPerms-long MinHash signature.
-    * Compute ONCE, `persist()`, and hand to the stream — an
-    * unpersisted frame re-runs the corpus tokenize + 64-perm MinHash
-    * in EVERY micro-batch's prior-set probe (measured: the whole
-    * stream crawls at ~200 input rows/s either way until this frame
-    * is cached, because signature recompute dwarfs the joins).
-    */
-  def nearDupCorpusSignatures(
-      corpus: DataFrame, textCol: String, idCol: String,
-      numPerms: Int = 64): DataFrame = {
-    val cr = graft.ops.Cleanse.colRef _
-    corpus.select(
-      cr(idCol).as("id"),
-      graft.operators.Dedup.minhashSignature(cr(textCol), numPerms).as("sig"))
-  }
-
-  /** Perceptual-fingerprint projection of a static MEDIA corpus —
-    * `(id, fp)`, one 64-bit dHash (images) or energy-hash (audio) per
-    * decodable item — the persistable unit for
-    * [[incrementalMediaNearDupBatches]] (8 bytes per item; unpersisted,
-    * every micro-batch re-decodes the whole corpus — the
-    * [[nearDupCorpusSignatures]] lesson, and decode dwarfs signature
-    * hashing). Undecodable items are dropped: they carry no perceptual
-    * identity to probe against.
-    */
-  def mediaCorpusFingerprints(
-      corpus: DataFrame, mediaType: String = "image"): DataFrame =
-    mediaFingerprint(mediaType)(corpus)
-      .filter(col("fp").isNotNull).select(col("id"), col("fp"))
-
-  /** The `(id, fp)` fingerprint operator for `mediaType`. */
-  private def mediaFingerprint(mediaType: String): DataFrame => DataFrame =
-    mediaType match {
-      case "image" => graft.operators.Multimodal.imageFingerprints _
-      case "audio" => graft.operators.Multimodal.audioFingerprints _
-      case other => throw new IllegalArgumentException(
-        s"mediaType must be image|audio, got '$other'")
-    }
-
-  /** Streaming incremental MEDIA near-dup admission — the perceptual
-    * sibling of [[incrementalNearDupBatches]] for image/audio streams
-    * (the LAION-style crawl shape: re-encoded, re-leveled, resized
-    * copies of already-held media must not be admitted twice). Each
-    * micro-batch of canonical media rows (`media_id`, `content`, ...):
-    *
-    *  1. fingerprints: one 64-bit perceptual hash per item
-    *     ([[graft.operators.Multimodal.imageFingerprints]] dHash /
-    *     [[graft.operators.Multimodal.audioFingerprints]] energy hash)
-    *     — one decode scan, the only pass that touches bytes;
-    *  2. WITHIN-batch: pigeonhole-banded hamming pairs
-    *     ([[graft.operators.Dedup.simhashPairs]]) + the pair rule — an
-    *     item drops when ANY lower-id batch item is within
-    *     `maxHamming`;
-    *  3. vs PRIOR: the bipartite banding
-    *     ([[graft.operators.Dedup.simhashCrossPairs]]) against the
-    *     static corpus's PRECOMPUTED fingerprints
-    *     ([[mediaCorpusFingerprints]] — persist it) plus the ledger of
-    *     previously admitted fingerprints;
-    *  4. survivors go to `onBatch` (original columns) and their
-    *     `(media_id, fp)` land in the ledger's `batch_id=N` partition
-    *     ([[runBatches]] replay rule).
-    *
-    * UNDECODABLE items (null fingerprint) are admitted but never
-    * ledgered — the degenerate-text routing: a null carries no
-    * perceptual identity, and banding sentinel values would collapse
-    * every undecodable item into one false dup family. Ledger rows are
-    * 8 bytes of fingerprint per admitted item — the cheapest ledger of
-    * the admission family (vs 16-byte md5, numPerms×8-byte MinHash).
-    */
-  def incrementalMediaNearDupBatches(
-      media: DataFrame,
-      corpusFps: DataFrame,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      maxHamming: Int = 3,
-      mediaType: String = "image"): DataStreamWriter[Row] = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"maxHamming must be in [0, 7] (64-bit pigeonhole chunks), got $maxHamming")
-    // validated at writer construction, not inside the first
-    // micro-batch: a typo'd mediaType must fail here, not as a
-    // streaming-query error minutes later
-    val fingerprint = mediaFingerprint(mediaType)
-    runBatches(media, onBatch)(
-      mediaAdmitBatch(_, _, fingerprint, corpusFps, ledgerDir, maxHamming))
-  }
-
-  /** Media near-dup admission stage (the
-    * [[incrementalMediaNearDupBatches]] core).
-    */
-  private def mediaAdmitBatch(
-      batch: DataFrame,
-      batchId: Long,
-      fingerprint: DataFrame => DataFrame,
-      corpusFps: DataFrame,
-      ledgerDir: String,
-      maxHamming: Int): Staged = {
-    // consumed by both probes and the ledger rows; released with the
-    // batch's scope, together with the operator caches simhashPairs /
-    // simhashCrossPairs register per call (a 24/7 stream would
-    // otherwise grow the registry by one cached frame per batch)
-    val fps = graft.ops.Caches.owned(fingerprint(batch))
-    val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
-      ledgerSchema("media_id" -> LongType, "fp" -> LongType), batchId)
-      .select(col("media_id").as("id"), col("fp"))
-    val nn = fps.filter(col("fp").isNotNull).select(col("id"), col("fp"))
-    // the drop rule is pure existence ("does a lower-id batch item /
-    // ANY prior item sit within maxHamming"), so the flood guards
-    // are exact here: simhashPairs' identity star edges preserve
-    // the within-batch rule, and collapsing equal PRIOR
-    // fingerprints to one representative (a mass-duplicated corpus
-    // would otherwise be a permanent hot bucket probed every
-    // micro-batch) cannot change whether a probe matches
-    val inBatchDropped = graft.operators.Dedup.simhashPairs(nn, maxHamming)
-      .select(col("id_b").as("media_id")).distinct()
-    val vsPriorDropped = graft.operators.Dedup.simhashCrossPairs(
-      nn,
-      graft.operators.Dedup.collapseIdentityFps(
-        corpusFps.unionByName(ledgerFps)),
-      maxHamming)
-      .select(col("id_a").as("media_id")).distinct()
-    val freshIds = fps.select(col("id").as("media_id"))
-      .join(inBatchDropped, Seq("media_id"), "left_anti")
-      .join(vsPriorDropped, Seq("media_id"), "left_anti")
-    val fresh = batch.join(freshIds, Seq("media_id"), "left_semi")
-    Staged(fresh, Seq(ledgerDir -> nn.select(col("id").as("media_id"), col("fp"))
-      .join(fresh.select(col("media_id")), Seq("media_id"), "left_semi")))
-  }
-
-  /** Per-frame fingerprint frame of a static VIDEO corpus —
-    * `(media_id, frame_idx, fp)` via
-    * [[graft.operators.Multimodal.videoFingerprints]] (demux → k
-    * evenly-spaced frames → dHash64, one fused scan) — the persistable
-    * unit for [[incrementalVideoNearDupBatches]]: ≤ k longs per video;
-    * unpersisted, every micro-batch re-demuxes and re-decodes the
-    * whole corpus. Undemuxable/undecodable corpus items contribute no
-    * frames (quarantine — nothing to probe against). Build it with the
-    * SAME `k` the admission writer uses: frame composite keys are
-    * `media_id·k + frame_idx`, so a mismatched k mis-buckets nothing
-    * silently — it shifts every composite id.
-    */
-  def videoCorpusFingerprints(corpus: DataFrame, k: Int = 8): DataFrame =
-    graft.operators.Multimodal.videoFingerprints(corpus, k)
-
-  /** Streaming incremental VIDEO near-dup admission — the
-    * frame-evidence sibling of [[incrementalMediaNearDupBatches]]:
-    * a re-encoded / rescaled / re-containered copy of an already-held
-    * video must not be admitted twice, and — unlike single-fingerprint
-    * media — one coincidentally matching frame must not drop an
-    * unrelated video. Each micro-batch of `(media_id, content, ...)`:
-    *
-    *  1. [[graft.operators.Multimodal.videoFingerprints]]: demux →
-    *     k sampled frames → dHash64, ONE decode scan;
-    *  2. WITHIN-batch: the exact pigeonhole banding over composite
-    *     `media_id·k + frame_idx` keys
-    *     ([[graft.operators.Dedup.simhashPairs]]) → per-video-pair
-    *     evidence count — a video drops when ≥ `minMatches` of its
-    *     frames pair with a LOWER-id batch video (composite id order
-    *     implies video id order for frame_idx < k);
-    *  3. vs PRIOR: the bipartite banding
-    *     ([[graft.operators.Dedup.simhashCrossPairs]]) against the
-    *     corpus frame table ([[videoCorpusFingerprints]] — persist it)
-    *     plus the ledger of previously admitted frames, same
-    *     ≥ `minMatches` evidence rule (a batch video re-using a held
-    *     media_id with identical frames self-pairs and drops — that IS
-    *     a duplicate);
-    *  4. survivors go to `onBatch`; their per-frame `(media_id,
-    *     frame_idx, fp)` rows land in the ledger's `batch_id=N`
-    *     partition ([[runBatches]] replay rule).
-    *
-    * ZERO-FRAME videos (undemuxable container, no decodable frame) are
-    * admitted but never ledgered — the undecodable-media routing: no
-    * perceptual identity, and any sentinel would collapse them into one
-    * false dup family. Evidence counts qualifying frame PAIRS (like
-    * [[graft.operators.Multimodal.videoNearDups]]), so a prior video
-    * with near-identical repeated frames can reach the floor against
-    * one batch frame — acceptable for admission (such a video is
-    * boilerplate-still anyway). Requires non-negative `media_id` in
-    * both stream and corpus (the composite key contract).
-    *
-    * Scale: one demux+decode scan per batch; both probes are the
-    * banded joins (never all-pairs), their outputs already pair-pruned
-    * before the tiny evidence groupBy; ledger rows are ≤ k longs per
-    * admitted video.
-    */
-  def incrementalVideoNearDupBatches(
-      media: DataFrame,
-      corpusFps: DataFrame,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      k: Int = 8,
-      maxHamming: Int = 3,
-      minMatches: Int = 2): DataStreamWriter[Row] = {
-    require(k > 0, "k must be positive")
-    frameEvidenceBatches(
-      media, corpusFps, ledgerDir, onBatch, k.toLong, maxHamming, minMatches,
-      graft.operators.Multimodal.videoFingerprints(_, k))
-  }
-
-  /** Streaming windowed-AUDIO near-dup admission — the long-clip
-    * sibling: [[graft.operators.Multimodal.audioFingerprintWindows]]
-    * per micro-batch (fixed-length segments, so tail-appended / padded
-    * copies of held clips drop on their shared leading segments),
-    * through the same frame-evidence admission stage as video. Corpus
-    * frame = [[graft.operators.Multimodal.audioFingerprintWindows]]
-    * over the held clips with the SAME `segSamples`/`maxSegments`;
-    * zero-segment (non-PCM16) items are admitted, never ledgered.
-    */
-  def incrementalAudioWindowedNearDupBatches(
-      media: DataFrame,
-      corpusFps: DataFrame,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      segSamples: Int = 65536,
-      maxSegments: Int = 64,
-      maxHamming: Int = 3,
-      minMatches: Int = 2): DataStreamWriter[Row] = {
-    require(segSamples >= 65, "segSamples must be >= 65")
-    require(maxSegments > 0, "maxSegments must be positive")
-    frameEvidenceBatches(
-      media, corpusFps, ledgerDir, onBatch, maxSegments.toLong,
-      maxHamming, minMatches,
-      graft.operators.Multimodal
-        .audioFingerprintWindows(_, segSamples, maxSegments))
-  }
-
-  private def frameEvidenceBatches(
-      media: DataFrame,
-      corpusFps: DataFrame,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      kL: Long,
-      maxHamming: Int,
-      minMatches: Int,
-      fingerprint: DataFrame => DataFrame): DataStreamWriter[Row] = {
-    require(minMatches > 0, "minMatches must be positive")
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"maxHamming must be in [0, 7] (64-bit pigeonhole chunks), got $maxHamming")
-    runBatches(media, onBatch)(frameAdmitBatch(_, _, fingerprint, corpusFps,
-      ledgerDir, kL, maxHamming, minMatches))
-  }
-
-  /** Frame-evidence admission stage (the video / windowed-audio core). */
-  private def frameAdmitBatch(
-      batch: DataFrame,
-      batchId: Long,
-      fingerprint: DataFrame => DataFrame,
-      corpusFps: DataFrame,
-      ledgerDir: String,
-      kL: Long,
-      maxHamming: Int,
-      minMatches: Int): Staged = {
-    val M = graft.operators.Multimodal
-    val maxFrameDf = 100
-    // consumed by both probes and the ledger rows; released with the
-    // batch's scope (see mediaAdmitBatch)
-    val fps = graft.ops.Caches.owned(fingerprint(batch))
-    val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
-      ledgerSchema("media_id" -> LongType, "frame_idx" -> IntegerType, "fp" -> LongType),
-      batchId).select(col("media_id"), col("frame_idx"), col("fp"))
-    // the boilerplate-frame guard (Multimodal.frameEvidencePairs'
-    // df cap) applies per side: batch frames by batch-local df,
-    // the prior (corpus + ledger) by its own df — a fade-to-black
-    // frame held by thousands of corpus videos must not be probed
-    // by every micro-batch forever. The prior-side cap costs one
-    // groupBy over a frame table the cross-banding already scans
-    // per batch. maxIdentity = Int.MaxValue skips the identity
-    // pre-collapse (which would undercount evidence): the df cap
-    // already bounds every surviving identity group.
-    val batchFrames = M.compositeFrameKeys(M.frameDfCap(fps, maxFrameDf), kL)
-    val priorFrames = M.compositeFrameKeys(
-      M.frameDfCap(corpusFps.unionByName(ledgerFps), maxFrameDf), kL)
-    def evidenced(pairs: DataFrame, dropSide: String): DataFrame = pairs
-      .select(
-        expr(s"id_a DIV $kL").as("vid_a"),
-        expr(s"id_b DIV $kL").as("vid_b"))
-      .groupBy(col("vid_a"), col("vid_b"))
-      .agg(count(lit(1)).as("n_matched"))
-      .filter(col("n_matched") >= minMatches)
-      .select(col(dropSide).as("media_id")).distinct()
-    val inBatchDropped = evidenced(
-      graft.operators.Dedup.simhashPairs(batchFrames, maxHamming,
-        maxIdentity = Int.MaxValue)
-        .filter(expr(s"id_a DIV $kL") =!= expr(s"id_b DIV $kL")),
-      dropSide = "vid_b") // composite id_a < id_b ⇒ vid_a < vid_b
-    val vsPriorDropped = evidenced(
-      graft.operators.Dedup.simhashCrossPairs(
-        batchFrames, priorFrames, maxHamming),
-      dropSide = "vid_a") // id_a = the probing batch video
-    val freshIds = batch.select(col("media_id"))
-      .join(inBatchDropped, Seq("media_id"), "left_anti")
-      .join(vsPriorDropped, Seq("media_id"), "left_anti")
-    val fresh = batch.join(freshIds, Seq("media_id"), "left_semi")
-    Staged(fresh, Seq(ledgerDir -> fps
-      .join(fresh.select(col("media_id")), Seq("media_id"), "left_semi")
-      .select(col("media_id"), col("frame_idx"), col("fp"))))
-  }
-
-  /** Fail-fast parameter checks shared by the near-dup deployments:
-    * corpusSigs built with a different numPerms would silently band
-    * nothing on the corpus side (mismatched slice lengths), so
-    * signature length is probed once at writer construction (one 1-row
-    * job).
-    */
-  private def requireSigCompat(
-      corpusSigs: DataFrame, threshold: Double, numPerms: Int, bands: Int): Unit = {
+      maxBand: Int = 500): Stage = {
     require(numPerms % bands == 0, "numPerms must divide into bands")
     require(threshold > 0 && threshold <= 1)
     corpusSigs.select(size(col("sig")).as("n")).limit(1).collect()
@@ -1015,24 +705,6 @@ object Streams {
           s"corpusSigs signature length ${r.getInt(0)} != numPerms $numPerms " +
             "— build nearDupCorpusSignatures with the same numPerms")
       }
-  }
-
-  /** MinHash near-dup admission stage (the [[incrementalNearDupBatches]]
-    * core, chained by [[curateIncrementalBatches]]). The admitted rows
-    * carry their signature as `_gn_sig`, so the ledger reads it from
-    * the persisted frame instead of re-running the probe.
-    */
-  private def nearAdmitBatch(
-      batch: DataFrame,
-      batchId: Long,
-      corpusSigs: DataFrame,
-      textCol: String,
-      idCol: String,
-      ledgerDir: String,
-      threshold: Double,
-      numPerms: Int,
-      bands: Int,
-      maxBand: Int): Staged = {
     val rows = numPerms / bands
     val cr = graft.ops.Cleanse.colRef _
     // zero-shingle sentinel: minhashFromString leaves every slot at
@@ -1057,198 +729,346 @@ object Streams {
     def estSim(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       size(filter(zip_with(a, b, (x, y) => x === y), p => p))
         .cast("double") / lit(numPerms.toDouble)
-    // ledger id field takes the BATCH's id type (string/int/long ids
-    // all round-trip; a hardcoded LongType read would fail at the
-    // second batch's ledger read for any non-long id column)
-    val idType = batch.select(cr(idCol)).schema.head.dataType
-    val ledgerSigs = readLedger(batch.sparkSession, ledgerDir,
-      ledgerSchema("_gn_id" -> idType, "_gn_sig" -> ArrayType(LongType)), batchId)
-      .select(col("_gn_id"), col("_gn_sig"))
-    val signed = batch.withColumn("_gn_sig",
-      graft.operators.Dedup.minhashSignature(cr(textCol), numPerms))
-    val bSigs = signed.select(cr(idCol).as("_gn_id"), col("_gn_sig"))
-    val bBand = banded(bSigs)
-    // within-batch pair rule: drop _gn_id when a LOWER id in the same
-    // batch shares a band and the estimated Jaccard clears threshold.
-    // Candidate generation reuses the batch path's bucket-capped core
-    // ([[graft.operators.Dedup.bandedCandidates]], round 13): a
-    // micro-batch full of near-identical crawl rows previously made
-    // one band quadratic in the banded self-join; the cap bounds each
-    // bucket's local pair fan-out at maxBand members — the same
-    // one-sided tradeoff the batch LSH pipeline documents (oversized
-    // buckets are dropped, never partially searched)
-    val inBatchCand = graft.operators.Dedup.bandedCandidates(
-      bBand.select(col("_gn_id").as("id"),
-        col("_gn_bi").as("band"), col("_gn_bh").as("bh")),
-      maxBand)
-    val inBatchDropped = inBatchCand
-      .join(bSigs.select(col("_gn_id").as("id_a"), col("_gn_sig").as("sa")),
-        Seq("id_a"))
-      .join(bSigs.select(col("_gn_id").as("id_b"), col("_gn_sig").as("sb")),
-        Seq("id_b"))
-      .filter(estSim(col("sa"), col("sb")) >= threshold)
-      .select(col("id_b").as("_gn_id")).distinct()
-    val priorBand = banded(
-      corpusSigs.select(col("id").as("_gn_id"), col("sig").as("_gn_sig"))
-        .unionByName(ledgerSigs))
-    val vsPriorDropped = bBand.as("x").join(priorBand.as("p"),
-        col("x._gn_bi") === col("p._gn_bi") &&
-          col("x._gn_bh") === col("p._gn_bh"))
-      .select(col("x._gn_sig").as("sa"), col("p._gn_sig").as("sb"),
-        col("x._gn_id").as("_gn_id"))
-      .filter(estSim(col("sa"), col("sb")) >= threshold)
-      .select(col("_gn_id")).distinct()
-    val freshIds = bSigs.select(col("_gn_id"))
-      .join(inBatchDropped, Seq("_gn_id"), "left_anti")
-      .join(vsPriorDropped, Seq("_gn_id"), "left_anti")
-    val fresh = signed.join(
-      freshIds.withColumnRenamed("_gn_id", idCol), Seq(idCol), "left_semi")
-    // degenerate docs are admitted but never ledgered: their sentinel
-    // signature carries no content identity
-    Staged(fresh, Seq(ledgerDir -> fresh.filter(!degenerate(col("_gn_sig")))
-      .select(cr(idCol).as("_gn_id"), col("_gn_sig"))), Seq("_gn_sig"))
+    (batch, batchId) => {
+      // ledger id field takes the BATCH's id type (string/int/long ids
+      // all round-trip; a hardcoded LongType read would fail at the
+      // second batch's ledger read for any non-long id column)
+      val idType = batch.select(cr(idCol)).schema.head.dataType
+      val ledgerSigs = readLedger(batch.sparkSession, ledgerDir,
+        ledgerSchema("_gn_id" -> idType, "_gn_sig" -> ArrayType(LongType)), batchId)
+        .select(col("_gn_id"), col("_gn_sig"))
+      val signed = batch.withColumn("_gn_sig",
+        graft.operators.Dedup.minhashSignature(cr(textCol), numPerms))
+      val bSigs = signed.select(cr(idCol).as("_gn_id"), col("_gn_sig"))
+      val bBand = banded(bSigs)
+      // within-batch pair rule: drop _gn_id when a LOWER id in the same
+      // batch shares a band and the estimated Jaccard clears threshold.
+      // Candidate generation reuses the batch path's bucket-capped core
+      // ([[graft.operators.Dedup.bandedCandidates]], round 13): the cap
+      // bounds each bucket's local pair fan-out at maxBand members —
+      // the same one-sided tradeoff the batch LSH pipeline documents
+      // (oversized buckets are dropped, never partially searched)
+      val inBatchCand = graft.operators.Dedup.bandedCandidates(
+        bBand.select(col("_gn_id").as("id"),
+          col("_gn_bi").as("band"), col("_gn_bh").as("bh")),
+        maxBand)
+      val inBatchDropped = inBatchCand
+        .join(bSigs.select(col("_gn_id").as("id_a"), col("_gn_sig").as("sa")),
+          Seq("id_a"))
+        .join(bSigs.select(col("_gn_id").as("id_b"), col("_gn_sig").as("sb")),
+          Seq("id_b"))
+        .filter(estSim(col("sa"), col("sb")) >= threshold)
+        .select(col("id_b")).distinct()
+      val priorBand = banded(
+        corpusSigs.select(col("id").as("_gn_id"), col("sig").as("_gn_sig"))
+          .unionByName(ledgerSigs))
+      val vsPriorDropped = bBand.as("x").join(priorBand.as("p"),
+          col("x._gn_bi") === col("p._gn_bi") &&
+            col("x._gn_bh") === col("p._gn_bh"))
+        .select(col("x._gn_sig").as("sa"), col("p._gn_sig").as("sb"),
+          col("x._gn_id").as("_gn_id"))
+        .filter(estSim(col("sa"), col("sb")) >= threshold)
+        .select(col("_gn_id")).distinct()
+      val fresh = admitExcept(signed, idCol, inBatchDropped, vsPriorDropped)
+      // degenerate docs are admitted but never ledgered: their sentinel
+      // signature carries no content identity
+      Staged(fresh, Seq(ledgerDir -> fresh.filter(!degenerate(col("_gn_sig")))
+        .select(cr(idCol).as("_gn_id"), col("_gn_sig"))), Seq("_gn_sig"))
+    }
   }
 
-  /** END-TO-END streaming curation — the production crawl-ingest
-    * deployment every stage scaladoc gestures at, as ONE stage chain
-    * per micro-batch of raw pages:
+  /** Corpus signature projection for [[nearAdmission]]: `(id, sig)`
+    * with sig = the numPerms-long MinHash signature. Compute ONCE,
+    * `persist()`, and hand to the stage — an unpersisted frame re-runs
+    * the corpus tokenize + 64-perm MinHash in EVERY micro-batch's
+    * prior-set probe (measured: the whole stream crawls at ~200 input
+    * rows/s either way until this frame is cached, because signature
+    * recompute dwarfs the joins).
+    */
+  def nearDupCorpusSignatures(
+      corpus: DataFrame, textCol: String, idCol: String,
+      numPerms: Int = 64): DataFrame = {
+    val cr = graft.ops.Cleanse.colRef _
+    corpus.select(
+      cr(idCol).as("id"),
+      graft.operators.Dedup.minhashSignature(cr(textCol), numPerms).as("sig"))
+  }
+
+  /** Perceptual-fingerprint projection of a static MEDIA corpus —
+    * `(id, fp)`, one 64-bit dHash (images) or energy-hash (audio) per
+    * decodable item — the persistable unit for [[mediaAdmission]] (8
+    * bytes per item; unpersisted, every micro-batch re-decodes the
+    * whole corpus — the [[nearDupCorpusSignatures]] lesson, and decode
+    * dwarfs signature hashing). Undecodable items are dropped: they
+    * carry no perceptual identity to probe against.
+    */
+  def mediaCorpusFingerprints(
+      corpus: DataFrame, mediaType: String = "image"): DataFrame =
+    mediaFingerprint(mediaType)(corpus)
+      .filter(col("fp").isNotNull).select(col("id"), col("fp"))
+
+  /** The `(id, fp)` fingerprint operator for `mediaType`. */
+  private def mediaFingerprint(mediaType: String): DataFrame => DataFrame =
+    mediaType match {
+      case "image" => graft.operators.Multimodal.imageFingerprints _
+      case "audio" => graft.operators.Multimodal.audioFingerprints _
+      case other => throw new IllegalArgumentException(
+        s"mediaType must be image|audio, got '$other'")
+    }
+
+  private def requireHamming(maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 7,
+      s"maxHamming must be in [0, 7] (64-bit pigeonhole chunks), got $maxHamming")
+
+  /** Streaming incremental MEDIA near-dup admission — the perceptual
+    * sibling of [[nearAdmission]] for image/audio streams (the
+    * LAION-style crawl shape: re-encoded, re-leveled, resized copies of
+    * already-held media must not be admitted twice). Each micro-batch
+    * of canonical media rows (`media_id`, `content`, ...):
+    *
+    *  1. fingerprints: one 64-bit perceptual hash per item
+    *     ([[graft.operators.Multimodal.imageFingerprints]] dHash /
+    *     [[graft.operators.Multimodal.audioFingerprints]] energy hash)
+    *     — one decode scan, the only pass that touches bytes;
+    *  2. WITHIN-batch: pigeonhole-banded hamming pairs
+    *     ([[graft.operators.Dedup.simhashPairs]]) + the pair rule — an
+    *     item drops when ANY lower-id batch item is within
+    *     `maxHamming`;
+    *  3. vs PRIOR: the bipartite banding
+    *     ([[graft.operators.Dedup.simhashCrossPairs]]) against the
+    *     static corpus's PRECOMPUTED fingerprints
+    *     ([[mediaCorpusFingerprints]] — persist it) plus the ledger of
+    *     previously admitted fingerprints;
+    *  4. survivors ([[admitExcept]]) go on with their original columns
+    *     and their `(media_id, fp)` land in the ledger's `batch_id=N`
+    *     partition ([[run]] replay rule).
+    *
+    * UNDECODABLE items (null fingerprint) are admitted but never
+    * ledgered — the degenerate-text routing: a null carries no
+    * perceptual identity, and banding sentinel values would collapse
+    * every undecodable item into one false dup family. Ledger rows are
+    * 8 bytes of fingerprint per admitted item — the cheapest ledger of
+    * the admission family (vs 16-byte md5, numPerms×8-byte MinHash).
+    * `maxHamming` and `mediaType` are checked at construction, so a
+    * typo fails before the query starts, not minutes into it.
+    */
+  def mediaAdmission(
+      corpusFps: DataFrame,
+      ledgerDir: String,
+      maxHamming: Int = 3,
+      mediaType: String = "image"): Stage = {
+    requireHamming(maxHamming)
+    val fingerprint = mediaFingerprint(mediaType)
+    (batch, batchId) => {
+      // consumed by both probes and the ledger rows; released with the
+      // batch's scope, together with the operator caches simhashPairs /
+      // simhashCrossPairs register per call (a 24/7 stream would
+      // otherwise grow the registry by one cached frame per batch)
+      val fps = graft.ops.Caches.owned(fingerprint(batch))
+      val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
+        ledgerSchema("media_id" -> LongType, "fp" -> LongType), batchId)
+        .select(col("media_id").as("id"), col("fp"))
+      val nn = fps.filter(col("fp").isNotNull).select(col("id"), col("fp"))
+      // the drop rule is pure existence ("does a lower-id batch item /
+      // ANY prior item sit within maxHamming"), so the flood guards
+      // are exact here: simhashPairs' identity star edges preserve
+      // the within-batch rule, and collapsing equal PRIOR
+      // fingerprints to one representative (a mass-duplicated corpus
+      // would otherwise be a permanent hot bucket probed every
+      // micro-batch) cannot change whether a probe matches
+      val inBatchDropped = graft.operators.Dedup.simhashPairs(nn, maxHamming)
+        .select(col("id_b")).distinct()
+      val vsPriorDropped = graft.operators.Dedup.simhashCrossPairs(
+        nn,
+        graft.operators.Dedup.collapseIdentityFps(
+          corpusFps.unionByName(ledgerFps)),
+        maxHamming)
+        .select(col("id_a")).distinct()
+      val fresh = admitExcept(batch, "media_id", inBatchDropped, vsPriorDropped)
+      Staged(fresh, Seq(ledgerDir -> nn.select(col("id").as("media_id"), col("fp"))
+        .join(fresh.select(col("media_id")), Seq("media_id"), "left_semi")))
+    }
+  }
+
+  /** Per-frame fingerprint frame of a static VIDEO corpus —
+    * `(media_id, frame_idx, fp)` via
+    * [[graft.operators.Multimodal.videoFingerprints]] (demux → k
+    * evenly-spaced frames → dHash64, one fused scan) — the persistable
+    * unit for [[videoAdmission]]: ≤ k longs per video; unpersisted,
+    * every micro-batch re-demuxes and re-decodes the whole corpus.
+    * Undemuxable/undecodable corpus items contribute no frames
+    * (quarantine — nothing to probe against). Build it with the SAME
+    * `k` the admission stage uses: frame composite keys are
+    * `media_id·k + frame_idx`, so a mismatched k mis-buckets nothing
+    * silently — it shifts every composite id.
+    */
+  def videoCorpusFingerprints(corpus: DataFrame, k: Int = 8): DataFrame =
+    graft.operators.Multimodal.videoFingerprints(corpus, k)
+
+  /** Streaming incremental VIDEO near-dup admission — the
+    * frame-evidence sibling of [[mediaAdmission]]: a re-encoded /
+    * rescaled / re-containered copy of an already-held video must not
+    * be admitted twice, and — unlike single-fingerprint media — one
+    * coincidentally matching frame must not drop an unrelated video.
+    * Each micro-batch of `(media_id, content, ...)`:
+    *
+    *  1. [[graft.operators.Multimodal.videoFingerprints]]: demux →
+    *     k sampled frames → dHash64, ONE decode scan;
+    *  2. WITHIN-batch: the exact pigeonhole banding over composite
+    *     `media_id·k + frame_idx` keys
+    *     ([[graft.operators.Dedup.simhashPairs]]) → per-video-pair
+    *     evidence count — a video drops when ≥ `minMatches` of its
+    *     frames pair with a LOWER-id batch video (composite id order
+    *     implies video id order for frame_idx < k);
+    *  3. vs PRIOR: the bipartite banding
+    *     ([[graft.operators.Dedup.simhashCrossPairs]]) against the
+    *     corpus frame table ([[videoCorpusFingerprints]] — persist it)
+    *     plus the ledger of previously admitted frames, same
+    *     ≥ `minMatches` evidence rule (a batch video re-using a held
+    *     media_id with identical frames self-pairs and drops — that IS
+    *     a duplicate);
+    *  4. survivors ([[admitExcept]]) go on; their per-frame
+    *     `(media_id, frame_idx, fp)` rows land in the ledger's
+    *     `batch_id=N` partition ([[run]] replay rule).
+    *
+    * ZERO-FRAME videos (undemuxable container, no decodable frame) are
+    * admitted but never ledgered — the undecodable-media routing: no
+    * perceptual identity, and any sentinel would collapse them into one
+    * false dup family. Evidence counts qualifying frame PAIRS (like
+    * [[graft.operators.Multimodal.videoNearDups]]), so a prior video
+    * with near-identical repeated frames can reach the floor against
+    * one batch frame — acceptable for admission (such a video is
+    * boilerplate-still anyway). Requires non-negative `media_id` in
+    * both stream and corpus (the composite key contract).
+    *
+    * Scale: one demux+decode scan per batch; both probes are the
+    * banded joins (never all-pairs), their outputs already pair-pruned
+    * before the tiny evidence groupBy; ledger rows are ≤ k longs per
+    * admitted video.
+    */
+  def videoAdmission(
+      corpusFps: DataFrame,
+      ledgerDir: String,
+      k: Int = 8,
+      maxHamming: Int = 3,
+      minMatches: Int = 2): Stage = {
+    require(k > 0, "k must be positive")
+    frameEvidenceAdmission(corpusFps, ledgerDir, k.toLong, maxHamming, minMatches,
+      graft.operators.Multimodal.videoFingerprints(_, k))
+  }
+
+  /** Streaming windowed-AUDIO near-dup admission — the long-clip
+    * sibling: [[graft.operators.Multimodal.audioFingerprintWindows]]
+    * per micro-batch (fixed-length segments, so tail-appended / padded
+    * copies of held clips drop on their shared leading segments),
+    * through the same frame-evidence admission as [[videoAdmission]].
+    * Corpus frame = [[graft.operators.Multimodal.audioFingerprintWindows]]
+    * over the held clips with the SAME `segSamples`/`maxSegments`;
+    * zero-segment (non-PCM16) items are admitted, never ledgered.
+    */
+  def audioWindowedAdmission(
+      corpusFps: DataFrame,
+      ledgerDir: String,
+      segSamples: Int = 65536,
+      maxSegments: Int = 64,
+      maxHamming: Int = 3,
+      minMatches: Int = 2): Stage = {
+    require(segSamples >= 65, "segSamples must be >= 65")
+    require(maxSegments > 0, "maxSegments must be positive")
+    frameEvidenceAdmission(corpusFps, ledgerDir, maxSegments.toLong, maxHamming,
+      minMatches,
+      graft.operators.Multimodal.audioFingerprintWindows(_, segSamples, maxSegments))
+  }
+
+  /** Frame-evidence admission (the video / windowed-audio core). */
+  private def frameEvidenceAdmission(
+      corpusFps: DataFrame,
+      ledgerDir: String,
+      kL: Long,
+      maxHamming: Int,
+      minMatches: Int,
+      fingerprint: DataFrame => DataFrame): Stage = {
+    require(minMatches > 0, "minMatches must be positive")
+    requireHamming(maxHamming)
+    val M = graft.operators.Multimodal
+    val maxFrameDf = 100
+    def evidenced(pairs: DataFrame, dropSide: String): DataFrame = pairs
+      .select(
+        expr(s"id_a DIV $kL").as("vid_a"),
+        expr(s"id_b DIV $kL").as("vid_b"))
+      .groupBy(col("vid_a"), col("vid_b"))
+      .agg(count(lit(1)).as("n_matched"))
+      .filter(col("n_matched") >= minMatches)
+      .select(col(dropSide)).distinct()
+    (batch, batchId) => {
+      // consumed by both probes and the ledger rows; released with the
+      // batch's scope (see mediaAdmission)
+      val fps = graft.ops.Caches.owned(fingerprint(batch))
+      val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
+        ledgerSchema("media_id" -> LongType, "frame_idx" -> IntegerType, "fp" -> LongType),
+        batchId).select(col("media_id"), col("frame_idx"), col("fp"))
+      // the boilerplate-frame guard (Multimodal.frameEvidencePairs'
+      // df cap) applies per side: batch frames by batch-local df,
+      // the prior (corpus + ledger) by its own df — a fade-to-black
+      // frame held by thousands of corpus videos must not be probed
+      // by every micro-batch forever. The prior-side cap costs one
+      // groupBy over a frame table the cross-banding already scans
+      // per batch. maxIdentity = Int.MaxValue skips the identity
+      // pre-collapse (which would undercount evidence): the df cap
+      // already bounds every surviving identity group.
+      val batchFrames = M.compositeFrameKeys(M.frameDfCap(fps, maxFrameDf), kL)
+      val priorFrames = M.compositeFrameKeys(
+        M.frameDfCap(corpusFps.unionByName(ledgerFps), maxFrameDf), kL)
+      val inBatchDropped = evidenced(
+        graft.operators.Dedup.simhashPairs(batchFrames, maxHamming,
+          maxIdentity = Int.MaxValue)
+          .filter(expr(s"id_a DIV $kL") =!= expr(s"id_b DIV $kL")),
+        dropSide = "vid_b") // composite id_a < id_b ⇒ vid_a < vid_b
+      val vsPriorDropped = evidenced(
+        graft.operators.Dedup.simhashCrossPairs(
+          batchFrames, priorFrames, maxHamming),
+        dropSide = "vid_a") // id_a = the probing batch video
+      val fresh = admitExcept(batch, "media_id", inBatchDropped, vsPriorDropped)
+      Staged(fresh, Seq(ledgerDir -> fps
+        .join(fresh.select(col("media_id")), Seq("media_id"), "left_semi")
+        .select(col("media_id"), col("frame_idx"), col("fp"))))
+    }
+  }
+
+  /** The curation chain's fixed head, as three stages per micro-batch
+    * of raw pages — append further stages ([[semanticAdmission]] with
+    * `embed = true` on `clean`, [[decontamination]] on `clean`,
+    * [[domainQuota]], ...) and hand the lot to [[run]]:
     *
     *  1. [[graft.operators.Corpus.curatePages]] — the stateless C4 →
     *     full-Gopher prefix (clean text + keep flags, zero state);
-    *     non-kept pages drop here, before any store is touched;
-    *  2. exact-dedup admission of the CLEANED text vs the corpus
-    *     hash frame and the exact ledger ([[incrementalDedupBatches]]
-    *     semantics — cheap 16-byte keys kill byte-identical re-crawls
-    *     before MinHash runs);
-    *  3. MinHash near-dup admission vs the corpus signature frame and
-    *     the near ledger ([[incrementalNearDupBatches]] semantics);
-    *  4. optionally, SEMANTIC admission ([[incrementalSemanticBatches]]
-    *     semantics): the cleaned text embeds in-engine
-    *     ([[graft.functions.TextFunctions.embedText]] at the index's
-    *     own vector length) and drops when its vector sits at cosine
-    *     ≥ 1 − `eps` to the [[semanticCorpusIndex]] frame, a lower-id
-    *     batch doc, or the semantic ledger — the stage that catches
-    *     PARAPHRASES (word reordering, re-rendering) whose shingle sets
-    *     evade MinHash;
-    *  5. optionally, n-gram decontamination against a STATIC benchmark
-    *     gram frame ([[graft.operators.Corpus.decontaminateAgainstGrams]]
-    *     — the bench side never grows, so no ledger is needed).
+    *     non-kept pages drop here, before any store is touched; the
+    *     kept pages go on as `(idCol, clean)` plus `carryCols`
+    *     re-joined from the batch (curatePages projects them away,
+    *     every later stage passes extras through);
+    *  2. [[exactAdmission]] of the CLEANED text vs `corpusHashes`
+    *     ([[dedupCorpusHashes]]) and the exact ledger — cheap 16-byte
+    *     keys kill byte-identical re-crawls before MinHash runs;
+    *  3. [[nearAdmission]] vs `corpusSigs` ([[nearDupCorpusSignatures]])
+    *     and the near ledger, at its default banding.
     *
     * Each admission stage keeps its OWN ledger, written after the sink
     * succeeds: the exact ledger records stage-2 survivors (so a
-    * byte-identical copy of a page that was later near-dup-rejected
-    * still dies at the cheap exact stage), the near ledger records
-    * near-stage survivors, the semantic ledger records semantic-stage
-    * survivors. Replay safety is the [[runBatches]] rule, per ledger.
-    * The output reaching `onBatch` is `(idCol, clean)` plus
-    * `carryCols` — the curated, deduplicated, decontaminated page
-    * stream.
-    *
-    * Scale: pass PERSISTED `corpusHashes` ([[dedupCorpusHashes]]),
-    * `corpusSigs` ([[nearDupCorpusSignatures]]), and (if the semantic
-    * stage is on) `semanticIndex` ([[semanticCorpusIndex]] built from
-    * embedText of the corpus's CLEANED text) frames — the persistable
-    * units; everything else is micro-batch-sized. The stages run
-    * cheapest-first, so each store probe sees only the survivors of
-    * the stage before it; each admission stage's frame is persisted
-    * once (its ledger and the next stage read it), the prefix and
-    * decontamination frames are not.
-    *
-    * Observability: pass `onStats` to receive per-batch stage counts
-    * ([[CurateStats]]) once `onBatch` has returned — the admission
-    * funnel a production crawl monitors (a collapsing curation rate or
-    * an exploding near-dup rate is how filter drift and crawler loops
-    * surface). It costs one count per stage: the admission and output
-    * frames count from their persisted forms, the batch and the
-    * curatePages prefix are recomputed. None (default) pays nothing.
+    * byte-identical copy of a page that a later stage rejected still
+    * dies at the cheap exact stage), the near ledger records near-stage
+    * survivors. Pass PERSISTED `corpusHashes`/`corpusSigs` — the
+    * persistable units; everything else is micro-batch-sized. The
+    * stages run cheapest-first, so each store probe sees only the
+    * survivors of the stage before it.
     */
-  /** `nSemanticFresh` rides last (with a None default) so existing
-    * constructor calls stay valid — it is None when the semantic stage
-    * is off; in funnel order it sits between `nNearFresh` and
-    * `nAdmitted`.
-    */
-  final case class CurateStats(
-      nIn: Long, nCurated: Long, nExactFresh: Long, nNearFresh: Long,
-      nAdmitted: Long, nSemanticFresh: Option[Long] = None)
-
-  def curateIncrementalBatches(
-      docs: DataFrame,
+  def curationHead(
       corpusHashes: DataFrame,
       corpusSigs: DataFrame,
       textCol: String,
       idCol: String,
       exactLedgerDir: String,
       nearLedgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      threshold: Double = 0.7,
-      numPerms: Int = 64,
-      bands: Int = 8,
-      benchGrams: Option[DataFrame] = None,
-      decontamN: Int = 8,
-      maxBand: Int = 500,
-      onStats: Option[(CurateStats, Long) => Unit] = None,
-      semanticIndex: Option[DataFrame] = None,
-      semanticLedgerDir: Option[String] = None,
-      eps: Double = 0.01,
-      carryCols: Seq[String] = Nil): DataStreamWriter[Row] = {
-    val semantic = semanticIndex.map { idx =>
-      require(semanticLedgerDir.isDefined,
-        "semanticIndex needs semanticLedgerDir")
-      require(eps > 0 && eps < 1, "eps in (0, 1)")
-      srpMeta(idx) // fail fast: must be a semanticCorpusIndex frame
-      // the cleaned text embeds at the index's vector length (one
-      // 1-row probe at writer construction) — a different length would
-      // zip truncated vectors into silently wrong cosines; an empty
-      // index fixes no length, so the stream embeds at 128
-      val dim = idx.select(size(col("_gs_v"))).limit(1).collect()
-        .headOption.fold(128)(_.getInt(0))
-      val SemV = "_gc_semv"
-      val stage: Stage = (in, batchId) => semanticAdmitBatch(
-        in.withColumn(SemV, graft.functions.TextFunctions.embedText(col("clean"), dim)),
-        batchId, idx, SemV, idCol, semanticLedgerDir.get, eps).copy(carried = Seq(SemV))
-      stage
-    }
-    val stages = curationStages(corpusHashes, corpusSigs, textCol, idCol,
-      exactLedgerDir, nearLedgerDir, threshold, numPerms, bands, maxBand, carryCols) ++
-      semantic ++ benchGrams.map(decontaminationStage(_, idCol, decontamN))
-    onStats match {
-      case None => runBatches(docs, onBatch)(stages: _*)
-      case Some(report) =>
-        // the batch and every stage's frame of the batch in flight,
-        // counted once the sink has returned
-        val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val intake: Stage = (in, _) => { frames.clear(); frames += in; Staged(in) }
-        def counted(s: Stage): Stage = (in, batchId) => {
-          val r = s(in, batchId); frames += r.admitted; r
-        }
-        runBatches(docs, (out, batchId) => {
-          onBatch(out, batchId)
-          val n = frames.map(_.count())
-          report(CurateStats(n(0), n(1), n(2), n(3), n.last,
-            semanticIndex.map(_ => n(4))), batchId)
-        })(intake +: stages.map(counted): _*)
-    }
-  }
-
-  /** The curation chain's fixed head: the curatePages prefix (kept
-    * pages as `(idCol, clean)`, plus `carryCols` re-joined from the
-    * batch — curatePages projects them away, and every later stage
-    * passes extras through), then exact and MinHash near-dup
-    * admission on the cleaned text.
-    */
-  private def curationStages(
-      corpusHashes: DataFrame,
-      corpusSigs: DataFrame,
-      textCol: String,
-      idCol: String,
-      exactLedgerDir: String,
-      nearLedgerDir: String,
-      threshold: Double,
-      numPerms: Int,
-      bands: Int,
-      maxBand: Int,
-      carryCols: Seq[String]): Seq[Stage] = {
-    requireSigCompat(corpusSigs, threshold, numPerms, bands)
+      carryCols: Seq[String] = Nil): Seq[Stage] = {
     val cr = graft.ops.Cleanse.colRef _
     val curated: Stage = (batch, _) => {
       val kept = graft.operators.Corpus.curatePages(batch, textCol, idCol)
@@ -1260,20 +1080,37 @@ object Streams {
           batch.select((cr(idCol).as(idCol) +: carryCols.map(cr)): _*), Seq(idCol)))
     }
     Seq(curated,
-      exactAdmitBatch(_, _, corpusHashes, "clean", idCol, exactLedgerDir),
-      nearAdmitBatch(_, _, corpusSigs, "clean", idCol, nearLedgerDir,
-        threshold, numPerms, bands, maxBand))
+      exactAdmission(corpusHashes, "clean", idCol, exactLedgerDir),
+      nearAdmission(corpusSigs, "clean", idCol, nearLedgerDir))
   }
 
-  /** n-gram decontamination of the curated `clean` text against a
-    * static benchmark gram frame — no ledger, the bench side never
-    * grows.
+  /** END-TO-END streaming curation: [[run]] over the [[curationHead]] —
+    * `onBatch` receives the curated, exact- and near-deduplicated page
+    * stream as `(idCol, clean)`. Longer chains (semantic admission,
+    * decontamination, quota, packing) append their stages to the head
+    * in their own [[run]] call.
     */
-  private def decontaminationStage(benchGrams: DataFrame, idCol: String, n: Int): Stage =
-    (in, _) => Staged(graft.operators.Corpus
-      .decontaminateAgainstGrams(in, benchGrams, "clean", idCol, n))
+  def curateIncrementalBatches(
+      docs: DataFrame,
+      corpusHashes: DataFrame,
+      corpusSigs: DataFrame,
+      textCol: String,
+      idCol: String,
+      exactLedgerDir: String,
+      nearLedgerDir: String,
+      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    run(docs, onBatch)(curationHead(corpusHashes, corpusSigs, textCol, idCol,
+      exactLedgerDir, nearLedgerDir): _*)
 
-  /** Corpus-side SRP index for [[incrementalSemanticBatches]]: the
+  /** n-gram decontamination of `textCol` against a static benchmark
+    * gram frame ([[graft.operators.Corpus.decontaminateAgainstGrams]])
+    * — no ledger, the bench side never grows.
+    */
+  def decontamination(benchGrams: DataFrame, textCol: String, idCol: String, n: Int = 8): Stage =
+    (in, _) => Staged(graft.operators.Corpus
+      .decontaminateAgainstGrams(in, benchGrams, textCol, idCol, n))
+
+  /** Corpus-side SRP index for [[semanticAdmission]]: the
     * PRE-EXPLODED signature frame `(_gs_id, _gs_v, _gs_n, _gs_t,
     * _gs_s)` — one row per (doc, table) — hash-repartitioned on the
     * probe's join keys `(_gs_t, _gs_s)`. Compute ONCE and `persist()`.
@@ -1303,9 +1140,9 @@ object Streams {
     * a single 5k-row micro-batch (≈10⁹ 128-dim cosines) where the
     * capped run finishes in seconds. One-sided tradeoff, documented:
     * a doc whose near-twin hides ONLY in oversized buckets is
-    * admitted; compose exact dedup upstream (the
-    * [[curateIncrementalBatches]] chain does) so byte-identical mass
-    * never inflates a bucket in the first place.
+    * admitted; compose exact dedup upstream (the [[curationHead]]
+    * does) so byte-identical mass never inflates a bucket in the first
+    * place.
     */
   def semanticCorpusIndex(
       corpus: DataFrame, vecCol: String, idCol: String,
@@ -1353,10 +1190,10 @@ object Streams {
   }
 
   /** SRP banding shared by [[semanticCorpusIndex]] and the per-batch
-    * sides of [[incrementalSemanticBatches]]: cast/norm in their OWN
-    * select below the posexplode (the `embeddingNearDups`
-    * CollapseProject note — a fused select re-evaluates norm once per
-    * exploded table row).
+    * sides of [[semanticAdmission]]: cast/norm in their OWN select
+    * below the posexplode (the `embeddingNearDups` CollapseProject
+    * note — a fused select re-evaluates norm once per exploded table
+    * row).
     */
   private def srpExplode(df: DataFrame, bits: Int, tables: Int): DataFrame = {
     val norm = graft.operators.Similarity.norm _
@@ -1367,47 +1204,102 @@ object Streams {
   }
 
   /** Streaming incremental SEMANTIC dedup admission — the
-    * embedding-level sibling of [[incrementalNearDupBatches]]
-    * (SemDeDup's pair rule as an admission stream): a doc drops when
-    * its vector sits at cosine ≥ 1 − eps to any LOWER-id doc in its
-    * own micro-batch, to the static corpus vectors, or to the LEDGER
-    * of previously admitted vectors. Candidates come from the
-    * multi-table SRP-LSH bucket join ([[graft.operators.Similarity
-    * .embeddingNearDups]] machinery — keyed `(table, signature)`
-    * shuffles, never `|batch| × |prior|`), verified by EXACT cosine
-    * inside the join condition; recall for a pair at angle θ is
-    * 1 − (1 − (1 − θ/π)^bits)^tables (≈ 1 − 1e-12 at cosine 0.999
-    * with the defaults — and exact copies always collide).
+    * embedding-level sibling of [[nearAdmission]] (SemDeDup's pair rule
+    * as an admission stream): a doc drops when its vector sits at
+    * cosine ≥ 1 − eps to any LOWER-id doc in its own micro-batch, to
+    * the static corpus vectors, or to the LEDGER of previously admitted
+    * vectors. Candidates come from the multi-table SRP-LSH bucket join
+    * ([[graft.operators.Similarity.embeddingNearDups]] machinery —
+    * keyed `(table, signature)` shuffles, never `|batch| × |prior|`),
+    * verified by EXACT cosine inside the join condition; recall for a
+    * pair at angle θ is 1 − (1 − (1 − θ/π)^bits)^tables (≈ 1 − 1e-12
+    * at cosine 0.999 with the defaults — and exact copies always
+    * collide).
     *
-    * `vecCol` may be a pre-existing embedding column or composed
-    * upstream from raw text with
-    * [[graft.functions.TextFunctions.embedText]] — the whole
-    * text→vector→dedup path then runs in-engine with no external
-    * model. Zero vectors are always admitted and never dropped
-    * (cosine involving a zero vector is 0 by the engine convention);
-    * they are also never ledgered — a zero vector can never drop a
-    * later doc, so its ledger row would be dead weight. The ledger
-    * stores `(id, vector)` per admitted doc under the [[runBatches]]
-    * replay rule; vectors are stored as array<double> (lossless for
-    * float inputs), so re-derived SRP signatures are bit-identical
-    * across restarts. `corpusIndex` is the [[semanticCorpusIndex]]
-    * frame — persist it; `bits`/`tables`/`maxBucket` are read from its
-    * column metadata so the batch and ledger sides band identically
-    * and carry the same hot-bucket cap by construction (see the index
-    * scaladoc for the measured uncapped adversary).
+    * `vecCol` is an embedding column, or — with `embed = true` — a TEXT
+    * column the stage embeds itself with
+    * [[graft.functions.TextFunctions.embedText]] at the index's own
+    * vector length (probed once, at construction: a different length
+    * would zip truncated vectors into silently wrong cosines; an empty
+    * index fixes no length, so the stage embeds at 128) — the way the
+    * curation chain catches PARAPHRASES (word reordering,
+    * re-rendering) whose shingle sets evade MinHash. Either way the
+    * whole text→vector→dedup path runs in-engine with no external
+    * model. Zero vectors are always admitted and never dropped (cosine
+    * involving a zero vector is 0 by the engine convention); they are
+    * also never ledgered — a zero vector can never drop a later doc,
+    * so its ledger row would be dead weight. The ledger stores `(id,
+    * vector)` per admitted doc under the [[run]] replay rule; vectors
+    * are stored as array<double> (lossless for float inputs), so
+    * re-derived SRP signatures are bit-identical across restarts.
+    * `corpusIndex` is the [[semanticCorpusIndex]] frame — persist it;
+    * `bits`/`tables`/`maxBucket` are read from its column metadata so
+    * the batch and ledger sides band identically and carry the same
+    * hot-bucket cap by construction (see the index scaladoc for the
+    * measured uncapped adversary).
     */
-  def incrementalSemanticBatches(
-      docs: DataFrame,
+  def semanticAdmission(
       corpusIndex: DataFrame,
       vecCol: String,
       idCol: String,
       ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      eps: Double = 0.01): DataStreamWriter[Row] = {
+      eps: Double = 0.01,
+      embed: Boolean = false): Stage = {
     require(eps > 0 && eps < 1, "eps in (0, 1)")
-    srpMeta(corpusIndex) // fail fast at writer construction
-    runBatches(docs, onBatch)(
-      semanticAdmitBatch(_, _, corpusIndex, vecCol, idCol, ledgerDir, eps))
+    val (bits, tables, maxBucket) = srpMeta(corpusIndex)
+    val dim =
+      if (!embed) 0
+      else corpusIndex.select(size(col("_gs_v"))).limit(1).collect()
+        .headOption.fold(128)(_.getInt(0))
+    val cr = graft.ops.Cleanse.colRef _
+    val dot = graft.operators.Similarity.dot _
+    val norm = graft.operators.Similarity.norm _
+    val SemV = "_gs_embedded"
+    val vCol = if (embed) SemV else vecCol
+    def vecs(df: DataFrame): DataFrame = df.select(cr(idCol).as("_gs_id"),
+      cr(vCol).cast("array<double>").as("_gs_v"))
+    (in, batchId) => {
+      val batch =
+        if (embed) in.withColumn(SemV, graft.functions.TextFunctions.embedText(cr(vecCol), dim))
+        else in
+      val idType = batch.select(cr(idCol)).schema.head.dataType
+      val ledgerVecs = readLedger(batch.sparkSession, ledgerDir,
+        ledgerSchema("_gs_id" -> idType, "_gs_v" -> ArrayType(DoubleType)), batchId)
+        .select(col("_gs_id"), col("_gs_v"))
+      // the probe sides carry the index's own hot-bucket cap (metadata):
+      // a semantically-collapsed micro-batch or ledger region would
+      // otherwise make one bucket |side|² / |batch|×|ledger| quadratic —
+      // the same adversary the index cap bounds, same one-sided tradeoff
+      val bSig = capBuckets(srpExplode(vecs(batch), bits, tables), maxBucket)
+      val denom = col("x._gs_n") * col("y._gs_n")
+      val cos = when(denom === 0.0, lit(0.0))
+        .otherwise(dot(col("x._gs_v"), col("y._gs_v")) / denom)
+      // within-batch: lower-id partner in a shared bucket at cos ≥ 1−eps
+      val inBatchDropped = bSig.as("x").join(bSig.as("y"),
+          col("x._gs_t") === col("y._gs_t") &&
+            col("x._gs_s") === col("y._gs_s") &&
+            col("x._gs_id") < col("y._gs_id") &&
+            cos >= lit(1.0 - eps))
+        .select(col("y._gs_id")).distinct()
+      // vs PRIOR: corpus and ledger probed SEPARATELY — a union would
+      // discard the index's (t, s) hash partitioning and re-shuffle the
+      // whole corpus side every batch; two keyed joins keep the big
+      // static side exchange-free and the ledger side |admitted|-sized
+      def droppedVs(prior: DataFrame): DataFrame =
+        bSig.as("y").join(prior.as("x"),
+            col("x._gs_t") === col("y._gs_t") &&
+              col("x._gs_s") === col("y._gs_s") &&
+              cos >= lit(1.0 - eps))
+          .select(col("y._gs_id"))
+      val vsPriorDropped = droppedVs(corpusIndex)
+        .unionByName(droppedVs(
+          capBuckets(srpExplode(ledgerVecs, bits, tables), maxBucket)))
+        .distinct()
+      val fresh = admitExcept(batch, idCol, inBatchDropped, vsPriorDropped)
+      // zero vectors can never drop a later doc — never ledgered
+      Staged(fresh, Seq(ledgerDir -> vecs(fresh).filter(norm(col("_gs_v")) =!= 0.0)),
+        if (embed) Seq(SemV) else Nil)
+    }
   }
 
   /** Read bits/tables/maxBucket back from a [[semanticCorpusIndex]]
@@ -1425,68 +1317,6 @@ object Streams {
       sigMeta.getLong("graft.srp.maxBucket").toInt)
   }
 
-  /** SRP-bucketed semantic admission stage (the
-    * [[incrementalSemanticBatches]] core, chained by
-    * [[curateIncrementalBatches]]). The ledger reads each admitted
-    * row's vector from the persisted frame.
-    */
-  private def semanticAdmitBatch(
-      batch: DataFrame,
-      batchId: Long,
-      corpusIndex: DataFrame,
-      vecCol: String,
-      idCol: String,
-      ledgerDir: String,
-      eps: Double): Staged = {
-    val (bits, tables, maxBucket) = srpMeta(corpusIndex)
-    val cr = graft.ops.Cleanse.colRef _
-    val dot = graft.operators.Similarity.dot _
-    val norm = graft.operators.Similarity.norm _
-    val idType = batch.select(cr(idCol)).schema.head.dataType
-    val ledgerVecs = readLedger(batch.sparkSession, ledgerDir,
-      ledgerSchema("_gs_id" -> idType, "_gs_v" -> ArrayType(DoubleType)), batchId)
-      .select(col("_gs_id"), col("_gs_v"))
-    def vecs(df: DataFrame): DataFrame = df.select(cr(idCol).as("_gs_id"),
-      cr(vecCol).cast("array<double>").as("_gs_v"))
-    val bVecs = vecs(batch)
-    // the probe sides carry the index's own hot-bucket cap (metadata):
-    // a semantically-collapsed micro-batch or ledger region would
-    // otherwise make one bucket |side|² / |batch|×|ledger| quadratic —
-    // the same adversary the index cap bounds, same one-sided tradeoff
-    val bSig = capBuckets(srpExplode(bVecs, bits, tables), maxBucket)
-    val denom = col("x._gs_n") * col("y._gs_n")
-    val cos = when(denom === 0.0, lit(0.0))
-      .otherwise(dot(col("x._gs_v"), col("y._gs_v")) / denom)
-    // within-batch: lower-id partner in a shared bucket at cos ≥ 1−eps
-    val inBatchDropped = bSig.as("x").join(bSig.as("y"),
-        col("x._gs_t") === col("y._gs_t") &&
-          col("x._gs_s") === col("y._gs_s") &&
-          col("x._gs_id") < col("y._gs_id") &&
-          cos >= lit(1.0 - eps))
-      .select(col("y._gs_id").as("_gs_id")).distinct()
-    // vs PRIOR: corpus and ledger probed SEPARATELY — a union would
-    // discard the index's (t, s) hash partitioning and re-shuffle the
-    // whole corpus side every batch; two keyed joins keep the big
-    // static side exchange-free and the ledger side |admitted|-sized
-    def droppedVs(prior: DataFrame): DataFrame =
-      bSig.as("y").join(prior.as("x"),
-          col("x._gs_t") === col("y._gs_t") &&
-            col("x._gs_s") === col("y._gs_s") &&
-            cos >= lit(1.0 - eps))
-        .select(col("y._gs_id").as("_gs_id"))
-    val vsPriorDropped = droppedVs(corpusIndex)
-      .unionByName(droppedVs(
-        capBuckets(srpExplode(ledgerVecs, bits, tables), maxBucket)))
-      .distinct()
-    val freshIds = bVecs.select(col("_gs_id"))
-      .join(inBatchDropped, Seq("_gs_id"), "left_anti")
-      .join(vsPriorDropped, Seq("_gs_id"), "left_anti")
-    val fresh = batch.join(
-      freshIds.withColumnRenamed("_gs_id", idCol), Seq(idCol), "left_semi")
-    // zero vectors can never drop a later doc — never ledgered
-    Staged(fresh, Seq(ledgerDir -> vecs(fresh).filter(norm(col("_gs_v")) =!= 0.0)))
-  }
-
   /** Streaming sequence PACKING — the production tail of the curation
     * chain: turn the admitted document stream into `budget`-token
     * training-bin assignments that stay CONTINUOUS across micro-batches
@@ -1501,7 +1331,7 @@ object Streams {
     * State is one running token total per shard, carried as a LEDGER of
     * per-batch DELTAS `(shard, batch_tokens, batch_id)` — summing all
     * prior deltas reproduces the shard's base offset, and the sum is
-    * associative, so the [[runBatches]] replay rule gives exactly-once
+    * associative, so the [[run]] replay rule gives exactly-once
     * packing under at-least-once delivery. The ledger is
     * shard-count-sized — bytes per batch, never corpus-sized. The
     * bin/off arithmetic is the batch operator's own
@@ -1509,18 +1339,16 @@ object Streams {
     * construction given the same arrival order); docs within a batch
     * order by `orderCol`, batches order by arrival.
     */
-  def packBatches(
-      docs: DataFrame,
+  def pack(
       idCol: String,
       shardCol: String,
       orderCol: String,
       tokensCol: String,
       budget: Long,
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+      ledgerDir: String): Stage = {
     require(budget > 0, "budget must be positive")
     val cr = graft.ops.Cleanse.colRef _
-    runBatches(docs, onBatch) { (batch, batchId) =>
+    (batch, batchId) => {
       val shardType = batch.select(cr(shardCol)).schema.head.dataType
       val base = readLedger(batch.sparkSession, ledgerDir,
         ledgerSchema("shard" -> shardType, "batch_tokens" -> LongType), batchId)
@@ -1533,8 +1361,8 @@ object Streams {
     }
   }
 
-  /** Streaming sequence MATERIALIZATION — [[packBatches]] carried to
-    * the artifact a trainer actually reads: per micro-batch, emit every
+  /** Streaming sequence MATERIALIZATION — [[pack]] carried to the
+    * artifact a trainer actually reads: per micro-batch, emit every
     * training bin that can no longer grow as `(shard, bin, n_docs,
     * seq_text)` ([[graft.operators.Corpus.packMaterialize]] semantics —
     * a doc belongs to the bin its FIRST token lands in, bins
@@ -1545,8 +1373,8 @@ object Streams {
     * with its member docs possibly spanning several micro-batches.
     *
     * State, both ledgers bytes-to-kilobytes per shard:
-    *  - `<ledgerDir>/deltas`: the [[packBatches]] per-batch token-sum
-    *    deltas (associative — any subset sums to a valid base);
+    *  - `<ledgerDir>/deltas`: the [[pack]] per-batch token-sum deltas
+    *    (associative — any subset sums to a valid base);
     *  - `<ledgerDir>/open`: the still-OPEN bins' member docs `(shard,
     *    ord, text, bin)`, rewritten in full each batch (latest-batch
     *    state, not a sum — the read takes the max prior `batch_id`
@@ -1562,8 +1390,7 @@ object Streams {
     * sequence number, an event time) — the same contract the batch
     * operator's shard ordering carries.
     */
-  def packMaterializeBatches(
-      docs: DataFrame,
+  def packMaterialize(
       idCol: String,
       shardCol: String,
       orderCol: String,
@@ -1571,11 +1398,10 @@ object Streams {
       textCol: String,
       budget: Long,
       ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit,
-      sep: String = " "): DataStreamWriter[Row] = {
+      sep: String = " "): Stage = {
     require(budget > 0, "budget must be positive")
     val cr = graft.ops.Cleanse.colRef _
-    runBatches(docs, onBatch) { (batch, batchId) =>
+    (batch, batchId) => {
       val spark = batch.sparkSession
       val shardType = batch.select(cr(shardCol)).schema.head.dataType
       val ordType = batch.select(cr(orderCol)).schema.head.dataType
@@ -1593,7 +1419,7 @@ object Streams {
           "_ord" -> ordType, "text" -> StringType, "bin" -> LongType), batchId),
         maxBatchId(deltas))
       // assign the NEW docs (batch-local window + the ledger base —
-      // the packBatches arithmetic), then re-attach ord + text
+      // the pack arithmetic), then re-attach ord + text
       val assigned = graft.operators.Corpus.packSequencesFrom(
           batch, idCol, cr(shardCol), cr(orderCol), cr(tokensCol), budget,
           Some(base))
@@ -1627,11 +1453,11 @@ object Streams {
     }
   }
 
-  /** Drain the still-open bins after a [[packMaterializeBatches]] query
+  /** Drain the still-open bins after a [[packMaterialize]] query
     * stops: materializes `<ledgerDir>/open`'s latest state (anchored on
     * the deltas ledger's max batch_id — see the state-read note in the
-    * stream) with the same grouping the stream emits — the
-    * end-of-stream flush.
+    * stage) with the same grouping the stream emits — the end-of-stream
+    * flush.
     */
   def flushOpenBins(
       spark: SparkSession, ledgerDir: String, sep: String = " "): DataFrame = {
@@ -1699,13 +1525,14 @@ object Streams {
     * deterministic pseudo-random (md5) admission order is wanted —
     * a stream cannot reorder what has not arrived, so its admission
     * order is arrival order, and epochs (re-reading the corpus) have
-    * no streaming meaning. `onBatch` receives the admitted rows with
-    * their original columns plus `start_off` (the doc's starting
-    * token offset in its domain — the [[packBatches]] handoff).
+    * no streaming meaning. Admitted rows go on with their original
+    * columns plus `start_off` (the doc's starting token offset in its
+    * domain — the [[pack]] handoff).
     *
     * State = one running ADMITTED-token total per domain, carried as
     * an associative per-batch-delta ledger (bytes per domain; the
-    * [[runBatches]] replay rule, like every other deployment).
+    * [[run]] replay rule, like every other stage), which commits
+    * through the driver-side running-total cache this stage seeds.
     * Ledgering admitted rather than arrived tokens changes
     * no decision — the two totals agree until the budget boundary is
     * crossed, and both sit at/above budget forever after — and keeps
@@ -1714,37 +1541,16 @@ object Streams {
     * bounded by construction (the documented within-batch posture),
     * so a hot domain cannot become an unbounded sort task.
     */
-  def domainQuotaBatches(
-      docs: DataFrame,
-      idCol: String,
+  def domainQuota(
       domainCol: String,
       orderCol: String,
       tokensCol: String,
       budgets: Map[String, Long],
-      ledgerDir: String,
-      onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+      ledgerDir: String): Stage = {
     require(budgets.nonEmpty, "budgets must be non-empty")
     require(budgets.values.forall(_ > 0), "budgets must be positive")
-    runBatches(docs, onBatch)(
-      domainQuotaBatch(_, _, domainCol, orderCol, tokensCol, budgets, ledgerDir))
-  }
-
-  /** Quota admission stage (the [[domainQuotaBatches]] core, chained by
-    * [[ingestToBins]]): admitted rows carry `_gq_dom`/`_gq_tok` for the
-    * per-domain delta ledger, which commits through the running-total
-    * cache this stage seeds.
-    */
-  private def domainQuotaBatch(
-      batch: DataFrame,
-      batchId: Long,
-      domainCol: String,
-      orderCol: String,
-      tokensCol: String,
-      budgets: Map[String, Long],
-      ledgerDir: String): Staged = {
     import org.apache.spark.sql.expressions.Window
     val cr = graft.ops.Cleanse.colRef _
-    val spark = batch.sparkSession
     // The ledger-base key is renamed away from "domain" BEFORE the
     // join: a batch whose domainCol is literally "domain" (the natural
     // name) would otherwise make `col("domain")` ambiguous at analysis
@@ -1753,67 +1559,70 @@ object Streams {
     val baseSchema = StructType(Seq(
       StructField("_gq_basedom", StringType),
       StructField("_gq_base", LongType)))
-    def localBase(sums: Map[String, Long]): DataFrame =
-      spark.createDataFrame(
-        java.util.Arrays.asList(sums.toSeq.map { case (d, t) => Row(d, t) }: _*),
-        baseSchema)
-    // Cache hit requires batchId == through + 1, not just > through: a
-    // batch-id GAP (e.g. a ledger dir reused under a different
-    // checkpoint lineage) means intermediate batches' tokens are
-    // missing from the running totals — the parquet ledger is the only
-    // truth there. Spark batch ids are contiguous per checkpoint, so
-    // the tighter guard costs nothing in steady state.
-    val base = Option(quotaCache.get(ledgerDir)) match {
-      case Some((through, sums)) if batchId == through + 1 =>
-        // steady state: the handful-of-domains running totals come from
-        // the driver cache — no parquet listing/read job per batch
-        localBase(sums)
-      case _ =>
-        // cold start or replay: the parquet ledger is the truth; seed
-        // the cache with the pre-batch totals (bounded collect — one
-        // row per domain)
-        val sums = readLedger(spark, ledgerDir,
-          ledgerSchema("domain" -> StringType, "batch_tokens" -> LongType), batchId)
-          .groupBy(col("domain")).agg(sum(col("batch_tokens")).as("_gq_base"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        quotaCache.put(ledgerDir, (batchId - 1, sums))
-        localBase(sums)
-    }
     val budgetOf = budgets.foldLeft(lit(null).cast("long")) {
       case (els, (d, b)) =>
         when(col("_gq_dom") === d, lit(b)).otherwise(els)
     }
     val w = Window.partitionBy(col("_gq_dom")).orderBy(cr(orderCol))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val admitted = batch
-      .withColumn("_gq_dom", cr(domainCol).cast("string"))
-      .filter(col("_gq_dom").isin(budgets.keys.toSeq: _*))
-      .withColumn("_gq_tok", coalesce(cr(tokensCol).cast("long"), lit(0L)))
-      .withColumn("_gq_prev", coalesce(sum(col("_gq_tok")).over(w), lit(0L)))
-      .join(base, col("_gq_dom") === col("_gq_basedom"), "left")
-      .withColumn("start_off",
-        col("_gq_prev") + coalesce(col("_gq_base"), lit(0L)))
-      .filter(col("start_off") < budgetOf)
-      .drop("_gq_basedom", "_gq_prev", "_gq_base")
-    Staged(admitted, Seq(ledgerDir -> admitted.groupBy(col("_gq_dom").as("domain"))
-      .agg(sum(col("_gq_tok")).as("batch_tokens"))), Seq("_gq_dom", "_gq_tok"))
+    (batch, batchId) => {
+      val spark = batch.sparkSession
+      def localBase(sums: Map[String, Long]): DataFrame =
+        spark.createDataFrame(
+          java.util.Arrays.asList(sums.toSeq.map { case (d, t) => Row(d, t) }: _*),
+          baseSchema)
+      // Cache hit requires batchId == through + 1, not just > through: a
+      // batch-id GAP (e.g. a ledger dir reused under a different
+      // checkpoint lineage) means intermediate batches' tokens are
+      // missing from the running totals — the parquet ledger is the only
+      // truth there. Spark batch ids are contiguous per checkpoint, so
+      // the tighter guard costs nothing in steady state.
+      val base = Option(quotaCache.get(ledgerDir)) match {
+        case Some((through, sums)) if batchId == through + 1 =>
+          // steady state: the handful-of-domains running totals come from
+          // the driver cache — no parquet listing/read job per batch
+          localBase(sums)
+        case _ =>
+          // cold start or replay: the parquet ledger is the truth; seed
+          // the cache with the pre-batch totals (bounded collect — one
+          // row per domain)
+          val sums = readLedger(spark, ledgerDir,
+            ledgerSchema("domain" -> StringType, "batch_tokens" -> LongType), batchId)
+            .groupBy(col("domain")).agg(sum(col("batch_tokens")).as("_gq_base"))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          quotaCache.put(ledgerDir, (batchId - 1, sums))
+          localBase(sums)
+      }
+      val admitted = batch
+        .withColumn("_gq_dom", cr(domainCol).cast("string"))
+        .filter(col("_gq_dom").isin(budgets.keys.toSeq: _*))
+        .withColumn("_gq_tok", coalesce(cr(tokensCol).cast("long"), lit(0L)))
+        .withColumn("_gq_prev", coalesce(sum(col("_gq_tok")).over(w), lit(0L)))
+        .join(base, col("_gq_dom") === col("_gq_basedom"), "left")
+        .withColumn("start_off",
+          col("_gq_prev") + coalesce(col("_gq_base"), lit(0L)))
+        .filter(col("start_off") < budgetOf)
+        .drop("_gq_basedom", "_gq_prev", "_gq_base")
+      Staged(admitted, Seq(ledgerDir -> admitted.groupBy(col("_gq_dom").as("domain"))
+        .agg(sum(col("_gq_tok")).as("batch_tokens"))), Seq("_gq_dom", "_gq_tok"))
+    }
   }
 
   /** CRAWL STREAM → TRAINING BINS, one deployment — the engine's full
     * production ingest composed end-to-end per micro-batch of raw
-    * pages: [[curateIncrementalBatches]]' chain (C4 → full Gopher →
-    * exact-dedup admission → MinHash near-dup admission → optional
-    * n-gram decontamination, each stateful stage with its own
-    * replay-safe ledger), then per-domain ingestion-budget admission
-    * ([[domainQuotaBatches]] semantics over the CLEANED text's token
-    * count, third ledger), then [[graft.operators.Corpus.trainingOrder]]
-    * placement — so `onBins` receives, for every admitted page,
+    * pages: the [[curationHead]] (C4 → full Gopher → exact-dedup
+    * admission → MinHash near-dup admission, each stateful stage with
+    * its own replay-safe ledger) → optional n-gram [[decontamination]]
+    * → per-domain ingestion-budget admission ([[domainQuota]] over the
+    * CLEANED text's token count, third ledger) →
+    * [[graft.operators.Corpus.trainingOrder]] placement — so `onBins`
+    * receives, for every admitted page,
     * `(idCol, clean, domain, n_tokens, bin, off, ord_key, shard)`: the
     * curated text plus its exact training-bin coordinates and the
     * seeded global order key a trainer reads by. Admission order is
     * arrival order (the streaming posture throughout); every ledger is
-    * written after `onBins` returns ([[runBatches]]), so a replayed
-    * batch reproduces its own decisions.
+    * written after `onBins` returns ([[run]]), so a replayed batch
+    * reproduces its own decisions.
     *
     * Scale: pass PERSISTED `corpusHashes`/`corpusSigs` (and
     * `benchGrams` if decontaminating) — the persistable units; the
@@ -1835,22 +1644,20 @@ object Streams {
       onBins: (DataFrame, Long) => Unit,
       benchGrams: Option[DataFrame] = None,
       orderSalt: String = "order"): DataStreamWriter[Row] = {
-    require(budgets.nonEmpty, "budgets must be non-empty")
-    require(budgets.values.forall(_ > 0), "budgets must be positive")
-    val quota: Stage = (in, batchId) => domainQuotaBatch(
+    val quota = domainQuota(domainCol, idCol, "_gi_tok", budgets, s"$ledgerBase/quota")
+    val counted: Stage = (in, batchId) => quota(
       in.withColumn("_gi_tok",
         graft.functions.TextFunctions.tokenCount(col("clean")).cast("long")),
-      batchId, domainCol, idCol, "_gi_tok", budgets, s"$ledgerBase/quota")
+      batchId)
     val placement: Stage = (in, _) => Staged(graft.operators.Corpus.trainingOrder(
       in.withColumn("domain", graft.ops.Cleanse.colRef(domainCol).cast("string"))
         .withColumnRenamed("_gi_tok", "n_tokens")
         .drop((if (domainCol == "domain") Nil else Seq(domainCol)): _*),
       idCol, binBudget, nShards, orderSalt))
-    val stages = curationStages(corpusHashes, corpusSigs, textCol, idCol,
-      s"$ledgerBase/exact", s"$ledgerBase/near", threshold = 0.7, numPerms = 64,
-      bands = 8, maxBand = 500, carryCols = Seq(domainCol)) ++
-      benchGrams.map(decontaminationStage(_, idCol, 8)) ++ Seq(quota, placement)
-    runBatches(pages, onBins)(stages: _*)
+    val stages = curationHead(corpusHashes, corpusSigs, textCol, idCol,
+      s"$ledgerBase/exact", s"$ledgerBase/near", carryCols = Seq(domainCol)) ++
+      benchGrams.map(decontamination(_, "clean", idCol)) ++ Seq(counted, placement)
+    run(pages, onBins)(stages: _*)
   }
 
   /** `(shard, bin, n_docs, seq_text)` from `(shard, _ord, text, bin)`

@@ -149,7 +149,7 @@ object StreamBench {
 
   /** Round-12 throughput rows for the remaining round-11 streaming
     * deployments ([[Streams.perBatch]] over n=5 LM, DSIR and
-    * classifier scoring; incrementalDedupBatches), persisted vs
+    * classifier scoring; [[Streams.exactAdmission]]), persisted vs
     * unpersisted model members — the bigram row's 6.4× persist gap
     * measured for each. Correctness of every path is pinned by
     * StreamsSpec streaming≡batch cases; this only measures. The
@@ -306,8 +306,7 @@ object StreamBench {
         run("stream_incneardup_rows_per_sec", Seq(corpusSigs)) { (s, h) =>
           val ledger = java.nio.file.Files
             .createTempDirectory("graft_incneardup_ledger").toString + "/ledger"
-          Streams.incrementalNearDupBatches(
-            s, corpusSigs, "text", "doc_id", ledger, h)
+          Streams.run(s, h)(Streams.nearAdmission(corpusSigs, "text", "doc_id", ledger))
         }
       case "curate" =>
         // the q135 stateless prefix (C4 -> full Gopher) composing
@@ -342,8 +341,8 @@ object StreamBench {
         run("stream_incsemantic_rows_per_sec", Seq(corpusVecs)) { (s, h) =>
           val ledger = java.nio.file.Files
             .createTempDirectory("graft_incsem_ledger").toString + "/ledger"
-          Streams.incrementalSemanticBatches(
-            salted(s), corpusVecs, "emb", "doc_id", ledger, h)
+          Streams.run(salted(s), h)(
+            Streams.semanticAdmission(corpusVecs, "emb", "doc_id", ledger))
         }
       case "decontam" =>
         // streaming decontamination: the bench gram frame is the
@@ -392,10 +391,9 @@ object StreamBench {
           persistedOnly = sys.env.contains("GRAFT_PERSISTED_ONLY")) { (s, h) =>
           val base = java.nio.file.Files
             .createTempDirectory("graft_curatechain_ledgers").toString
-          Streams.curateIncrementalBatches(
-            s, corpusHashes, corpusSigs, "text", "doc_id",
-            s"$base/exact", s"$base/near", h,
-            benchGrams = Some(benchGrams))
+          Streams.run(s, h)(Streams.curationHead(corpusHashes, corpusSigs,
+            "text", "doc_id", s"$base/exact", s"$base/near") :+
+            Streams.decontamination(benchGrams, "clean", "doc_id"): _*)
         }
       case "ingestbins" =>
         // the FULL production ingest: the curatechain construction plus
@@ -647,12 +645,11 @@ object StreamBench {
           chainDir, wrapped.schema, nWrapped) { (s, h) =>
           val base = java.nio.file.Files
             .createTempDirectory("graft_curatesem_ledgers").toString
-          Streams.curateIncrementalBatches(
-            s, corpusHashes, corpusSigs, "text", "doc_id",
-            s"$base/exact", s"$base/near", h,
-            benchGrams = Some(benchGrams),
-            semanticIndex = Some(semIndex),
-            semanticLedgerDir = Some(s"$base/sem"))
+          Streams.run(s, h)(Streams.curationHead(corpusHashes, corpusSigs,
+            "text", "doc_id", s"$base/exact", s"$base/near") ++ Seq(
+            Streams.semanticAdmission(semIndex, "clean", "doc_id", s"$base/sem",
+              embed = true),
+            Streams.decontamination(benchGrams, "clean", "doc_id")): _*)
         }
       case "decontamsurg" =>
         // streaming SURGICAL decontamination: same stream/bench shape
@@ -678,8 +675,8 @@ object StreamBench {
         run("stream_domquota_rows_per_sec", Seq.empty) { (s, h) =>
           val ledger = java.nio.file.Files
             .createTempDirectory("graft_domquota_ledger").toString + "/ledger"
-          Streams.domainQuotaBatches(
-            s, "doc_id", "lang", "doc_id", "n_chars", budgets, ledger, h)
+          Streams.run(s, h)(
+            Streams.domainQuota("lang", "doc_id", "n_chars", budgets, ledger))
         }
       case "incdedup" =>
         // the "model" here is the static corpus whose hash projection
@@ -690,8 +687,8 @@ object StreamBench {
         run("stream_incdedup_rows_per_sec", Seq(corpus)) { (s, h) =>
           val ledger = java.nio.file.Files
             .createTempDirectory("graft_incdedup_ledger").toString + "/ledger"
-          Streams.incrementalDedupBatches(
-            s, corpus, "text", "doc_id", ledger, h)
+          Streams.run(s, h)(Streams.exactAdmission(
+            Streams.dedupCorpusHashes(corpus, "text"), "text", "doc_id", ledger))
         }
       case "mediaadmit" =>
         // streaming perceptual IMAGE admission: synthetic coded PNGs
@@ -737,8 +734,8 @@ object StreamBench {
           nInput = nMedia) { (s, h) =>
           val ledger = java.nio.file.Files
             .createTempDirectory("graft_mediaadmit_ledger").toString + "/ledger"
-          Streams.incrementalMediaNearDupBatches(
-            s, corpusFps, ledger, h, maxHamming = 3, mediaType = "image")
+          Streams.run(s, h)(
+            Streams.mediaAdmission(corpusFps, ledger, maxHamming = 3, mediaType = "image"))
         }
       case "videoadmit" =>
         // streaming perceptual VIDEO admission: 4-frame MJPEG-AVIs of
@@ -787,8 +784,8 @@ object StreamBench {
           nInput = nMedia) { (s, h) =>
           val ledger = java.nio.file.Files
             .createTempDirectory("graft_videoadmit_ledger").toString + "/ledger"
-          Streams.incrementalVideoNearDupBatches(
-            s, corpusFps, ledger, h, k = 4, maxHamming = 3, minMatches = 2)
+          Streams.run(s, h)(Streams.videoAdmission(
+            corpusFps, ledger, k = 4, maxHamming = 3, minMatches = 2))
         }
       case "bpescore" =>
         // tokenizer-artifact streaming encode, the production posture:

@@ -269,7 +269,7 @@ object Stress {
     //    clique generation is codegen-cheap; the downstream consumer
     //    (clusters, admission anti-joins) is what drowns.
     // the timed action is the ADMISSION CONSUMER (drop-set distinct over
-    // id_b — incrementalMediaNearDupBatches' exact shape), not a bare
+    // id_b — the media admission stage's exact shape), not a bare
     // count. Run BOTH legs at 20k and 100k: the guarded leg's work is
     // LINEAR in flood size (star edges) while the unguarded clique is
     // QUADRATIC — 5× the flood is 25× the pairs, and no local

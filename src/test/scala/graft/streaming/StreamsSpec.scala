@@ -734,11 +734,11 @@ class StreamsSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_dedup_ledger").toString + "/l"
     val input = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-    val writer = Streams.incrementalDedupBatches(
-      input.toDF().toDF("doc_id", "text"), corpus, "text", "doc_id", ledgerDir,
+    val writer = Streams.run(input.toDF().toDF("doc_id", "text"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0), r.getString(1)))
-      })
+      })(Streams.exactAdmission(
+        Streams.dedupCorpusHashes(corpus, "text"), "text", "doc_id", ledgerDir))
     val q = writer.start()
     try {
       // batch 0: corpus dup dropped; within-batch dup keeps min id
@@ -770,11 +770,10 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val corpusSigs = Streams.nearDupCorpusSignatures(corpus, "text", "doc_id")
-    val writer = Streams.incrementalNearDupBatches(
-      input.toDF().toDF("doc_id", "text"), corpusSigs, "text", "doc_id", ledgerDir,
+    val writer = Streams.run(input.toDF().toDF("doc_id", "text"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
-      })
+      })(Streams.nearAdmission(corpusSigs, "text", "doc_id", ledgerDir))
     val q = writer.start()
     try {
       // batch 0: near-copy of corpus X dropped; Z admitted; Z's
@@ -809,12 +808,11 @@ class StreamsSpec extends SparkSpec {
     // replay safety: re-running batch 1's content as a NEW batch id
     // must drop everything it admitted before (the ledger catches it);
     // and a replayed batch is filtered out of its own prior set by
-    // construction (the incrementalDedupBatches posture)
-    val q2 = Streams.incrementalNearDupBatches(
-      input.toDF().toDF("doc_id", "text"), corpusSigs, "text", "doc_id", ledgerDir,
+    // construction (the exactAdmission posture)
+    val q2 = Streams.run(input.toDF().toDF("doc_id", "text"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
-      }).start()
+      })(Streams.nearAdmission(corpusSigs, "text", "doc_id", ledgerDir)).start()
     try {
       input.addData((18L, near("late arrival with its own brand new words in this sentence")))
       q2.processAllAvailable()
@@ -831,11 +829,10 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_deg_ledger").toString + "/l"
     val input = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streams.incrementalNearDupBatches(
-      input.toDF().toDF("doc_id", "text"), corpusSigs, "text", "doc_id", ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "text"),
       (fresh, _) => admitted.synchronized {
         admitted ++= fresh.collect().map(_.getLong(0))
-      }).start()
+      })(Streams.nearAdmission(corpusSigs, "text", "doc_id", ledgerDir)).start()
     try {
       // two punctuation-only docs in ONE batch: identical sentinel
       // signatures, but BOTH must be admitted (the pre-fix regression:
@@ -919,11 +916,11 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_video_ledger").toString + "/l"
     val input = MemoryStream[(Long, Array[Byte])]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = Streams.incrementalVideoNearDupBatches(
-      input.toDF().toDF("media_id", "content"), corpusFps, ledgerDir,
+    val q = Streams.run(input.toDF().toDF("media_id", "content"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
-      }, k = 4, maxHamming = 3, minMatches = 2).start()
+      })(Streams.videoAdmission(corpusFps, ledgerDir,
+        k = 4, maxHamming = 3, minMatches = 2)).start()
     try {
       // batch 0: id1 matches corpus A on frames {0,1} (hamming 3, 1) —
       // evidence 2, drops; id2 matches A on frame 0 ONLY — below the
@@ -978,12 +975,11 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_audiow_ledger").toString + "/l"
     val input = MemoryStream[(Long, Array[Byte])]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = Streams.incrementalAudioWindowedNearDupBatches(
-      input.toDF().toDF("media_id", "content"), corpusFps, ledgerDir,
+    val q = Streams.run(input.toDF().toDF("media_id", "content"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
-      }, segSamples = seg, maxSegments = 8,
-      maxHamming = 3, minMatches = 2).start()
+      })(Streams.audioWindowedAdmission(corpusFps, ledgerDir,
+        segSamples = seg, maxSegments = 8, maxHamming = 3, minMatches = 2)).start()
     try {
       // batch 0: id1 = A with a 2-segment appended tail — its 4 leading
       // segments match held A exactly, drops; id2 matches A on segment
@@ -1028,11 +1024,11 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_media_ledger").toString + "/l"
     val input = MemoryStream[(Long, Array[Byte])]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = Streams.incrementalMediaNearDupBatches(
-      input.toDF().toDF("media_id", "content"), corpusFps, ledgerDir,
+    val q = Streams.run(input.toDF().toDF("media_id", "content"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
-      }, maxHamming = 3, mediaType = "image").start()
+      })(Streams.mediaAdmission(corpusFps, ledgerDir,
+        maxHamming = 3, mediaType = "image")).start()
     try {
       // batch 0: near-copy of corpus A dropped; Z admitted; Z's
       // near-copy dropped within batch (2 < 5); unrelated W admitted;
@@ -1052,11 +1048,11 @@ class StreamsSpec extends SparkSpec {
     assert(ledger.count() == 3)
     assert(ledger.filter(col("batch_id") === 0L).count() == 2)
     // replay posture: a near-copy of ledgered V in a later batch drops
-    val q2 = Streams.incrementalMediaNearDupBatches(
-      input.toDF().toDF("media_id", "content"), corpusFps, ledgerDir,
+    val q2 = Streams.run(input.toDF().toDF("media_id", "content"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
-      }, maxHamming = 3, mediaType = "image").start()
+      })(Streams.mediaAdmission(corpusFps, ledgerDir,
+        maxHamming = 3, mediaType = "image")).start()
     try {
       input.addData((18L, png(V ^ (1L << 50))))
       q2.processAllAvailable()
@@ -1079,10 +1075,10 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_media_release").toString + "/l"
     val input = MemoryStream[(Long, Array[Byte])]
     graft.ops.Caches.release() // clean slate
-    val q = Streams.incrementalMediaNearDupBatches(
-      input.toDF().toDF("media_id", "content"), corpusFps, ledgerDir,
-      (fresh, _) => { fresh.count(); () },
-      maxHamming = 3, mediaType = "image").start()
+    val q = Streams.run(input.toDF().toDF("media_id", "content"),
+      (fresh, _) => { fresh.count(); () })(
+      Streams.mediaAdmission(corpusFps, ledgerDir,
+        maxHamming = 3, mediaType = "image")).start()
     try {
       (1 to 4).foreach { b =>
         input.addData((b.toLong, png(b.toLong * 0x1234567L)))
@@ -1111,11 +1107,11 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_flood_ledger").toString + "/l"
     val input = MemoryStream[(Long, Array[Byte])]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streams.incrementalMediaNearDupBatches(
-      input.toDF().toDF("media_id", "content"), corpusFps, ledgerDir,
+    val q = Streams.run(input.toDF().toDF("media_id", "content"),
       (fresh, _) => admitted.synchronized {
         admitted ++= fresh.collect().map(_.getLong(0))
-      }, maxHamming = 3, mediaType = "image").start()
+      })(Streams.mediaAdmission(corpusFps, ledgerDir,
+        maxHamming = 3, mediaType = "image")).start()
     try {
       input.addData(
         (1L, png(A ^ (1L | (1L << 21)))), // near-copy of the flood: drops
@@ -1123,11 +1119,10 @@ class StreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally { q.stop(); corpusFps.unpersist() }
     assert(admitted.toSeq == Seq(2L))
-    // a typo'd mediaType fails at writer construction, not mid-stream
+    // a typo'd mediaType fails at stage construction, not mid-stream
     val err = intercept[IllegalArgumentException] {
-      Streams.incrementalMediaNearDupBatches(
-        input.toDF().toDF("media_id", "content"), corpusFps, ledgerDir,
-        (_, _) => (), maxHamming = 3, mediaType = "img")
+      Streams.run(input.toDF().toDF("media_id", "content"), (_, _) => ())(
+        Streams.mediaAdmission(corpusFps, ledgerDir, maxHamming = 3, mediaType = "img"))
     }
     assert(err.getMessage.contains("image|audio"))
     // 2) frame-evidence path: every corpus video carries the same two
@@ -1143,11 +1138,11 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_floodv_ledger").toString + "/l"
     val vInput = MemoryStream[(Long, Array[Byte])]
     val vAdmitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val vq = Streams.incrementalVideoNearDupBatches(
-      vInput.toDF().toDF("media_id", "content"), vidFps, vLedger,
+    val vq = Streams.run(vInput.toDF().toDF("media_id", "content"),
       (fresh, _) => vAdmitted.synchronized {
         vAdmitted ++= fresh.collect().map(_.getLong(0))
-      }, k = 2, maxHamming = 3, minMatches = 2).start()
+      })(Streams.videoAdmission(vidFps, vLedger,
+        k = 2, maxHamming = 3, minMatches = 2)).start()
     try {
       vInput.addData((7L, avi(cards))) // title cards only: admits
       vq.processAllAvailable()
@@ -1164,11 +1159,10 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(String, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[String]
     val body = "a sentence with enough words to shingle and survive on its own today"
-    val q = Streams.incrementalNearDupBatches(
-      input.toDF().toDF("doc_id", "text"), corpusSigs, "text", "doc_id", ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "text"),
       (fresh, _) => admitted.synchronized {
         admitted ++= fresh.collect().map(_.getString(0))
-      }).start()
+      })(Streams.nearAdmission(corpusSigs, "text", "doc_id", ledgerDir)).start()
     try {
       input.addData(("a", body))
       q.processAllAvailable()
@@ -1189,11 +1183,10 @@ class StreamsSpec extends SparkSpec {
     val body = "a long enough sentence with plenty of words to shingle and compare today"
     val input = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streams.incrementalNearDupBatches(
-      input.toDF().toDF("doc_id", "text"), corpusSigs, "text", "doc_id", ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "text"),
       (fresh, _) => admitted.synchronized {
         admitted ++= fresh.collect().map(_.getLong(0))
-      }, maxBand = 1).start()
+      })(Streams.nearAdmission(corpusSigs, "text", "doc_id", ledgerDir, maxBand = 1)).start()
     try {
       // two near-identical docs in ONE batch: with maxBand = 1 every
       // shared bucket is oversized (2 members) and dropped, so no
@@ -1216,12 +1209,150 @@ class StreamsSpec extends SparkSpec {
       "text", "doc_id", numPerms = 32)
     val input = MemoryStream[(Long, String)]
     val e = intercept[IllegalArgumentException] {
-      Streams.incrementalNearDupBatches(
-        input.toDF().toDF("doc_id", "text"), corpusSigs, "text", "doc_id",
-        java.nio.file.Files.createTempDirectory("graft_mm_ledger").toString + "/l",
-        (_, _) => (), numPerms = 64)
+      Streams.run(input.toDF().toDF("doc_id", "text"), (_, _) => ())(
+        Streams.nearAdmission(corpusSigs, "text", "doc_id",
+          java.nio.file.Files.createTempDirectory("graft_mm_ledger").toString + "/l",
+          numPerms = 64))
     }
     assert(e.getMessage.contains("numPerms"))
+  }
+
+  test("near admission: null ids are never admitted; duplicate ids admit or drop together") {
+    implicit val sq = spark.sqlContext
+    val xText = "the quick brown fox jumps over the lazy dog while morning light settles on the quiet meadow road"
+    val zText = "completely different content about spark shuffles exchanges and the catalyst optimizer rules engine"
+    val wText = "a totally unrelated body of words standing on its own here with nothing else around it today"
+    val yText = "late arrival with its own brand new words in this sentence and a few more to be safe"
+    val uText = "harbor cranes lift painted containers onto waiting ships beneath a pale winter evening sky"
+    val vText = "seven violins tuned before the concert hall doors opened to the waiting crowd outside"
+    def near(t: String) = t + " extra"
+    val corpus = Seq((100L, xText)).toDF("doc_id", "text")
+    val corpusSigs = Streams.nearDupCorpusSignatures(corpus, "text", "doc_id")
+    val ledgerDir = java.nio.file.Files
+      .createTempDirectory("graft_nearids_ledger").toString + "/l"
+    val input = MemoryStream[(Option[Long], String)]
+    val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
+    val q = Streams.run(input.toDF().toDF("doc_id", "text"),
+      (fresh, bid) => admitted.synchronized {
+        admitted ++= fresh.collect().map(r => (bid, r.getLong(0), r.getString(1)))
+      })(Streams.nearAdmission(corpusSigs, "text", "doc_id", ledgerDir)).start()
+    try {
+      // batch 0: id 1 twice, both fresh — both rows admitted; id 2 has
+      // one row near corpus X, so BOTH its rows drop; id 3 near-copies
+      // id 1's z row within the batch — drops; null-id rows are never
+      // admitted (fresh y, and u, whose near-copy id 4 then admits:
+      // a null id pairs with nothing)
+      input.addData((Some(1L), zText), (Some(1L), wText),
+        (Some(2L), near(xText)), (Some(2L), vText),
+        (Some(3L), near(zText)), (None, yText), (None, uText),
+        (Some(4L), near(uText)))
+      q.processAllAvailable()
+      // batch 1: 5 near-copies id 1's w row — drops via the ledger; y
+      // and v were never admitted, so 6 and 7 admit
+      input.addData((Some(5L), near(wText)), (Some(6L), yText),
+        (Some(7L), vText), (None, zText))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(admitted.sortBy(t => (t._2, t._3)).toSeq == Seq(
+      (0L, 1L, wText), (0L, 1L, zText), (0L, 4L, near(uText)),
+      (1L, 6L, yText), (1L, 7L, vText)))
+    // ledger: one signature row per admitted ROW, by batch
+    val ledger = spark.read.parquet(ledgerDir)
+      .select(col("batch_id").cast("long"), col("_gn_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(ledger == Seq((0L, 1L), (0L, 1L), (0L, 4L), (1L, 6L), (1L, 7L)))
+  }
+
+  test("media admission: duplicate ids admit or drop together; only decodable rows ledger") {
+    implicit val sq = spark.sqlContext
+    import graft.operators.Multimodal.JdkCodec
+    val A = 0L
+    val Z = -1L
+    val W = 0x00000000FFFFFFFFL
+    val V = 0xFFFF0000FFFF0000L
+    val U = 0x0000FFFF0000FFFFL
+    def png(code: Long) = JdkCodec.encodeCodedPng(code, 1, 1)
+    val corpus = Seq((100L, png(A))).toDF("media_id", "content")
+    val corpusFps = Streams.mediaCorpusFingerprints(corpus, "image")
+    val ledgerDir = java.nio.file.Files
+      .createTempDirectory("graft_mediaids_ledger").toString + "/l"
+    val input = MemoryStream[(Long, Array[Byte])]
+    val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val q = Streams.run(input.toDF().toDF("media_id", "content"),
+      (fresh, bid) => admitted.synchronized {
+        admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
+      })(Streams.mediaAdmission(corpusFps, ledgerDir,
+        maxHamming = 3, mediaType = "image")).start()
+    try {
+      // batch 0: id 1 twice (Z, W), both fresh — both admitted; id 2
+      // has one row near corpus A, so BOTH its rows drop; id 3
+      // near-copies id 1's Z within the batch — drops; id 4 twice, one
+      // undecodable — both admitted, only U ledgered
+      input.addData((1L, png(Z)), (1L, png(W)),
+        (2L, png(A ^ (1L << 7))), (2L, png(V)),
+        (3L, png(Z ^ (1L << 5))),
+        (4L, Array[Byte](1, 2, 3)), (4L, png(U)))
+      q.processAllAvailable()
+      // batch 1: 5 near-copies id 1's W — drops via the ledger; V was
+      // never admitted, so 6 admits
+      input.addData((5L, png(W ^ (1L << 40))), (6L, png(V)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(admitted.sorted.toSeq == Seq(
+      (0L, 1L), (0L, 1L), (0L, 4L), (0L, 4L), (1L, 6L)))
+    val ledger = spark.read.parquet(ledgerDir)
+      .select(col("batch_id").cast("long"), col("media_id"), col("fp")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    assert(ledger == Seq((0L, 1L, Z), (0L, 1L, W), (0L, 4L, U), (1L, 6L, V)).sorted)
+  }
+  test("run chains near admission into domain quota, with per-stage counts") {
+    implicit val sq = spark.sqlContext
+    val zText = "completely different content about spark shuffles exchanges and the catalyst optimizer rules engine"
+    val wText = "a totally unrelated body of words standing on its own here with nothing else around it today"
+    val yText = "late arrival with its own brand new words in this sentence and a few more to be safe"
+    val uText = "harbor cranes lift painted containers onto waiting ships beneath a pale winter evening sky"
+    val vText = "seven violins tuned before the concert hall doors opened to the waiting crowd outside"
+    def near(t: String) = t + " extra"
+    val corpusSigs = Streams.nearDupCorpusSignatures(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", "doc_id")
+    val base = java.nio.file.Files.createTempDirectory("graft_near_quota").toString
+    val input = MemoryStream[(Long, String, Long, Long, String)]
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    val counts = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+    val q = Streams.run(input.toDF().toDF("doc_id", "dom", "ord", "toks", "text"),
+      (out, bid) => got.synchronized {
+        got ++= out.select("doc_id", "start_off").collect()
+          .map(r => (bid, r.getLong(0), r.getLong(1)))
+      },
+      onCounts = Some((n, bid) => counts.synchronized { counts += bid -> n }))(
+      Streams.nearAdmission(corpusSigs, "text", "doc_id", s"$base/near"),
+      Streams.domainQuota("dom", "ord", "toks", Map("a" -> 10L, "b" -> 15L),
+        s"$base/quota")).start()
+    try {
+      // batch 0: 2 near-copies 1 within the batch; a admits 1 and 4
+      // (4 starts at 5 < 10 and straddles to 11), b admits 3
+      input.addData((1L, "a", 1L, 5L, zText), (2L, "a", 2L, 5L, near(zText)),
+        (3L, "b", 3L, 12L, wText), (4L, "a", 4L, 6L, yText))
+      q.processAllAvailable()
+      // batch 1: 5 passes near admission but a is full; 6 starts b at
+      // 12 < 15; 7 near-copies ledgered 3
+      input.addData((5L, "a", 5L, 2L, uText), (6L, "b", 6L, 4L, vText),
+        (7L, "b", 7L, 1L, near(wText)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(got.sorted.toSeq == Seq((0L, 1L, 0L), (0L, 3L, 0L), (0L, 4L, 5L), (1L, 6L, 12L)))
+    // input, near-admitted, quota-admitted
+    assert(counts.toMap == Map(0L -> Seq(4L, 3L, 3L), 1L -> Seq(3L, 2L, 1L)))
+    // each stage ledgers its own survivors: near records 5 (dropped by
+    // the quota after it), the quota records admitted tokens per domain
+    assert(spark.read.parquet(s"$base/near")
+      .select(col("batch_id").cast("long"), col("_gn_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((0L, 1L), (0L, 3L), (0L, 4L), (1L, 5L), (1L, 6L)))
+    assert(spark.read.parquet(s"$base/quota")
+      .select(col("batch_id").cast("long"), col("domain"), col("batch_tokens")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet ==
+      Set((0L, "a", 11L), (0L, "b", 12L), (1L, "b", 4L)))
   }
 
   test("c4Clean runs directly on a streaming frame (stateless narrow op)") {
@@ -1266,12 +1397,10 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_sem_ledger").toString + "/l"
     val input = MemoryStream[(Long, Seq[Float])]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = Streams.incrementalSemanticBatches(
-      input.toDF().toDF("vec_id", "embedding"), corpusVecs,
-      "embedding", "vec_id", ledgerDir,
+    val q = Streams.run(input.toDF().toDF("vec_id", "embedding"),
       (fresh, bid) => admitted.synchronized {
         admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
-      }).start()
+      })(Streams.semanticAdmission(corpusVecs, "embedding", "vec_id", ledgerDir)).start()
     try {
       // batch 0: 1 = exact copy of the CORPUS vector (dropped); 2 =
       // fresh direction (admitted); 5 = copy of 2's vector within the
@@ -1310,12 +1439,10 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_semcap_ledger").toString + "/l"
     val input = MemoryStream[(Long, Seq[Float])]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streams.incrementalSemanticBatches(
-      input.toDF().toDF("vec_id", "embedding"), idx,
-      "embedding", "vec_id", ledgerDir,
+    val q = Streams.run(input.toDF().toDF("vec_id", "embedding"),
       (fresh, _) => admitted.synchronized {
         admitted ++= fresh.collect().map(_.getLong(0))
-      }).start()
+      })(Streams.semanticAdmission(idx, "embedding", "vec_id", ledgerDir)).start()
     try {
       // 1 = copy of the corpus vector: admitted (its bucket was capped
       // out of the index). 2/3/4 = three in-batch copies of another
@@ -1344,16 +1471,15 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
     // embedText composes INSIDE the streaming frame (narrow op), the
-    // admission writer consumes the derived vector column — the whole
+    // admission stage consumes the derived vector column — the whole
     // text→vector→semantic-dedup path in-engine
     val stream = input.toDF().toDF("doc_id", "text")
       .select(col("doc_id"), col("text"),
         graft.functions.TextFunctions.embedText(col("text"), 128).as("emb"))
-    val q = Streams.incrementalSemanticBatches(
-      stream, corpusVecs, "emb", "doc_id", ledgerDir,
+    val q = Streams.run(stream,
       (fresh, _) => admitted.synchronized {
         admitted ++= fresh.collect().map(_.getLong(0))
-      }).start()
+      })(Streams.semanticAdmission(corpusVecs, "emb", "doc_id", ledgerDir)).start()
     try {
       // 1 = exact text copy of the corpus doc (identical embedding —
       // dropped); 2 = fresh text (admitted); 3 = exact copy of 2
@@ -1377,13 +1503,12 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_pack_ledger").toString + "/l"
     val input = MemoryStream[(Long, String, Long, Long)]
     val packed = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long, Long)]
-    val q = Streams.packBatches(
-      input.toDF().toDF("doc_id", "shard", "ord", "n_tokens"),
-      "doc_id", "shard", "ord", "n_tokens", budget = 10L, ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "shard", "ord", "n_tokens"),
       (out, _) => packed.synchronized {
         packed ++= out.collect().map(r => (r.getLong(0), r.getString(1),
           r.getLong(2), r.getLong(3), r.getLong(4)))
-      }).start()
+      })(Streams.pack("doc_id", "shard", "ord", "n_tokens", budget = 10L, ledgerDir))
+      .start()
     try {
       Seq(b0, b1, b2).foreach { b =>
         input.addData(b); q.processAllAvailable()
@@ -1421,14 +1546,12 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_packmat_ledger").toString
     val input = MemoryStream[(Long, String, Long, Long, String)]
     val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long, String)]
-    val q = Streams.packMaterializeBatches(
-      input.toDF().toDF("doc_id", "shard", "ord", "n_tokens", "text"),
-      "doc_id", "shard", "ord", "n_tokens", "text", budget = 10L,
-      ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "shard", "ord", "n_tokens", "text"),
       (out, bid) => emitted.synchronized {
         emitted ++= out.collect().map(r => (bid, r.getString(0),
           r.getLong(1), r.getLong(2), r.getString(3)))
-      }).start()
+      })(Streams.packMaterialize("doc_id", "shard", "ord", "n_tokens", "text",
+        budget = 10L, ledgerDir)).start()
     try {
       Seq(b0, b1, b2).foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
@@ -1469,14 +1592,12 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_domquota_ledger").toString
     val input = MemoryStream[(Long, String, Long, Long)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val q = Streams.domainQuotaBatches(
-      input.toDF().toDF("doc_id", "dom", "ord", "toks"),
-      "doc_id", "dom", "ord", "toks", Map("a" -> 10L, "b" -> 25L),
-      ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "dom", "ord", "toks"),
       (out, _) => got.synchronized {
         got ++= out.select("doc_id", "dom", "start_off").collect()
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      }).start()
+      })(Streams.domainQuota("dom", "ord", "toks", Map("a" -> 10L, "b" -> 25L),
+        ledgerDir)).start()
     try {
       Seq(b0, b1).foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
@@ -1510,14 +1631,12 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_domquota_domaincol").toString
     val input = MemoryStream[(Long, String, Long, Long)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val q = Streams.domainQuotaBatches(
-      input.toDF().toDF("doc_id", "domain", "ord", "toks"),
-      "doc_id", "domain", "ord", "toks", Map("a" -> 10L, "b" -> 25L),
-      ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "domain", "ord", "toks"),
       (out, _) => got.synchronized {
         got ++= out.select("doc_id", "domain", "start_off").collect()
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      }).start()
+      })(Streams.domainQuota("domain", "ord", "toks", Map("a" -> 10L, "b" -> 25L),
+        ledgerDir)).start()
     try {
       Seq(b0, b1).foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
@@ -1531,7 +1650,7 @@ class StreamsSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     // the admitted rows carry start_off, so the handler can hand them
     // straight to trainingOrder (epoch = 0: a stream has no epochs —
-    // the domainQuotaBatches scaladoc's documented posture) and the
+    // the domainQuota scaladoc's documented posture) and the
     // bin/key placement equals the batch path over the same admissions
     val b0 = Seq((1L, "a", 1L, 5L), (2L, "a", 2L, 3L), (3L, "b", 3L, 6L))
     val b1 = Seq((4L, "a", 4L, 6L), (5L, "b", 5L, 6L))
@@ -1540,10 +1659,7 @@ class StreamsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Long, Long)]
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, String, Long)]
-    val q = Streams.domainQuotaBatches(
-      input.toDF().toDF("doc_id", "dom", "ord", "toks"),
-      "doc_id", "dom", "ord", "toks", Map("a" -> 12L, "b" -> 20L),
-      ledgerDir,
+    val q = Streams.run(input.toDF().toDF("doc_id", "dom", "ord", "toks"),
       (out, _) => got.synchronized {
         val mix = out
           .withColumnRenamed("dom", "domain")
@@ -1554,7 +1670,8 @@ class StreamsSpec extends SparkSpec {
           .select("doc_id", "bin", "off", "ord_key", "shard").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getString(3), r.getLong(4)))
-      }).start()
+      })(Streams.domainQuota("dom", "ord", "toks", Map("a" -> 12L, "b" -> 20L),
+        ledgerDir)).start()
     try {
       Seq(b0, b1).foreach { b => input.addData(b); q.processAllAvailable() }
     } finally q.stop()
@@ -1819,15 +1936,15 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_curate_ledgers").toString
     val input = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Streams.CurateStats)]
-    val q = Streams.curateIncrementalBatches(
-      input.toDF().toDF("doc_id", "text"), corpusHashes, corpusSigs,
-      "text", "doc_id", s"$base/exact", s"$base/near",
+    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+    val q = Streams.run(input.toDF().toDF("doc_id", "text"),
       (out, bid) => admitted.synchronized {
         admitted ++= out.collect().map(r => (bid, r.getLong(0)))
       },
-      benchGrams = Some(benchGrams),
-      onStats = Some((s, bid) => stats.synchronized { stats += bid -> s })).start()
+      onCounts = Some((n, bid) => stats.synchronized { stats += bid -> n }))(
+      Streams.curationHead(corpusHashes, corpusSigs, "text", "doc_id",
+        s"$base/exact", s"$base/near") :+
+        Streams.decontamination(benchGrams, "clean", "doc_id"): _*).start()
     try {
       // batch 0: A admitted; F fails curation ({); 3 = exact copy of A
       // within the batch (keep-first); G exact-dropped vs the CORPUS;
@@ -1859,14 +1976,14 @@ class StreamsSpec extends SparkSpec {
     assert(nearLedger.filter(col("batch_id") === 1L).count() == 1)
     // the admitted stream carries (id, clean): cleaned text, not raw
     assert(admitted.size == 2)
-    // the observability funnel: per-batch stage counts
+    // the observability funnel: the input and per-stage counts
     // batch 0: 5 in → 4 curated (F fails) → 2 exact-fresh (3 dup of A
     // in-batch, G vs corpus) → 2 near-fresh → 1 admitted (D decontam'd)
     // batch 1: 3 in → 3 curated → 2 exact-fresh (6 via ledger) →
     // 1 near-fresh (7 via near ledger) → 1 admitted
     val byBatch = stats.toMap
-    assert(byBatch(0L) == Streams.CurateStats(5, 4, 2, 2, 1))
-    assert(byBatch(1L) == Streams.CurateStats(3, 3, 2, 1, 1))
+    assert(byBatch(0L) == Seq(5L, 4L, 2L, 2L, 1L))
+    assert(byBatch(1L) == Seq(3L, 3L, 2L, 1L, 1L))
   }
 
   test("curateIncrementalBatches replay: the re-run batch admits the same ids, ledgers unchanged") {
@@ -1985,17 +2102,16 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_curate_sem_ledgers").toString
     val input = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Streams.CurateStats)]
-    val q = Streams.curateIncrementalBatches(
-      input.toDF().toDF("doc_id", "text"), corpusHashes, corpusSigs,
-      "text", "doc_id", s"$base/exact", s"$base/near",
+    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+    val q = Streams.run(input.toDF().toDF("doc_id", "text"),
       (out, bid) => admitted.synchronized {
         admitted ++= out.collect().map(r => (bid, r.getLong(0)))
       },
-      onStats = Some((s, bid) => stats.synchronized { stats += bid -> s }),
-      semanticIndex = Some(semIndex),
-      semanticLedgerDir = Some(s"$base/sem"),
-      eps = 0.25).start()
+      onCounts = Some((n, bid) => stats.synchronized { stats += bid -> n }))(
+      Streams.curationHead(corpusHashes, corpusSigs, "text", "doc_id",
+        s"$base/exact", s"$base/near") :+
+        Streams.semanticAdmission(semIndex, "clean", "doc_id", s"$base/sem",
+          eps = 0.25, embed = true): _*).start()
     try {
       // batch 0: 1 = A admitted; 2 = stride-permuted G — different
       // bytes (passes exact), scrambled shingles (passes near, estJ
@@ -2020,10 +2136,10 @@ class StreamsSpec extends SparkSpec {
     assert(semLedger.filter(col("batch_id") === 0L).count() == 1)
     assert(semLedger.filter(col("batch_id") === 1L).count() == 1)
     // funnel gains the semantic count: batch 0 = 3 in → 3 curated → 3
-    // exact-fresh → 3 near-fresh → 1 semantic-fresh → 1 admitted
+    // exact-fresh → 3 near-fresh → 1 semantic-fresh = 1 admitted
     val byBatch = stats.toMap
-    assert(byBatch(0L) == Streams.CurateStats(3, 3, 3, 3, 1, Some(1)))
-    assert(byBatch(1L) == Streams.CurateStats(2, 2, 2, 2, 1, Some(1)))
+    assert(byBatch(0L) == Seq(3L, 3L, 3L, 3L, 1L))
+    assert(byBatch(1L) == Seq(2L, 2L, 2L, 2L, 1L))
   }
 
   test("curatePages (C4 → full Gopher) streams == batch (stateless prefix)") {

@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Raw WARC `response`-record ingestion — the step BEFORE the WET
@@ -223,46 +223,24 @@ object WarcHttp {
       decode(msg.body, charsetOf(ct)))
   }
 
-  /** Rows from an already-in-memory (possibly gzip) archive image —
-    * test/fixture surface; parses record-at-a-time (shared splitter
-    * with the distributed scan), so peak memory past the raw bytes is
-    * one record.
-    */
-  private[graft] def responsesOf(file: String, raw: Array[Byte]): Iterator[Row] = {
-    val in = new java.io.ByteArrayInputStream(raw)
-    val decoded =
-      if (raw.length >= 2 && (raw(0) & 0xff) == 0x1f && (raw(1) & 0xff) == 0x8b)
-        new java.util.zip.GZIPInputStream(in, 1 << 16)
-      else in
-    WetReader.parseWarcStream(decoded)
-      .filter(_.warcType.equalsIgnoreCase("response"))
-      .map(rowOf(file, _))
-  }
-
   /** Distributed raw-WARC response scan: one row per `response` record
     * with the HTTP envelope split off and the body transfer/content
-    * decoding undone. Same parallelism contract as [[WetReader.read]]:
-    * one task per (gzip non-splittable) file, narrow flatMap, zero
-    * shuffle — and the same record-at-a-time streaming parse, so peak
-    * task memory is O(largest record): a real ~1 GB `.warc.gz` segment
-    * (3–5 GB raw) streams through where a whole-file inflate would
-    * break the 2 GiB array limit. `request`/`metadata`/`warcinfo`
+    * decoding undone. The same scan as [[WetReader.read]]
+    * ([[WetReader.scan]]): one task per (gzip non-splittable) file,
+    * narrow flatMap, zero shuffle, record-at-a-time parse with peak
+    * task memory O(largest record). `request`/`metadata`/`warcinfo`
     * records are skipped — read them via `WetReader.read(keepAll =
     * true)` if needed.
     */
   def readResponses(
       spark: SparkSession,
       path: String,
-      globFilter: Option[String] = None): DataFrame = {
-    val files = Readers.binaryFiles(spark, path, globFilter).select("path")
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val enc = Encoders.row(schema)
-    files.flatMap { row: Row =>
-      val file = row.getString(0)
-      WetReader.streamRecords(file, hconf.value)
-        .filter(_.warcType.equalsIgnoreCase("response"))
-        .map(rowOf(file, _))
-    }(enc)
-  }
+      globFilter: Option[String] = None): DataFrame =
+    ofListing(Readers.binaryFiles(spark, path, globFilter))
+
+  /** [[readResponses]] over an existing binaryFile listing (batch or
+    * streaming).
+    */
+  private[graft] def ofListing(files: DataFrame): DataFrame =
+    WetReader.scan(files, Some("response"), schema, rowOf)
 }

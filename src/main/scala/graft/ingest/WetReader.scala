@@ -34,8 +34,9 @@ import org.apache.spark.sql.types._
   * Scale shape: gzip is not splittable, so the unit of parallelism is
   * the FILE — exactly how Common Crawl ships (tens of thousands of
   * ~150 MB `.wet.gz` segments per crawl), so a 100 TB crawl read is
-  * ~a million independent tasks with zero shuffle; the binaryFile
-  * source streams each file to one task and the parse is a narrow
+  * ~a million independent tasks with zero shuffle; a binaryFile
+  * listing (batch or streaming) hands each file's path to one task,
+  * which streams the file record-at-a-time ([[scan]]) in a narrow
   * flatMap. Driver never touches record bytes.
   *
   * Emits `(file, url, warc_date, record_id, content_length, text)`:
@@ -271,46 +272,51 @@ object WetReader {
       r.payload.length.toLong,
       new String(r.payload, "UTF-8"))
 
-  /** Rows from an already-in-memory (possibly gzip) file image — the
-    * streaming-source path, where the binaryFile stream source has the
-    * bytes anyway. Parses record-at-a-time over the buffer (shared code
-    * with the batch scan: streaming ≡ batch by construction), so peak
-    * memory past the raw bytes is one record, not the inflated file.
+  /** The one crawl-segment scan behind [[read]],
+    * [[WarcHttp.readResponses]] and their streaming twins
+    * ([[graft.streaming.Streams.readWetStream]] /
+    * `readWarcStream`): `files` is a batch or streaming binaryFile
+    * listing; only its `path` column is read, so the source never
+    * loads a segment's bytes into a row (and its `maxLength` cap never
+    * applies). Each task opens its file and parses record-at-a-time via
+    * [[streamRecords]], keeps the records of `recordType` (every record
+    * when `None`) and maps them through `rowOf` — peak task memory is
+    * O(largest record), and streaming ≡ batch by construction.
     */
-  private[graft] def recordsOf(
-      file: String, raw: Array[Byte], keepAll: Boolean): Iterator[Row] = {
-    val in = new ByteArrayInputStream(raw)
-    val decoded = if (isGzip(raw)) new GZIPInputStream(in, 1 << 16) else in
-    parseWarcStream(decoded)
-      .filter(r => keepAll || r.warcType.equalsIgnoreCase("conversion"))
-      .map(rowOf(file, _))
+  private[ingest] def scan(
+      files: DataFrame,
+      recordType: Option[String],
+      schema: StructType,
+      rowOf: (String, WarcRecord) => Row): DataFrame = {
+    val sc = files.sparkSession.sparkContext
+    // broadcast, not captured by the closure: a captured conf is
+    // serialized into every task binary and rebuilt in every task
+    val hconf = sc.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(sc.hadoopConfiguration))
+    files.select("path").flatMap { row: Row =>
+      val file = row.getString(0)
+      streamRecords(file, hconf.value.value)
+        .filter(r => recordType.forall(r.warcType.equalsIgnoreCase))
+        .map(rowOf(file, _))
+    }(Encoders.row(schema))
   }
 
   /** Distributed WET scan: `path` is a file, directory, or glob of
     * `.wet` / `.wet.gz` files (any WARC works; non-conversion records
     * are skipped unless `keepAll`). One task per file — the gzip
-    * non-splittability unit. Listing comes from the binaryFile source
-    * pruned to `path` ONLY (content is never read into a row); each
-    * task opens its file and parses record-at-a-time via
-    * [[parseWarcStream]], so peak task memory is O(largest record) —
-    * a 1 GB `.warc.gz` segment (3–5 GB raw) streams through where a
-    * whole-file inflate would break the 2 GiB array limit. The parse
-    * is a narrow flatMap: filters/projections run before any shuffle.
+    * non-splittability unit — through [[scan]]: a 1 GB `.warc.gz`
+    * segment (3–5 GB raw) streams through where a whole-file inflate
+    * would break the 2 GiB array limit. The parse is a narrow flatMap:
+    * filters/projections run before any shuffle.
     */
   def read(
       spark: SparkSession,
       path: String,
       globFilter: Option[String] = None,
-      keepAll: Boolean = false): DataFrame = {
-    val files = Readers.binaryFiles(spark, path, globFilter).select("path")
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val enc = Encoders.row(schema)
-    files.flatMap { row: Row =>
-      val file = row.getString(0)
-      streamRecords(file, hconf.value)
-        .filter(r => keepAll || r.warcType.equalsIgnoreCase("conversion"))
-        .map(rowOf(file, _))
-    }(enc)
-  }
+      keepAll: Boolean = false): DataFrame =
+    ofListing(Readers.binaryFiles(spark, path, globFilter), keepAll)
+
+  /** [[read]] over an existing binaryFile listing (batch or streaming). */
+  private[graft] def ofListing(files: DataFrame, keepAll: Boolean = false): DataFrame =
+    scan(files, if (keepAll) None else Some("conversion"), schema, rowOf)
 }

@@ -268,9 +268,11 @@ object Dedup {
       minhashCandidates(df, textCol, idCol, numPerms, bands),
       df, textCol, idCol, threshold)
 
-  /** THRESHOLD-PLANNED candidate generation: the banding comes from
-    * [[lshPlan]] instead of the fixed 8×8 default (tuned for ~0.77) —
-    * the entry point that makes the S-curve planner load-bearing. At
+  /** THRESHOLD-PLANNED near-dups: [[minhashNearDups]] with the banding
+    * from [[lshPlan]] instead of the fixed 8×8 default (tuned for
+    * ~0.77) — the entry point that makes the S-curve planner
+    * load-bearing. Candidates at the S-curve-optimal (bands, rows) for
+    * `threshold`, then the same exact Jaccard verification. At
     * threshold 0.9 with 64 perms the plan is 4 bands × 16 rows:
     * measured on the 10×-duplication replica (docs/SCALE.md round 14),
     * the planned banding ran the candidate+verify pipeline 1.6× faster
@@ -282,21 +284,6 @@ object Dedup {
     * widens to the S-curve's: 8×8 fires on 65% of 0.77-similar pairs,
     * 16 rows/band on 1.6%.
     */
-  def minhashCandidatesAt(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      threshold: Double,
-      numPerms: Int = 64,
-      maxBucket: Int = 500): DataFrame = {
-    val (bands, _) = lshPlan(threshold, numPerms)
-    minhashCandidates(df, textCol, idCol, numPerms, bands, maxBucket)
-  }
-
-  /** [[minhashNearDups]] with [[lshPlan]]-derived banding: candidates
-    * at the S-curve-optimal (bands, rows) for `threshold`, then the
-    * same exact Jaccard verification.
-    */
   def minhashNearDupsAt(
       df: DataFrame,
       textCol: String,
@@ -305,7 +292,8 @@ object Dedup {
       numPerms: Int = 64,
       maxBucket: Int = 500): DataFrame =
     verifyJaccard(
-      minhashCandidatesAt(df, textCol, idCol, threshold, numPerms, maxBucket),
+      minhashCandidates(df, textCol, idCol, numPerms,
+        lshPlan(threshold, numPerms)._1, maxBucket),
       df, textCol, idCol, threshold)
 
   /** SimHash fingerprints (fused tokenize+hash single pass; identical
@@ -727,9 +715,7 @@ object Dedup {
     */
   def clusters(pairs: DataFrame, maxIters: Int = 50,
       reliable: Boolean = false,
-      driverFinishEdges: Long = 2000000L,
-      driverProbeEvery: Int = 2): DataFrame = {
-    require(driverProbeEvery >= 1, "driverProbeEvery must be >= 1")
+      driverFinishEdges: Long = 2000000L): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
     // localCheckpoint pins its materialized blocks in the block manager
     // until the RDD is GC'd — over many rounds (and repeated calls in
@@ -828,14 +814,14 @@ object Dedup {
       // mapping onto the current labels (labels always lie inside
       // their component, so the component min over labels IS the
       // component min over ids). Probe cost is the contracted-graph
-      // build (two label joins + distinct) — paid every
-      // `driverProbeEvery` rounds, not every round, since on graphs
-      // that never fit the budget the probe is pure overhead; the
-      // frame is checkpointed so the driver finish COLLECTS the
-      // already-materialized blocks instead of re-running the joins.
+      // build (two label joins + distinct) — paid every second round,
+      // not every round, since on graphs that never fit the budget the
+      // probe is pure overhead; the frame is checkpointed so the
+      // driver finish COLLECTS the already-materialized blocks instead
+      // of re-running the joins.
       // Set driverFinishEdges = 0 to disable for pure-distributed runs.
       if (!converged && driverFinishEdges > 0 && integralIds &&
-          (it + 1) % driverProbeEvery == 0) {
+          (it + 1) % 2 == 0) {
         val la = next.select(col("id").as("id_a"), col("label").as("_graft_la"))
         val lb = next.select(col("id").as("id_b"), col("label").as("_graft_lb"))
         val (contracted, cIds) = cpTracked(

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.ingest.{WarcHttp, WetReader}
+
 /** Structured Streaming surface over the events table: windowed
   * aggregation with watermarks, and custom sessionization state via
   * flatMapGroupsWithState — the streaming extension plan (SURVEY.md
@@ -100,8 +102,9 @@ object Streams {
   /** Streaming WET source: watch `dir` for newly landed crawl segments
     * (`.wet` / `.wet.gz`, the Common Crawl delivery unit) and emit one
     * row per conversion record — [[graft.ingest.WetReader.schema]],
-    * parsed by the same record splitter as the batch reader (shared
-    * code: streaming ≡ batch by construction). The unit of both
+    * produced by the batch reader's own scan
+    * ([[graft.ingest.WetReader.scan]]: streaming ≡ batch by
+    * construction, task memory O(largest record)). The unit of both
     * discovery and parallelism is the FILE (gzip is not splittable),
     * exactly the production shape: a crawler drops finished segments
     * into the directory and each micro-batch picks up whole new files.
@@ -112,61 +115,39 @@ object Streams {
       spark: SparkSession,
       dir: String,
       glob: String = "*.wet.gz",
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val binarySchema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    val r = spark.readStream.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .schema(binarySchema)
-    val files = maxFilesPerTrigger
-      .fold(r)(n => r.option("maxFilesPerTrigger", n))
-      .load(dir)
-      .select("path", "content")
-    val enc = org.apache.spark.sql.Encoders.row(graft.ingest.WetReader.schema)
-    files.flatMap { row: org.apache.spark.sql.Row =>
-      graft.ingest.WetReader.recordsOf(
-        row.getString(0), row.getAs[Array[Byte]](1), keepAll = false)
-    }(enc)
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    WetReader.ofListing(segmentPaths(spark, dir, glob, maxFilesPerTrigger))
 
   /** Streaming twin of [[graft.ingest.WarcHttp.readResponses]]: new
     * raw `.warc.gz` segments appearing under `dir` become one row per
     * HTTP `response` record per micro-batch — the crawl-native arrival
     * shape one step BEFORE [[readWetStream]] (no WET extraction run).
-    * Same parse machinery as the batch scan (streaming ≡ batch by
-    * construction): record-at-a-time over the segment buffer, envelope
-    * split, de-chunk, content-decode, charset decode. Composes into
-    * the curation/admission chains via
+    * The batch scan itself ([[graft.ingest.WetReader.scan]]):
+    * record-at-a-time off disk, envelope split, de-chunk,
+    * content-decode, charset decode. Composes into the
+    * curation/admission chains via
     * [[graft.functions.TextFunctions.stripHtmlLines]] on `body`.
-    * The binaryFile stream source holds each segment's bytes in the
-    * task (its contract) — for archives past a few GB raw, run the
-    * batch scan on a schedule instead; it streams records off disk.
     */
   def readWarcStream(
       spark: SparkSession,
       dir: String,
       glob: String = "*.warc.gz",
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val binarySchema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    WarcHttp.ofListing(segmentPaths(spark, dir, glob, maxFilesPerTrigger))
+
+  /** Streaming binaryFile listing of the segments landing under `dir`
+    * (the source's own schema — a file stream needs one up front). The
+    * scan reads only `path`, so the source never loads `content`.
+    */
+  private def segmentPaths(
+      spark: SparkSession,
+      dir: String,
+      glob: String,
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
     val r = spark.readStream.format("binaryFile")
       .option("pathGlobFilter", glob)
-      .schema(binarySchema)
-    val files = maxFilesPerTrigger
-      .fold(r)(n => r.option("maxFilesPerTrigger", n))
-      .load(dir)
-      .select("path", "content")
-    val enc = org.apache.spark.sql.Encoders.row(graft.ingest.WarcHttp.schema)
-    files.flatMap { row: org.apache.spark.sql.Row =>
-      graft.ingest.WarcHttp.responsesOf(
-        row.getString(0), row.getAs[Array[Byte]](1))
-    }(enc)
+      .schema(org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat.schema)
+    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n)).load(dir)
   }
 
   /** Tumbling-window aggregation with a watermark: per (window, type)
@@ -849,6 +830,8 @@ object Streams {
     * every undecodable item into one false dup family. Ledger rows are
     * 8 bytes of fingerprint per admitted item — the cheapest ledger of
     * the admission family (vs 16-byte md5, numPerms×8-byte MinHash).
+    * A null `media_id` is never admitted and never fingerprinted (the
+    * same holds for [[videoAdmission]] / [[audioWindowedAdmission]]).
     * `maxHamming` and `mediaType` are checked at construction, so a
     * typo fails before the query starts, not minutes into it.
     */
@@ -863,8 +846,11 @@ object Streams {
       // consumed by both probes and the ledger rows; released with the
       // batch's scope, together with the operator caches simhashPairs /
       // simhashCrossPairs register per call (a 24/7 stream would
-      // otherwise grow the registry by one cached frame per batch)
-      val fps = graft.ops.Caches.owned(fingerprint(batch))
+      // otherwise grow the registry by one cached frame per batch).
+      // Null-id rows are never admitted (admitExcept), so they are
+      // never fingerprinted: the kernels read ids as primitive longs
+      val fps = graft.ops.Caches.owned(
+        fingerprint(batch.filter(col("media_id").isNotNull)))
       val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
         ledgerSchema("media_id" -> LongType, "fp" -> LongType), batchId)
         .select(col("media_id").as("id"), col("fp"))
@@ -1002,8 +988,9 @@ object Streams {
       .select(col(dropSide)).distinct()
     (batch, batchId) => {
       // consumed by both probes and the ledger rows; released with the
-      // batch's scope (see mediaAdmission)
-      val fps = graft.ops.Caches.owned(fingerprint(batch))
+      // batch's scope; null ids skip the kernels (see mediaAdmission)
+      val fps = graft.ops.Caches.owned(
+        fingerprint(batch.filter(col("media_id").isNotNull)))
       val ledgerFps = readLedger(batch.sparkSession, ledgerDir,
         ledgerSchema("media_id" -> LongType, "frame_idx" -> IntegerType, "fp" -> LongType),
         batchId).select(col("media_id"), col("frame_idx"), col("fp"))

@@ -850,6 +850,51 @@ class StreamsSpec extends SparkSpec {
     assert(ledger.count() == 1)
   }
 
+  /** Run `body` with the binaryFile source's per-file `content` cap set
+    * to `bytes`, restoring the session's value afterwards.
+    */
+  private def withBinaryFileMaxLength[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.sources.binaryFile.maxLength"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("readWetStream: segments stream as the batch scan's rows") {
+    import graft.ingest.WetFixture
+    val watched = java.nio.file.Files
+      .createTempDirectory("graft_wet_scan_watch").toString
+    def seg(name: String, ids: Seq[Int], gzip: Boolean = true): Unit =
+      WetFixture.writeWet(s"$watched/$name", ids.map { i =>
+        (s"https://crawl.test/w/$i", f"2024-05-${i + 1}%02dT00:00:00Z",
+          s"Wet stream page $i.\nSecond line $i.")
+      }, gzipPerRecord = gzip)
+    val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+    // every segment is larger than the cap: a scan that loads whole
+    // segments into binaryFile `content` cells fails the query
+    withBinaryFileMaxLength(64L) {
+      seg("seg-00000.wet.gz", Seq(0, 1)) // exists BEFORE the stream starts
+      val q = Streams.perBatch(Streams.readWetStream(spark, watched, glob = "*.wet*"))(
+        identity)((batch, _) => got.synchronized {
+          got ++= batch.collect().map(_.toSeq)
+        }).start()
+      try {
+        q.processAllAvailable()
+        // land while the stream runs: a gzip segment and a plain one
+        seg("seg-00001.wet.gz", Seq(2, 3))
+        seg("seg-00002.wet", Seq(4, 5, 6), gzip = false)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    // streaming ≡ batch: the same rows as the batch scan over the dir
+    val batchRows = graft.ingest.WetReader.read(spark, watched, Some("*.wet*"))
+      .collect().map(_.toSeq)
+    assert(batchRows.length == 7) // warcinfo records skipped
+    assert(got.sortBy(_.toString) == batchRows.toSeq.sortBy(_.toString))
+    assert(got.map(_(2)).toSet == (0 until 7).map(i => s"https://crawl.test/w/$i").toSet)
+  }
+
   test("readWarcStream: raw .warc.gz segments stream as the batch scan's rows") {
     import graft.ingest.WetFixture
     import WetFixture.HttpShape
@@ -892,6 +937,37 @@ class StreamsSpec extends SparkSpec {
       assert(got.exists(_._3 ==
         WetFixture.wrapHtml(s"Warc stream page $i.\nSecond line $i.")))
     }
+  }
+
+  test("readWarcStream: segments over binaryFile.maxLength stream as the batch scan's rows") {
+    import graft.ingest.WetFixture
+    import WetFixture.HttpShape
+    val watched = java.nio.file.Files
+      .createTempDirectory("graft_warc_scan_watch").toString
+    def seg(name: String, ids: Seq[Int]): Unit =
+      WetFixture.writeWarc(s"$watched/$name", ids.map { i =>
+        val shape = if (i % 2 == 0) HttpShape(chunked = true) else HttpShape(encoding = "gzip")
+        (s"https://crawl.test/m/$i", f"2024-06-${i + 1}%02dT00:00:00Z",
+          WetFixture.wrapHtml(s"Capped warc page $i."), shape)
+      }, withRequests = true)
+    val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+    withBinaryFileMaxLength(64L) {
+      seg("seg-00000.warc.gz", Seq(0, 1)) // exists BEFORE the stream starts
+      val q = Streams.perBatch(Streams.readWarcStream(spark, watched))(identity)(
+        (batch, _) => got.synchronized { got ++= batch.collect().map(_.toSeq) }).start()
+      try {
+        q.processAllAvailable()
+        seg("seg-00001.warc.gz", Seq(2, 3, 4)) // lands while the stream runs
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val batchRows = graft.ingest.WarcHttp
+      .readResponses(spark, watched, Some("*.warc.gz"))
+      .collect().map(_.toSeq)
+    assert(batchRows.length == 5) // request + warcinfo records skipped
+    assert(got.sortBy(_.toString) == batchRows.toSeq.sortBy(_.toString))
+    assert(got.map(_(6)).toSet ==
+      (0 until 5).map(i => WetFixture.wrapHtml(s"Capped warc page $i.")).toSet)
   }
 
   test("incremental VIDEO admission: frame evidence vs corpus, batch, and ledger") {
@@ -1305,6 +1381,69 @@ class StreamsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
     assert(ledger == Seq((0L, 1L, Z), (0L, 1L, W), (0L, 4L, U), (1L, 6L, V)).sorted)
   }
+
+  test("media and video admission: null media_id rows are skipped, never fail the batch") {
+    implicit val sq = spark.sqlContext
+    import graft.operators.{Multimodal, MjpegAvi}
+    import Multimodal.JdkCodec
+    type Item = (Option[Long], Array[Byte])
+    // admitted (batch, id) pairs and the ledger rows of one run of
+    // `stage` over `batches`
+    def admitRun(stage: String => Streams.Stage, batches: Seq[Seq[Item]])
+        : (Seq[(Long, Long)], Seq[String]) = {
+      val ledgerDir = java.nio.file.Files
+        .createTempDirectory("graft_nullid_ledger").toString + "/l"
+      val input = MemoryStream[(Option[Long], Array[Byte])]
+      val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val q = Streams.run(input.toDF().toDF("media_id", "content"),
+        (fresh, bid) => admitted.synchronized {
+          admitted ++= fresh.collect().map(r => (bid, r.getLong(0)))
+        })(stage(ledgerDir)).start()
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      (admitted.sorted.toSeq,
+        spark.read.parquet(ledgerDir).collect().map(_.toString).toSeq.sorted)
+    }
+    def nonNull(batches: Seq[Seq[Item]]) = batches.map(_.filter(_._1.isDefined))
+    // images: a null-id row holding a fresh code W, one copying id 1's
+    // Z; W is never ledgered, so id 3 carrying W admits in batch 1
+    val Z = -1L
+    val W = 0x00000000FFFFFFFFL
+    val V = 0xFFFF0000FFFF0000L
+    val U = 0x0000FFFF0000FFFFL
+    def png(code: Long) = JdkCodec.encodeCodedPng(code, 1, 1)
+    val imageCorpus = Streams.mediaCorpusFingerprints(
+      Seq((100L, png(0L))).toDF("media_id", "content"), "image")
+    val imageStage = (l: String) =>
+      Streams.mediaAdmission(imageCorpus, l, maxHamming = 3, mediaType = "image")
+    val images: Seq[Seq[Item]] = Seq(
+      Seq((Some(1L), png(Z)), (None, png(W)), (None, png(Z)), (Some(2L), png(V))),
+      Seq((None, png(U)), (Some(3L), png(W))))
+    val (imgAdmitted, imgLedger) = admitRun(imageStage, images)
+    assert(imgAdmitted == Seq((0L, 1L), (0L, 2L), (1L, 3L)))
+    assert((imgAdmitted, imgLedger) == admitRun(imageStage, nonNull(images)))
+    assert(imgLedger.length == 3)
+    // videos: 4-frame MJPEG-AVIs of coded PNGs (lane masks keep frames
+    // of one video >= 16 bits apart)
+    val lanes = Array(0L, 0xFFFFL, 0xFFFF0000L, 0xFFFFFFFFL)
+    def avi(base: Long): Array[Byte] = MjpegAvi.encode(
+      lanes.toSeq.map(l => JdkCodec.encodeCodedPng(base ^ l, 1, 1)), 9, 8)
+    val A = 0x0101010101010101L
+    val VZ = 0x4040404040404040L
+    val VW = 0x1111111111111111L
+    val videoCorpus = Streams.videoCorpusFingerprints(
+      Seq((100L, avi(A))).toDF("media_id", "content"), k = 4)
+    val videoStage = (l: String) =>
+      Streams.videoAdmission(videoCorpus, l, k = 4, maxHamming = 3, minMatches = 2)
+    val videos: Seq[Seq[Item]] = Seq(
+      Seq((Some(3L), avi(VZ)), (None, avi(VZ)), (None, avi(VW))),
+      Seq((None, avi(A)), (Some(9L), avi(VW))))
+    val (vidAdmitted, vidLedger) = admitRun(videoStage, videos)
+    assert(vidAdmitted == Seq((0L, 3L), (1L, 9L)))
+    assert((vidAdmitted, vidLedger) == admitRun(videoStage, nonNull(videos)))
+    assert(vidLedger.length == 8) // k frame rows per admitted video
+  }
+
   test("run chains near admission into domain quota, with per-stage counts") {
     implicit val sq = spark.sqlContext
     val zText = "completely different content about spark shuffles exchanges and the catalyst optimizer rules engine"

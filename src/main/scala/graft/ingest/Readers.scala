@@ -174,7 +174,13 @@ object Readers {
       case Sniffer.Excel => ExcelReader.read(spark, path)
       case Sniffer.Jsonl => jsonl(spark, path)
       case Sniffer.Parquet => spark.read.parquet(path)
-      case Sniffer.Wet => WetReader.read(spark, path)
+      case Sniffer.Wet =>
+        // the archive family shares one format; a raw WARC's pages are
+        // its `response` records, a WET's its `conversion` records
+        val lower = path.toLowerCase
+        if (lower.endsWith(".warc") || lower.endsWith(".warc.gz"))
+          WarcHttp.readResponses(spark, path)
+        else WetReader.read(spark, path)
       case Sniffer.Access =>
         // S3: native Jet4/ACE reader (first user table, strings-only —
         // reference semantics, index.js:66-74). Jet3/encrypted/unknown

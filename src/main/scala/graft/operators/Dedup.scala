@@ -103,7 +103,6 @@ object Dedup {
     *                shingles): buckets larger than this are dropped — at
     *                scale a hot bucket would otherwise quadratically blow
     *                up the pair volume (and the collect_list buffer).
-    *                Dropped buckets are observable via [[lshBucketStats]].
     */
   /** Pick the (bands, rowsPerBand) split of `numPerms` whose S-curve
     * best matches a target Jaccard `threshold` — the datasketch
@@ -186,21 +185,6 @@ object Dedup {
     * lowercase word tokens joined by single spaces.
     */
   private def canonical(text: Column): Column = array_join(tokens(text), " ")
-
-  /** Bucket-size distribution for LSH tuning/observability (how much was
-    * dropped by maxBucket, where the skew is).
-    */
-  def lshBucketStats(
-      df: DataFrame, textCol: String, idCol: String,
-      numPerms: Int = 64, bands: Int = 8): DataFrame =
-    df.select(
-      posexplode(HashExpressions.minhashBandHashes(
-        canonical(col(textCol)), 5, numPerms, bands)).as(Seq("band", "bh")))
-      .groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .groupBy(col("bucket_size"))
-      .agg(count(lit(1)).as("n_buckets"))
-      .orderBy(col("bucket_size"))
 
   /** Exact Jaccard between the shingle sets of candidate pairs; keeps
     * pairs with similarity ≥ threshold. The join re-attaches shingle
@@ -535,9 +519,8 @@ object Dedup {
 
   /** Per-bucket population of the pigeonhole banding over `(id, fp)` —
     * `(chunk, ch, n)`, largest first. The observability surface for
-    * [[simhashPairs]]/[[simhashCrossPairs]]' `maxBucket` valve (the
-    * [[lshBucketStats]] sibling): buckets with `n > maxBucket` are the
-    * ones the valve drops.
+    * [[simhashPairs]]/[[simhashCrossPairs]]' `maxBucket` valve: buckets
+    * with `n > maxBucket` are the ones the valve drops.
     */
   def hammingBucketStats(fp: DataFrame, maxHamming: Int = 3): DataFrame = {
     val chunks = maxHamming + 1

@@ -373,10 +373,10 @@ object Streams {
     * its input — CCNet's per-language terciles — ranks within the
     * micro-batch. Static model or benchmark frames the operator joins
     * re-plan per micro-batch like any stream-static join: persist them
-    * (or load them once from a snapshot) before long runs — StreamBench
-    * measures the gap. `op = identity` is the plain foreachBatch sink,
-    * for sinks Spark has no connector for (idempotent upserts, JDBC
-    * merges, [[graft.sink.Snapshots.publishBatch]]).
+    * (or load them once from a snapshot) before long runs. `op =
+    * identity` is the plain foreachBatch sink, for sinks Spark has no
+    * connector for (idempotent upserts, JDBC merges,
+    * [[graft.sink.Snapshots.publishBatch]]).
     */
   def perBatch(docs: DataFrame)(op: DataFrame => DataFrame)(
       onBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =

@@ -2,73 +2,42 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan/profiling utility: `runMain graft.tools.Inspect <sfDir> <what>`.
+/** Plan-audit utility: `runMain graft.tools.Inspect <sfDir> <mode>:<arg>`
+  * over the registered gate queries. Timing belongs to `graft.Bench` and
+  * `perfbench`; these modes read plans and attribute work.
   *
-  *   - `explain:<query>`: print the formatted physical plan of a
-  *     registered gate query (PushedFilters / ReadSchema / codegen spans).
-  *   - `time:<query>`: run + time it.
-  *   - `dedup-debug`: stage-by-stage row counts + timings of the
-  *     MinHash-LSH pipeline (signature, banding, buckets, candidates,
-  *     verify) — the operator most sensitive to corpus skew.
+  *   - `explain:<query>`: print the formatted physical plan
+  *     (PushedFilters / ReadSchema / codegen spans).
+  *   - `explainfiles:<outDir>+<suffix>+<q1,q2,..>`: write each query's
+  *     formatted plan to `<outDir>/<query>_<suffix>.txt`.
+  *   - `show:<query>`: print up to 100 result rows.
+  *   - `scans:<q1,q2,..>`: execute each query and audit its final
+  *     adaptive plan (parquet scans, reused exchanges, AQE coalescing).
+  *   - `jobs:<query>`: per-job wall ms, task count and description.
+  *   - `stages:<query>`: the 25 slowest stages.
   */
 object Inspect {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val what = args.lift(1).getOrElse("explain:q01_pricing_summary")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // measurement-only override: test shuffle-partition sensitivity
-    // without touching the Bench/Verify contract sessions
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // measured round 20: canChangeCachedPlanOutputPartitioning=true
       // (AQE inside cached plans) coalesces KB-scale cached frames to 1
       // partition and SERIALIZES the CPU-bound consumers (q139's pair
-      // search went 8.1 -> 16.6 s); keep the default (off), knob stays
-      // for re-measurement
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
+      // search went 8.1 -> 16.6 s)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[inspect] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-
     what.split(":", 2) match {
       case Array("explain", q) =>
         graft.SparkEntry.queries(q)(spark, sfDir).explain("formatted")
-      case Array("time", q) =>
-        val n = timed(q)(graft.SparkEntry.queries(q)(spark, sfDir).count())
-        println(s"[inspect] $q rows: $n")
-      case Array("timen", q) =>
-        // noop-write timing — the Bench action. count() lets
-        // ColumnPruning drop projection-only work and eliminate left
-        // joins against unique-keyed model tables (the q130-shaped
-        // trap); use THIS mode for anything scoring-shaped.
-        timed(q)(graft.SparkEntry.queries(q)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save())
-      case Array("timen5", q) =>
-        // 5 warm in-JVM reps (cache cleared between, the Bench
-        // discipline) + the median — the standalone twin of a driver
-        // bench number for one query.
-        val times = (1 to 5).map { i =>
-          spark.sharedState.cacheManager.clearCache()
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(q)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          val s = (System.nanoTime() - t0) / 1e9
-          println(f"[inspect] $q rep $i: $s%.2fs")
-          s
-        }
-        println(f"[inspect] $q median-of-5: ${times.sorted.apply(2)}%.2fs")
       case Array("show", q) =>
         graft.SparkEntry.queries(q)(spark, sfDir).show(100, truncate = false)
       case Array("explainfiles", spec) =>
@@ -85,26 +54,6 @@ object Inspect {
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$outDir/${q}_$suffix.txt"), plan)
           println(s"[inspect] wrote $outDir/${q}_$suffix.txt")
-        }
-      case Array("timemulti", spec) =>
-        // batch warm timing: "timemulti:<reps>+<q1,q2,..>" — per query,
-        // <reps> noop-sink reps with clearCache between (the Bench
-        // discipline), printing each rep plus min/median. One JVM for
-        // the whole target set; queries run in the given order.
-        val Array(repsS, names) = spec.split("\\+", 2)
-        val reps = repsS.toInt
-        names.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
-          val times = (1 to reps).map { i =>
-            spark.sharedState.cacheManager.clearCache()
-            val t0 = System.nanoTime()
-            graft.SparkEntry.queries(q)(spark, sfDir)
-              .write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          val s = times.sorted
-          println(f"[inspect] $q reps=" +
-            times.map(t => f"$t%.2f").mkString("[", ",", "]") +
-            f" min=${s.head}%.2f med=${s(s.size / 2)}%.2f")
         }
       case Array("jobs", q) =>
         // Per-JOB time attribution for one query (noop-sink action):
@@ -184,11 +133,11 @@ object Inspect {
             println(f"[inspect-stage] #$id%-5d ${ms}%6d ms tasks=$nt%-4d $name")
         }
         println(f"[inspect-stage] $q wall $wallS%.2f s")
-      case Array("scansmulti", names) =>
-        // batch runtime scan/reuse audit: one JVM for the whole set;
-        // per query, execute (collect) and report parquet-scan /
-        // reused-exchange counts plus every AQEShuffleRead line with
-        // the stage task-width pattern — the coalesced-hot-stage sweep.
+      case Array("scans", names) =>
+        // Runtime scan/reuse audit, one JVM for the whole set: AQE
+        // exchange reuse does NOT show in the static plan, so execute
+        // first (collect — gate outputs are small) and read the FINAL
+        // adaptive plan, splitting off the "== Initial Plan ==" section.
         names.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
           spark.sharedState.cacheManager.clearCache()
           try {
@@ -199,10 +148,11 @@ object Inspect {
             val nScan = "Scan parquet".r.findAllIn(finalPlan).length
             val nReuse = "ReusedExchange".r.findAllIn(finalPlan).length
             val nCoal = "AQEShuffleRead coalesced".r.findAllIn(finalPlan).length
-            println(s"[inspect] $q: scans=$nScan reused=$nReuse " +
-              s"aqeCoalesced=$nCoal")
+            println(s"[inspect] $q: parquet scans=$nScan, " +
+              s"reused exchanges=$nReuse, aqeCoalesced=$nCoal")
             finalPlan.linesIterator
-              .filter(_.contains("AQEShuffleRead"))
+              .filter(l => l.contains("Scan parquet") ||
+                l.contains("ReusedExchange") || l.contains("AQEShuffleRead"))
               .foreach(l => println("[inspect]   " + l.trim.take(160)))
             java.nio.file.Files.writeString(
               java.nio.file.Paths.get(s"/tmp/graft_plan_$q.txt"), finalPlan)
@@ -211,43 +161,6 @@ object Inspect {
               println(s"[inspect] $q FAILED: ${e.getMessage}")
           }
         }
-      case Array("scans", q) =>
-        // Runtime scan/reuse audit: AQE exchange reuse does NOT show in
-        // the static plan, so execute first (collect — gate outputs are
-        // small) and read the FINAL adaptive plan, splitting off the
-        // "== Initial Plan ==" section.
-        val df = graft.SparkEntry.queries(q)(spark, sfDir)
-        df.collect()
-        val finalPlan = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        val nScan = "Scan parquet".r.findAllIn(finalPlan).length
-        val nReuse = "ReusedExchange".r.findAllIn(finalPlan).length
-        println(s"[inspect] $q executed plan: parquet scans=$nScan, " +
-          s"reused exchanges=$nReuse")
-        finalPlan.linesIterator
-          .filter(l => l.contains("Scan parquet") || l.contains("ReusedExchange"))
-          .foreach(l => println("[inspect]   " + l.trim.take(160)))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"/tmp/graft_plan_$q.txt"), finalPlan)
-      case Array("dedup-debug") =>
-        import org.apache.spark.sql.functions._
-        import graft.operators.Dedup
-        val docs = graft.queries.Tables.documents(spark, sfDir)
-        val n = timed("docs count")(docs.count())
-        println(s"[inspect] docs: $n")
-        val sig = docs.select(col("doc_id"),
-          Dedup.minhashSignature(col("text")).as("sig"))
-        timed("signatures")(sig.count())
-        val stats = timed("bucket stats")(
-          Dedup.lshBucketStats(docs, "text", "doc_id").collect())
-        println("[inspect] bucket_size -> n_buckets:")
-        stats.foreach(r => println(s"  ${r.getLong(0)} -> ${r.getLong(1)}"))
-        val cand = timed("candidates")(
-          Dedup.minhashCandidates(docs, "text", "doc_id").count())
-        println(s"[inspect] candidate pairs: $cand")
-        val verified = timed("verify")(
-          Dedup.minhashNearDups(docs, "text", "doc_id", threshold = 0.7).count())
-        println(s"[inspect] verified pairs: $verified")
       case other =>
         sys.error(s"unknown inspect target: ${other.mkString(":")}")
     }

@@ -112,6 +112,21 @@ class WetSpec extends SparkSpec {
       Seq((rows3.head._1, rows3.head._3)))
   }
 
+  test("extension dispatch reads a raw .warc/.warc.gz as its HTTP responses") {
+    val dir = Files.createTempDirectory("graft_warc_dispatch").toString
+    val pages = (0 until 2).map { i =>
+      (s"https://raw.test/$i", "2024-04-01T00:00:00Z",
+        WetFixture.wrapHtml(s"Raw page $i."), WetFixture.HttpShape())
+    }
+    Seq("r.warc.gz" -> true, "r.warc" -> false).foreach { case (name, gz) =>
+      val p = s"$dir/$name"
+      WetFixture.writeWarc(p, pages, gzipPerRecord = gz, withRequests = true)
+      val expected = WarcHttp.readResponses(spark, p).orderBy("url").collect().toSeq
+      assert(expected.length == pages.length)
+      assert(Readers.read(spark, p).orderBy("url").collect().toSeq == expected, name)
+    }
+  }
+
   test("a directory of WET segments reads as one frame, one task per file") {
     val dir = Files.createTempDirectory("graft_wet_dir").toString
     (0 until 3).foreach { i =>

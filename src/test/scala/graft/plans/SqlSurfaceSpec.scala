@@ -80,6 +80,41 @@ class SqlSurfaceSpec extends SparkSpec {
     new GraftExtensions().apply(e)
   }
 
+  test("GraftExtensions-injected functions evaluate like the session's") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val e = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(e)
+    val injected = org.apache.spark.sql.ExtensionsAccess.functions(e)
+    def eval(name: String, args: Expression*): Any =
+      injected.lookupFunction(FunctionIdentifier(name), args).eval()
+    def size(v: Any): Int = v.asInstanceOf[ArrayData].numElements()
+    def arr(xs: Any*): Expression = CreateArray(xs.map(Literal(_)))
+
+    val got = Seq[Any](
+      eval("graft_simhash", arr("alpha", "beta")),
+      size(eval("graft_minhash", arr("abcde", "bcdef"))),
+      size(eval("graft_minhash_bands", Literal("the quick brown fox jumps"))),
+      size(eval("graft_shingle_hashes", Literal("abcdefgh"))),
+      size(eval("graft_ngram_hashes", arr("a", "b", "c", "d"), Literal(2))),
+      eval("graft_jaccard", arr(1L, 2L, 3L, 4L), arr(3L, 4L, 5L, 6L)))
+    assert(got(1) == 64 && got(2) == 8)
+    assert(got(5) == 2.0 / 6.0)
+
+    GraftFunctions.register(spark)
+    val viaSession = spark.sql(
+      """SELECT
+           graft_simhash(array('alpha','beta')),
+           size(graft_minhash(array('abcde','bcdef'))),
+           size(graft_minhash_bands('the quick brown fox jumps')),
+           size(graft_shingle_hashes('abcdefgh')),
+           size(graft_ngram_hashes(array('a','b','c','d'), 2)),
+           graft_jaccard(array(1L,2L,3L,4L), array(3L,4L,5L,6L))
+      """).collect()(0).toSeq
+    assert(got == viaSession)
+  }
+
   test("MinHashAgg.sigUnion: union signature = elementwise min") {
     val docs = Seq(
       (1, "the quick brown fox jumps over the lazy dog"),

@@ -281,7 +281,7 @@ class StreamsSpec extends SparkSpec {
       .createTempDirectory("graft_sess_snap").toString
     val input = MemoryStream[Event]
     // NoTimeout for the same quiescence reason as the first sessionize
-    // test; StreamBench runs the timeout-armed variant for throughput
+    // test
     val q = Streams.perBatch(
       Streams.sessionize(input.toDS(), gapMs = 60000L,
         timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout).toDF())(identity)(
